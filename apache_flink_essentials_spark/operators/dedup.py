@@ -1140,6 +1140,15 @@ def assign_components_incremental(
     contract as `connected_components`: singletons are their own
     component by definition — union them in as (id, id) if you need
     explicit rows).
+
+    Precondition: ``assignments`` is in canonical form, as
+    `connected_components` emits it — one row per id, every rep is its
+    component's minimum id and has its own self-row (rep, rep). New ids
+    are isolated by ONE anti join against the id set, which relies on
+    reps ⊆ ids. Given a rep with no self-row, the output still has one
+    row per id: a rep touched by the batch comes back as a new row
+    (rep, new_component), and an untouched one stays without a row —
+    pinned by test.
     """
     a = assignments.select(
         F.col(id_col).alias("_id"), F.col(rep_col).alias("_rep")
@@ -1184,12 +1193,9 @@ def assign_components_incremental(
         F.col(id_col),
         F.coalesce(F.col("_new_rep"), F.col(rep_col)).alias(rep_col),
     )
-    # a collapsed-graph node is a settled rep or a batch-new id, and the
-    # canonical assignment form (connected_components output: every rep
-    # has a self-row) makes reps ⊆ assignment ids — so ONE anti join
-    # against the id set isolates the new ids (r13; formerly two anti
-    # joins, the rep-set one redundant under the canonical-form contract
-    # this operator already documents)
+    # a collapsed-graph node is a settled rep or a batch-new id; under
+    # the canonical-form precondition reps ⊆ ids, so one anti join
+    # against the id set isolates the new ids
     new_nodes = (
         cc.join(
             assignments.select(F.col(id_col).alias("node")).distinct(),

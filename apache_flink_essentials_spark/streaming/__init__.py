@@ -3,7 +3,8 @@
 Module map:
   watermark.py — event-time + watermark declaration (E1-E6)
   stateful.py  — applyInPandasWithState operators: count windows (W4),
-                 count/purging triggers (TR1/TR2), connect/CoProcess (J4)
+                 count/purging triggers (TR1/TR2), connect/CoProcess (J4);
+                 event-time gap sessions on native session_window (W3)
   replay.py    — batch↔stream bridge: replay a bounded DataFrame through a
                  file stream; collect a stream to a DataFrame — the
                  streaming ≡ batch equivalence harness (SURVEY §5 test 4)

@@ -10,6 +10,10 @@ Flink analogs:
   * ``connect_ratio_stream``  ≙ connect + CoProcessFunction running ratio
                                 (MultipleStreams.scala:106-145)
 
+Not in that list: ``timeout_session_stream`` (EventTimeSessionWindows,
+WindowFunctions.scala:169-177) has a declarative equivalent, so it runs on
+Spark's native ``session_window`` state store with no Python worker.
+
 State model: exactly Flink's keyed state — Spark partitions the stream by
 the grouping key and gives each key a GroupState cell, persisted in the
 state store across micro-batches. Scale: state is per-key and distributed;
@@ -672,104 +676,42 @@ def timeout_session_stream(
     ts_col: str,
     gap_seconds: int,
     watermark_delay: str = "10 seconds",
-    output_mode: str = "append",
 ) -> DataFrame:
-    """Per-key gap sessions emitted by TIMER, not by the next event — the
-    Flink ``onTimer`` analog (ProcessFunction registers a timer at
-    last_ts + gap; when event time passes it with no new event, the
-    session closes). The NoTimeout stateful ops above only close a key's
-    session when that key's NEXT event arrives; a key that goes quiet
-    forever would hold its last session open. Here
-    ``GroupStateTimeout.EventTimeTimeout`` fires the close when the
-    WATERMARK passes last_ts + gap — quiet keys emit, state is dropped,
-    and per-key state stays one fixed-width row.
+    """Per-key gap sessions closed by event time, not by the key's next
+    event — the Flink ``EventTimeSessionWindows`` / ``onTimer`` analog
+    (WindowFunctions.scala:169-177). Runs on Spark's native
+    ``session_window`` state store: a session is emitted (append mode)
+    once the watermark passes its end, so a key that goes quiet forever
+    still closes, and no Python worker runs in any micro-batch.
 
-    Requires an event-time watermark on ``ts_col`` (applied here via
-    ``withWatermark``); timer granularity is therefore micro-batch +
-    watermark delay, exactly like Flink's event-time timers firing on
-    watermark advance.
+    Session rule: ``ts_col`` is floored to whole seconds, and a new
+    session starts when the floored gap to the key's previous event is
+    ``> gap_seconds``. A native session ends ``gap`` after its last event,
+    and Spark merges an event landing exactly on that end into it (a
+    closed bound), so ``session_window(gap_seconds)`` over the floored
+    time is exactly that rule; ``gap_seconds + 1`` would merge a floored
+    gap of ``gap + 1``. The watermark (``watermark_delay``) sits on the
+    floored time. A late event within the watermark is segmented by the
+    same rule, so one more than ``gap`` before an open session becomes
+    its own session.
 
-    Emits (key, session_start, session_end, n_events) for CLOSED sessions:
-    closed by a gap-exceeding event (same rule as the batch session
-    window) or by the event-time timer.
-
-    DOCUMENTED DIVERGENCE from batch session-window semantics for late
-    data: a late-but-within-watermark event folds into the key's OPEN
-    session via ``sess_start = min(...)`` even when it precedes the
-    current session start by more than ``gap_seconds`` — the batch window
-    would emit it as a separate earlier session. Closed-and-emitted
-    sessions are never reopened; only the open session's bounds can
-    stretch. This is the standard streaming trade (state holds one open
-    session per key, not the full history needed to re-segment); with a
-    watermark delay below ``gap_seconds`` the divergence cannot occur.
+    Emits (key, session_start, session_end, n_events) for closed
+    sessions: the key cast to string (a NULL key stays NULL) and the
+    epoch seconds of the session's first and last event.
     """
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        out = []
-        if state.hasTimedOut:
-            # timer fired: the watermark passed last_ts + gap with no new
-            # event for this key — close and drop the session
-            sess_start, last_ts, n = state.get
-            out.append((str(key[0]), sess_start, last_ts, n))
-            state.remove()
-            yield pd.DataFrame(
-                out,
-                columns=["key", "session_start", "session_end", "n_events"],
-            )
-            return
-        if state.exists:
-            sess_start, last_ts, n = state.get
-            has = True
-        else:
-            sess_start = last_ts = n = 0
-            has = False
-        all_ts: list[int] = []
-        for pdf in pdfs:
-            col = pdf[ts_col]
-            if col.dtype.kind == "M":
-                col = col.astype("int64") // 1_000_000_000
-            all_ts.extend(col.astype("int64").tolist())
-        for ts in sorted(all_ts):
-            if not has:
-                sess_start, last_ts, n = ts, ts, 0
-                has = True
-            elif ts - last_ts > gap_seconds:
-                out.append((str(key[0]), sess_start, last_ts, n))
-                sess_start, last_ts, n = ts, ts, 0
-            # a LATE event (within the watermark, earlier than state's
-            # last_ts from a prior batch) folds into the open session
-            # without corrupting its bounds: never move last_ts backwards
-            # (that would mis-register the timer and emit end < start),
-            # never leave sess_start above an accepted earlier event
-            sess_start = min(sess_start, ts)
-            last_ts = max(last_ts, ts)
-            n += 1
-        state.update((sess_start, last_ts, n))
-        # register the event-time timer: fire when the watermark passes
-        # the session's gap horizon (milliseconds, per GroupState API)
-        state.setTimeoutTimestamp((last_ts + gap_seconds) * 1000)
-        yield pd.DataFrame(
-            out, columns=["key", "session_start", "session_end", "n_events"]
-        )
-
     return (
-        df.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.col(key_col).cast("string").alias(key_col))
-        .applyInPandasWithState(
-            fn,
-            outputStructType=CAPPED_SESSION_OUTPUT,
-            stateStructType=T.StructType(
-                [
-                    T.StructField("sess_start", T.LongType(), False),
-                    T.StructField("last_ts", T.LongType(), False),
-                    T.StructField("n", T.LongType(), False),
-                ]
-            ),
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        df.withColumn("_t", F.timestamp_seconds(F.col(ts_col).cast("long")))
+        .withWatermark("_t", watermark_delay)
+        .groupBy(
+            F.col(key_col).cast("string").alias("key"),
+            F.session_window("_t", f"{gap_seconds} seconds"),
         )
+        .agg(
+            F.min("_t").cast("long").alias("session_start"),
+            F.max("_t").cast("long").alias("session_end"),
+            F.count("*").alias("n_events"),
+        )
+        .drop("session_window")
     )
 
 

@@ -279,6 +279,22 @@ def test_assign_components_incremental_equals_full_recompute(spark):
     assert rows[50] == 50 and rows[51] == 50
 
 
+def test_assign_components_incremental_non_canonical_input(spark):
+    # documented outcome for a table whose reps lack self-rows: one row
+    # per id; the touched rep 1 comes back as (1, 1), the untouched rep
+    # 20 stays without a row
+    from apache_flink_essentials_spark.operators import dedup as D
+
+    settled = spark.createDataFrame(
+        [(2, 1), (3, 1), (21, 20)], "node long, component long"
+    )
+    new_edges = spark.createDataFrame([(3, 10)], "id_a long, id_b long")
+    got = sorted(
+        map(tuple, D.assign_components_incremental(new_edges, settled).collect())
+    )
+    assert got == [(1, 1), (2, 1), (3, 1), (10, 1), (21, 20)]
+
+
 def test_theilsen_two_bins_single_pair(spark):
     from apache_flink_essentials_spark.operators import timeseries as TS
 

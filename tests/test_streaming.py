@@ -588,6 +588,83 @@ def test_timeout_session_stream_closes_quiet_keys_by_timer(spark):
     assert not any(k == "2" and s == 9000 for k, s, _, _ in got)
 
 
+def _floor_gap_sessions(rows, gap):
+    """Reference session rule: floor ts to whole seconds per key, start a
+    new session when the floored gap to the previous event is > gap."""
+    import math
+
+    by_key = {}
+    for key, ts in rows:
+        by_key.setdefault(key, []).append(math.floor(ts))
+    out = set()
+    for key, ts in by_key.items():
+        ts.sort()
+        start = prev = ts[0]
+        n = 0
+        for t in ts:
+            if t - prev > gap:
+                out.add((key, start, prev, n))
+                start, n = t, 0
+            prev, n = t, n + 1
+        out.add((key, start, prev, n))
+    return out
+
+
+def _session_replay(spark, rows):
+    """(key, ts seconds) rows replayed one file per row, in list order."""
+    df = spark.createDataFrame(
+        [(k, float(t), i) for i, (k, t) in enumerate(rows)],
+        "user_id string, ts double, arrival long",
+    ).withColumn("ts", F.timestamp_micros((F.col("ts") * 1e6).cast("long")))
+    return replay_as_stream(df, num_files=len(rows), order_by="arrival")
+
+
+def test_timeout_session_stream_matches_floor_seconds_gap_rule(spark):
+    rows = [
+        ("a", 0.1), ("a", 60.9),                 # floored gap 60: one session
+        ("b", 0.9), ("b", 61.2),                 # floored gap 61: two sessions
+        ("c", 0.5), ("c", 30.0),
+        ("c", 1000.0), ("c", 1010.0), ("c", 1030.0),
+        ("c", 900.7),                            # late, within the watermark
+        (None, 10.0), (None, 20.0),              # NULL key
+        ("-1", 100_000.0),                       # sentinel: closes every session
+    ]
+    out = run_stream_to_df(
+        stateful.timeout_session_stream(
+            _session_replay(spark, rows), "user_id", "ts",
+            gap_seconds=60, watermark_delay="1 hour",
+        ),
+        output_mode="append",
+    )
+    got = {tuple(r) for r in out.collect() if r.key != "-1"}
+    want = _floor_gap_sessions([r for r in rows if r[0] != "-1"], 60)
+    assert got == want
+    assert ("a", 0, 60, 2) in got
+    assert ("b", 0, 0, 1) in got and ("b", 61, 61, 1) in got
+    # the late event is segmented like batch, not folded into 1000-1030
+    assert ("c", 900, 900, 1) in got and ("c", 1000, 1030, 3) in got
+    # a NULL key stays SQL NULL, as the oracle's user_id::VARCHAR gives
+    assert (None, 10, 20, 2) in got
+
+
+def test_timeout_session_stream_plan_has_no_python_state(spark):
+    # guard: the session stream runs on the native session-window state
+    # store, never on a Python GroupState operator
+    q = (
+        stateful.timeout_session_stream(
+            _session_replay(spark, [("a", 1.0), ("a", 2.0)]),
+            "user_id", "ts", gap_seconds=60,
+        )
+        .writeStream.format("memory").queryName("session_plan_guard")
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    spark.catalog.dropTempView("session_plan_guard")
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "SessionWindowStateStoreSave" in plan
+
+
 def test_stateful_ewma_recovers_groupstate_across_restart(spark, events):
     # GroupState recovery: run the EWMA stream over the first time-half,
     # stop, append the second half, restart from the SAME checkpoint — the
