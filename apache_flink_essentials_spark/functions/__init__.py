@@ -3,8 +3,7 @@
 The reference's scalar surface is inline Scala lambdas; the engine exposes
 the same computations as named, Catalyst-optimizable Column builders. All
 are thin wrappers over built-in ``pyspark.sql.functions`` — zero Python UDFs
-(design rule, SURVEY §4): modulo/divisibility, arithmetic, range generation,
-string format, type-discriminator tests, time arithmetic, json access.
+(design rule, SURVEY §4): json access and the TPC-H revenue term.
 """
 
 from __future__ import annotations
@@ -13,44 +12,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def divisible_by(col: Column | str, n: int) -> Column:
-    """`_ % n == 0` (DataStreams.scala:45-47, Transformations.scala:48)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (c % n) == 0
-
-
-def epoch_seconds(ts: Column | str) -> Column:
-    """Truncating epoch seconds — the engine-portable time representation
-    (matches DuckDB floor(epoch(ts))::BIGINT)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return c.cast("long")
-
-
-def time_bucket(ts: Column | str, seconds: int) -> Column:
-    """Tumbling-window start as epoch seconds (manual form of window())."""
-    return F.floor(epoch_seconds(ts) / seconds) * seconds
-
-
-def format_window(start: Column, end: Column, count: Column) -> Column:
-    """`"Window [$start - $end] $count"` (WindowFunctions.scala:61)."""
-    return F.format_string("Window [%s - %s] %s", start, end, count)
-
-
-def is_event_type(event_type: str, col: str = "event_type") -> Column:
-    """`isInstanceOf[X]` over the flattened ADT (WindowFunctions.scala:60)."""
-    return F.col(col) == event_type
-
-
 def json_int(col: Column | str, path: str) -> Column:
     """props JSON access, e.g. json_int("props", "$.k")."""
     c = F.col(col) if isinstance(col, str) else col
     return F.get_json_object(c, path).cast("int")
-
-
-def ts_plus_seconds(ts: Column | str, seconds: int) -> Column:
-    """Instant.plusSeconds analog (Gaming.scala:73, Shopping.scala:61)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return c + F.expr(f"interval {seconds} seconds")
 
 
 def revenue() -> Column:

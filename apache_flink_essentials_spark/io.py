@@ -139,12 +139,6 @@ def load_tables(spark: SparkSession, names: Iterable[str], sf_dir: str | None = 
     return {n: load_table(spark, n, sf_dir) for n in names}
 
 
-def register_temp_views(spark: SparkSession, names: Iterable[str], sf_dir: str | None = None) -> None:
-    """Expose fixture tables to ``spark.sql`` under their bare names."""
-    for n in names:
-        load_table(spark, n, sf_dir).createOrReplaceTempView(n)
-
-
 # --- sinks -----------------------------------------------------------------
 
 def write_files(

@@ -1168,6 +1168,20 @@ def dataset_card(
     hundred rows, not of data; the unpartitioned window is safe
     precisely because it runs post-aggregation).
     """
+    return dataset_card_from_counts(
+        dataset_card_counts(df, group_cols, text_col), group_cols
+    )
+
+
+def dataset_card_counts(
+    df: DataFrame,
+    group_cols: Sequence[str] = ("lang", "source"),
+    text_col: str = "text",
+) -> DataFrame:
+    """The dataset card's state half: per stratum the exact document,
+    token and Gopher-pass counts. All three are associative integer
+    sums, so it runs unchanged as complete-mode stream state of
+    |strata| rows, whatever the stream length."""
     from apache_flink_essentials_spark.operators.text import (
         gopher_pass_expr,
         tokens_expr,
@@ -1178,11 +1192,20 @@ def dataset_card(
         F.size(tokens_expr(text_col)).alias("_nt"),
         gopher_pass_expr(text_col).cast("long").alias("_pass"),
     )
-    agg = base.groupBy(*group_cols).agg(
+    return base.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_nt").alias("n_tokens"),
         F.sum("_pass").alias("n_gopher_pass"),
     )
+
+
+def dataset_card_from_counts(
+    agg: DataFrame, group_cols: Sequence[str] = ("lang", "source")
+) -> DataFrame:
+    """Share and rate columns over a :func:`dataset_card_counts` relation
+    (batch or drained stream state). A share of a still-growing total is
+    only final when the input is, so it derives on read; the corpus-total
+    window runs over the |strata|-row aggregate, never the data."""
     total = F.sum("n_tokens").over(Window.partitionBy())
     return agg.select(
         *group_cols,

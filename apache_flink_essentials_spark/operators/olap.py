@@ -30,12 +30,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _with_grouping_flags(
-    grouped_agg: DataFrame, dims: Sequence[str]
-) -> DataFrame:
-    return grouped_agg
-
-
 def rollup_agg(
     df: DataFrame,
     dims: Sequence[str],

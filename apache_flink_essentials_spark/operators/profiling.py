@@ -550,6 +550,12 @@ def referential_audit(
     unfused form scanned each fact 2× per FK (lineitem: 6 scans for 3
     checks; measured ~3× slower at bench shape). Each relation's result
     is ONE row; the union of one-row aggregates is driver-free.
+
+    Runs unchanged on a streaming fact (complete mode): every
+    micro-batch stream-static joins the dimension key set, re-planned
+    per batch so dimension updates are picked up, and the counts are
+    associative BIGINT sums in one row of state — the orphan alert is
+    maintained at ingest, with no periodic full-fact rescan.
     """
     by_fact: dict[int, list] = {}
     fact_of: dict[int, DataFrame] = {}
@@ -629,6 +635,10 @@ def freshness_audit(
     aggregates (the per-group trailing count rides the same pass as a
     conditional sum against the broadcast global watermark); the 1-row
     global bounds broadcast. |groups| output rows.
+
+    On a stream, :func:`freshness_ts_counts` is the complete-mode state
+    and :func:`freshness_from_ts_counts` the report on read; both end in
+    the same projection as this one-pass batch plan.
     """
     epoch = F.col(ts_col).cast("long")
     bounds = df.agg(
@@ -649,6 +659,53 @@ def freshness_audit(
         F.max("_gmax").alias("_gmax"),
         F.max("_gmin").alias("_gmin"),
     )
+    return _freshness_report(per, group_col, window_s)
+
+
+def freshness_ts_counts(
+    df: DataFrame, ts_col: str, group_col: str
+) -> DataFrame:
+    """Freshness state: exact event counts per (group, epoch-second) —
+    associative sums, so it runs unchanged as complete-mode stream state,
+    bounded by the retention window's distinct seconds per group, never
+    by row volume. The audit's lag and ratio depend on the GLOBAL
+    watermark, which every arrival can move, so they derive on read
+    with :func:`freshness_from_ts_counts`."""
+    return df.groupBy(
+        F.col(group_col).alias("grp"),
+        F.col(ts_col).cast("long").alias("ts_s"),
+    ).agg(F.count(F.lit(1)).alias("_n"))
+
+
+def freshness_from_ts_counts(
+    counts: DataFrame, group_col: str = "grp", window_s: int = 86400
+) -> DataFrame:
+    """:func:`freshness_audit`'s output over a :func:`freshness_ts_counts`
+    relation (batch or drained stream state): the same aggregates,
+    weighted by the state's ``_n`` instead of scanning raw rows."""
+    bounds = counts.agg(
+        F.max("ts_s").alias("_gmax"), F.min("ts_s").alias("_gmin")
+    )
+    sided = counts.crossJoin(F.broadcast(bounds))
+    per = sided.groupBy("grp").agg(
+        F.max("ts_s").alias("last_ts_s"),
+        F.sum("_n").cast("long").alias("n_total"),
+        F.sum(
+            F.when(F.col("ts_s") > F.col("_gmax") - window_s, F.col("_n"))
+            .otherwise(0)
+        ).cast("long").alias("n_last_window"),
+        F.max("_gmax").alias("_gmax"),
+        F.max("_gmin").alias("_gmin"),
+    )
+    return _freshness_report(per, group_col, window_s)
+
+
+def _freshness_report(
+    per: DataFrame, group_col: str, window_s: int
+) -> DataFrame:
+    """Lag / window-count / ratio projection over the per-group
+    ``(grp, last_ts_s, n_total, n_last_window, _gmax, _gmin)`` relation
+    shared by both freshness paths."""
     n_windows = (
         F.expr(f"(_gmax - _gmin) div {window_s}") + F.lit(1)
     ).cast("long")
@@ -795,10 +852,10 @@ def defect_bins(
     step_s: int = 86400,
 ) -> DataFrame:
     """The p-chart's binned relation: exact per-bin ``(bin, n,
-    n_defect)`` counts. Batch half of the pair — ``streaming.rollup.
-    defect_bins_stream`` maintains the same relation as complete-mode
-    stream state (both aggregates are associative BIGINT sums, so the
-    drained state is bit-identical to this in any arrival order)."""
+    n_defect)`` counts. Runs unchanged on a streaming DataFrame as
+    complete-mode state: both aggregates are associative BIGINT sums, so
+    the drained state is bit-identical to the batch relation in any
+    arrival order, and it is |bins| rows (time-span-bounded)."""
     bin_col = (F.col(ts_col).cast("long") / F.lit(step_s)).cast("long")
     return df.groupBy(bin_col.alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -1045,11 +1102,11 @@ def fd_violations(
     single job (COVERAGE.md round-10 note). NULL Y counts as a value
     (a group mixing NULL and non-NULL Y violates the FD).
 
-    Streaming twin: ``streaming.rollup.fd_xy_counts_stream`` maintains
-    the same ``fd_xy_counts`` state relation (associative BIGINT
-    counts → stream ≡ batch bit-for-bit); :func:`fd_from_xy_counts` is
-    the derive-on-read tail (the g3 rollup depends on per-group
-    maxima, so it re-runs on read over the |distinct X,Y|-row state).
+    On a stream, :func:`fd_xy_counts` runs unchanged as complete-mode
+    state (associative BIGINT counts → stream ≡ batch bit-for-bit);
+    :func:`fd_from_xy_counts` is the derive-on-read tail (the g3 rollup
+    depends on per-group maxima, so it re-runs on read over the
+    |distinct X,Y|-row state).
     """
     if not fds:
         raise ValueError("fd_violations requires at least one FD spec")
@@ -1068,8 +1125,8 @@ def fd_xy_counts(
 ) -> DataFrame:
     """The FD audit's state relation: exact BIGINT count per distinct
     ``(X..., Y)`` — one map-side-combined hash agg over a column-pruned
-    scan. Associative, so the streaming twin maintains the SAME
-    relation as complete-mode state."""
+    scan. Associative, so it runs unchanged as complete-mode stream
+    state."""
     return df.groupBy(*[F.col(c) for c in x_cols], F.col(y_col)).agg(
         F.count(F.lit(1)).alias("_n")
     )

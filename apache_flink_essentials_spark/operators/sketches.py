@@ -112,7 +112,8 @@ def portable_hll_partials(
     idempotent), which is the whole sketch-interchange point: write
     per-day partials at ingest, merge any date range later without
     rescanning. Integer-exact → any SQL engine reproduces them
-    bit-for-bit."""
+    bit-for-bit. Runs unchanged as complete-mode stream state; a
+    duplicated delivery cannot change a register."""
     m = 1 << p
     rem_bits = 48 - p
     max_rho = rem_bits + 1
@@ -226,25 +227,14 @@ def countmin_topk(
     Output: top-``k`` values by (est_count desc, value asc) with both
     ``est_count`` and ``true_count``.
     """
-    seeds = ", ".join(str(s) for s in range(depth))
-    buckets = df.selectExpr(
-        f"`{col}` AS item",
-        f"explode(array({seeds})) AS _seed",
-    ).selectExpr(
-        "item",
-        "_seed",
-        "cast(conv(substring(md5(concat(cast(_seed as string), ':',"
-        f" cast(item as string))), 1, 8), 16, 10) as bigint) % {width}"
-        " AS _bucket",
-    )
-    grid = buckets.groupBy("_seed", "_bucket").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    item_buckets = buckets.groupBy("item", "_seed", "_bucket").agg(
-        F.count(F.lit(1)).alias("_true_part")
-    )
+    item_buckets = _countmin_buckets(df, col, depth, width).groupBy(
+        "item", "_seed", "_bucket"
+    ).agg(F.count(F.lit(1)).alias("_true_part"))
     est = (
-        item_buckets.join(F.broadcast(grid), ["_seed", "_bucket"])
+        item_buckets.join(
+            F.broadcast(countmin_grid(df, col, depth, width)),
+            ["_seed", "_bucket"],
+        )
         .groupBy("item")
         .agg(
             F.min("_cnt").alias("est_count"),
@@ -254,6 +244,61 @@ def countmin_topk(
         )
     )
     return est.orderBy(F.desc("est_count"), F.asc("item")).limit(k)
+
+
+def _countmin_buckets(
+    df: DataFrame, col: str, depth: int, width: int
+) -> DataFrame:
+    """``(item, _seed, _bucket)`` — one row per input row and hash row:
+    the md5-seeded bucket of each value under each of ``depth`` seeds."""
+    seeds = ", ".join(str(s) for s in range(depth))
+    return df.selectExpr(
+        f"`{col}` AS item",
+        f"explode(array({seeds})) AS _seed",
+    ).selectExpr(
+        "item",
+        "_seed",
+        "cast(conv(substring(md5(concat(cast(_seed as string), ':',"
+        f" cast(item as string))), 1, 8), 16, 10) as bigint) % {width}"
+        " AS _bucket",
+    )
+
+
+def countmin_grid(
+    df: DataFrame, col: str, depth: int = 3, width: int = 512
+) -> DataFrame:
+    """The count-min counter grid ``(_seed, _bucket, _cnt)`` — the
+    sketch's whole state: depth×width rows (a parameter, not a function
+    of the data) of associative integer counts, so it runs unchanged as
+    complete-mode stream state and the drained grid equals the batch
+    grid in any arrival order. Query it with
+    :func:`countmin_estimate_from_grid`."""
+    return _countmin_buckets(df, col, depth, width).groupBy(
+        "_seed", "_bucket"
+    ).agg(F.count(F.lit(1)).alias("_cnt"))
+
+
+def countmin_estimate_from_grid(
+    grid: DataFrame,
+    items: DataFrame,
+    col: str,
+    depth: int = 3,
+    width: int = 512,
+) -> DataFrame:
+    """Estimate counts for a candidate item relation from a finished
+    :func:`countmin_grid` (batch or drained stream state): bucket each
+    distinct item, broadcast-join the KB-sized grid, and take the
+    min-over-seeds — ``(item, est_count)``, the one-sided overestimate
+    contract (est ≥ true, pinned in tests)."""
+    item_buckets = _countmin_buckets(
+        items.select(col).distinct(), col, depth, width
+    )
+    return (
+        item_buckets.join(F.broadcast(grid), ["_seed", "_bucket"], "left")
+        .groupBy("item")
+        .agg(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("est_count"))
+        .orderBy("item")
+    )
 
 
 def top_k_by_count(df: DataFrame, col: str | Column, k: int = 10) -> DataFrame:

@@ -1621,23 +1621,29 @@ def vocab_coverage(
     the rank sort is negligible; the coverage rows are a broadcast-sized
     cross of |vocab_sizes| literals against the ranked types.
     """
-    counts = (
+    return coverage_from_counts(token_counts(df, text_col), vocab_sizes)
+
+
+def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """The token-type table ``(tok, n)`` — the state half of
+    :func:`vocab_coverage`. Counts are associative integers, so it runs
+    unchanged as complete-mode stream state whose size is the
+    vocabulary, never the corpus."""
+    return (
         df.select(F.explode(tokens_expr(text_col)).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return coverage_from_counts(counts, vocab_sizes)
 
 
 def coverage_from_counts(
     counts: DataFrame,
     vocab_sizes: tuple[int, ...] = (100, 500, 1000, 5000),
 ) -> DataFrame:
-    """Coverage-curve tail over a materialized (tok, n) type table — the
-    shared report half of batch ``vocab_coverage`` and the streaming
-    ``token_counts_stream`` ingest (complete-mode counts are the same
-    relation, so stream+report ≡ one-shot batch, pinned in tests).
-    Everything here runs over vocabulary-sized input."""
+    """Coverage-curve report over a :func:`token_counts` type table
+    (batch or drained stream state). Ranking is a global sort —
+    non-incremental by semantics — so it re-runs on read, over
+    vocabulary-sized input."""
     w_rank = Window.orderBy(F.desc("n"), F.asc("tok"))
     ranked = counts.select(
         F.col("n"),
@@ -2078,7 +2084,18 @@ def hapax_ratio(
     aggregates, never raw occurrences twice. ``hapax_ratio`` is a
     BIGINT/BIGINT rational — engine-portable unrounded.
     """
-    tt = (
+    return hapax_from_term_counts(
+        grouped_term_counts(df, group_col, text_col), group_col
+    )
+
+
+def grouped_term_counts(
+    df: DataFrame, group_col: str = "source", text_col: str = "text"
+) -> DataFrame:
+    """Per-group type table ``(grp, term, c)`` — the state half of
+    :func:`hapax_ratio`; associative counts, so it runs unchanged as
+    complete-mode stream state (vocabulary-sized per group)."""
+    return (
         df.select(
             F.col(group_col).alias("grp"),
             F.explode(tokens_expr(text_col)).alias("term"),
@@ -2087,6 +2104,12 @@ def hapax_ratio(
         .groupBy("grp", "term")
         .agg(F.count(F.lit(1)).alias("c"))
     )
+
+
+def hapax_from_term_counts(tt: DataFrame, group_col: str = "source") -> DataFrame:
+    """Hapax report over a :func:`grouped_term_counts` relation (batch or
+    drained stream state). Hapax-ness is only final when the input is —
+    one more occurrence demotes a term — so it derives on read."""
     return (
         tt.groupBy("grp")
         .agg(

@@ -599,11 +599,12 @@ def binned_sums(
     """The drift workbench's shared relation: exact per-bin
     ``(bin, _n, _s)`` — BIGINT row count and DECIMAL(18,2) value sum per
     time bin. Both :func:`cusum_changepoints` and :func:`acf` (and any
-    future binned-series statistic) derive from this one aggregate, and
-    ``streaming.rollup.binned_sums_stream`` maintains the SAME relation
-    as complete-mode stream state: count and decimal sum are
-    associative and exact, so the streamed aggregate is bit-identical
-    to this batch one over the same rows in any arrival order.
+    future binned-series statistic) derive from this one aggregate. It
+    runs unchanged on a streaming DataFrame as complete-mode state:
+    count and decimal sum are associative and exact, so the drained
+    state is bit-identical to the batch relation over the same rows in
+    any arrival order, and it is |bins| rows — bounded by the stream's
+    time span, not its volume.
 
     Scale: one map-side-combined hash agg over the scan; the output is
     |bins| rows (hours/days-sized at 100 TB).
@@ -1159,57 +1160,85 @@ def trend_ols(
 
     Engine-portable by construction: x = epoch second MINUS the group's
     own min epoch (small integers), y = the 2-decimal value; every
-    power sum (Sx, Sy, Sxx, Sxy, Syy) accumulates EXACT integers /
-    DECIMALs (order-independent addition), is cast to double once, and
-    the slope/intercept/r² arithmetic is a fixed-order IEEE expression
-    of those exact operands — bit-identical across engines, registered
+    power sum (Sx, Sy, Sxx, Sxy, Syy) is an EXACT integer / DECIMAL
+    (order-independent addition), is cast to double once, and the
+    slope/intercept/r² arithmetic is a fixed-order IEEE expression of
+    those exact operands — bit-identical across engines, registered
     UNROUNDED (the repo's per-row-rational rule). slope is scaled to
     per-hour units (×3600) to keep magnitudes readable.
 
-    Scale: one min-epoch hash agg joined back (broadcast at group-key
-    cardinality), one power-sum hash agg over the scan — both map-side
-    combined; the closed form runs on the |groups|-row aggregate.
-    Overflow headroom: x ≤ span seconds (2.6e6 for a month); x² sums
-    go through DECIMAL(38,0), never a raw BIGINT sum.
+    Scale: one power-sum hash agg over the scan (map-side combined);
+    the origin shift and closed form run on the |groups|-row aggregate.
+    On a stream, :func:`trend_power_sums` is the complete-mode state and
+    :func:`ols_from_power_sums` the report on read.
     """
-    g = F.col(group_col)
-    mins = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(g.alias("_g"))
-        .agg(F.min(F.col(ts_col).cast("long")).alias("_t0"))
+    return ols_from_power_sums(
+        trend_power_sums(df, group_col, ts_col, value_col), group_col
     )
-    base = (
+
+
+def trend_power_sums(
+    df: DataFrame,
+    group_col: str,
+    ts_col: str,
+    value_col: str,
+) -> DataFrame:
+    """The trend fit's mergeable state: per group the count, min epoch
+    and the five Σx/Σy/Σx²/Σxy/Σy² moments in exact DECIMAL over
+    ABSOLUTE epoch seconds. Every quantity is an associative min/sum of
+    exact values, so the relation is the same in any arrival order and
+    runs unchanged as complete-mode stream state (|groups| rows).
+
+    x cannot be shifted to the group min before summing — on a stream
+    the min keeps moving — so :func:`ols_from_power_sums` applies the
+    shift afterwards with exact integer identities.
+    """
+    x = F.col(ts_col).cast("long").cast("decimal(38,0)")
+    y = F.col(value_col).cast("decimal(18,2)")
+    return (
         df.where(F.col(value_col).isNotNull())
-        .join(F.broadcast(mins), g == F.col("_g"))
-        .select(
-            g.alias("grp"),
-            (F.col(ts_col).cast("long") - F.col("_t0")).alias("x"),
-            F.col(value_col).cast("decimal(18,2)").alias("y"),
+        .groupBy(F.col(group_col).alias("grp"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.col(ts_col).cast("long")).alias("_t0"),
+            F.sum(x).alias("_rsx"),
+            F.sum(y).alias("_sy"),
+            # the per-row x² is already DECIMAL: a raw long*long overflows
+            # for epochs past ~3.04e9 s (~2066)
+            F.sum(x * x).alias("_rsxx"),
+            F.sum((y * x).cast("decimal(38,2)")).alias("_rsxy"),
+            F.sum((y * y).cast("decimal(38,4)")).alias("_syy"),
         )
     )
-    sums = base.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("_sx"),
-        F.sum("y").alias("_sy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)")).alias("_sxx"),
-        F.sum((F.col("y") * F.col("x")).cast("decimal(38,2)")).alias("_sxy"),
-        F.sum((F.col("y") * F.col("y")).cast("decimal(38,4)")).alias("_syy"),
-    )
-    return ols_from_power_sums(sums, group_col)
 
 
 def ols_from_power_sums(sums: DataFrame, group_col: str) -> DataFrame:
-    """Closed-form OLS finish over a power-sum relation
-    ``(grp, n, _sx, _sy, _sxx, _sxy, _syy)`` with x relative to the
-    group min — shared by the batch `trend_ols` and the streaming twin
-    (`streaming.rollup.finish_trend_ols`): given identical exact sums,
-    the fixed-order double arithmetic here is bit-identical, which is
-    what makes stream ≡ batch testable at equality, not tolerance."""
+    """Closed-form OLS report over a :func:`trend_power_sums` relation.
+    The absolute-x sums shift to the group-min origin via exact DECIMAL
+    identities —
+
+      ``Sx' = Sx − n·t0;  Sxx' = Sxx − 2·t0·Sx + n·t0²;
+        Sxy' = Sxy − t0·Sy``
+
+    — integer algebra, no rounding, so the shifted sums are the ones a
+    min-relative x would have summed, digit for digit, and the
+    fixed-order double arithmetic below is bit-identical for a batch
+    aggregate and a drained stream alike. Overflow headroom: with epoch
+    ≈ 1.7e9 s, Σx² per group stays inside DECIMAL(38,0) up to ~3·10¹⁸
+    rows."""
+    t0 = F.col("_t0").cast("decimal(38,0)")
+    n_dec = F.col("n").cast("decimal(38,0)")
     n = F.col("n").cast("double")
-    sx = F.col("_sx").cast("double")
+    sx = (F.col("_rsx") - n_dec * t0).cast("decimal(38,0)").cast("double")
     sy = F.col("_sy").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    sxy = F.col("_sxy").cast("double")
+    sxx = (
+        (F.col("_rsxx") - F.lit(2) * t0 * F.col("_rsx") + n_dec * t0 * t0)
+        .cast("decimal(38,0)").cast("double")
+    )
+    sxy = (
+        (F.col("_rsxy") - t0 * F.col("_sy"))
+        .cast("decimal(38,2)").cast("double")
+    )
     syy = F.col("_syy").cast("double")
     # degenerate denominators (a one-point group / all-equal x => no fit;
     # zero y-variance => r² undefined) surface as NULL instead of an

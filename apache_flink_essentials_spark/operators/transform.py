@@ -156,11 +156,6 @@ def map_columns(df: DataFrame, **exprs: Column) -> DataFrame:
     return df.select(*[e.alias(name) for name, e in exprs.items()])
 
 
-def with_columns(df: DataFrame, **exprs: Column) -> DataFrame:
-    """map that keeps existing columns (the common enrich form)."""
-    return df.withColumns(dict(exprs))
-
-
 def fizzbuzz(df: DataFrame, n_col: str = "n") -> DataFrame:
     """The reference's worked map example (DataStreams.scala:24-33,43-49).
 
@@ -206,25 +201,7 @@ def flat_map_range(df: DataFrame, n_col: str = "n", out_col: str = "m") -> DataF
     return df.select(n.alias(n_col), F.explode(seq).alias(out_col))
 
 
-def flat_map_array(df: DataFrame, array_expr: Column, out_col: str, keep: Sequence[str] = ()) -> DataFrame:
-    """General flatMap: any array-producing Column expression, exploded.
-
-    Covers the explicit-FlatMapFunction form (Transformations.scala:30-37):
-    imperative emit-loops become array constructors. For logic no Column
-    expression can build, callers fall back to a pandas-UDF returning an
-    array, then this same explode — the Arrow-batched escape hatch.
-    """
-    return df.select(*[F.col(c) for c in keep], F.explode(array_expr).alias(out_col))
-
-
 # --- filter (T5: DataStreams.scala:50, WindowFunctions.scala:218) ----------
-
-def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """Predicate filter. Column-expression predicates reach the parquet scan
-    as PushedFilters (verified in tests); `isInstanceOf[PlayerRegistered]`
-    style type tests become discriminator-column equality (SURVEY §1.4)."""
-    return df.filter(predicate)
-
 
 def filter_event_type(df: DataFrame, event_type: str, col: str = "event_type") -> DataFrame:
     """``filter(_.isInstanceOf[X])`` analog over the flattened ADT."""

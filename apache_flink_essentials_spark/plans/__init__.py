@@ -17,10 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().simpleString()
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle Exchange operators in the physical plan (AQE final
     plans may re-use; this counts planned exchanges — the upper bound).

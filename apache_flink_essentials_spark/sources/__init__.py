@@ -2,13 +2,14 @@
 ``SourceFunction``s (SURVEY §2.1 S4-S7, generators/Shopping.scala &
 generators/Gaming.scala).
 
-Two forms per domain:
+Two forms:
   * ``*_batch``: deterministic bounded replay (seeded ``rand``, time =
     base + id seconds — mirroring Shopping.scala:61 ``baseInstant.plusSeconds
     (id)``) — used for golden tests and oracle-checkable pipelines.
   * ``*_stream``: Structured Streaming ``rate`` / ``rate-micro-batch``
     source with the same column derivations — the unbounded form
-    (rows-per-second ≙ 1000/sleepMillisPerEvent, Shopping.scala:128-137).
+    (rows-per-second ≙ 1000/sleepMillisPerEvent, Shopping.scala:128-137);
+    only the shopping-cart domain has one.
 
 Determinism rule: all "randomness" is hash-derived from the row id
 (xxhash64-mod), never RNG state — replays are identical across runs,
@@ -118,26 +119,6 @@ def shopping_cart_events_stream(
             .load()
         )
     return rate.select(*_cart_columns(F.col("value"), base_instant, source_id, with_removed))
-
-
-def catalog_events_stream(
-    spark: SparkSession,
-    events_per_second: int = 2,
-    base_instant: str = DEFAULT_BASE_INSTANT,
-) -> DataFrame:
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(events_per_second))
-        .load()
-    )
-    return rate.select(
-        _pick(F.col("value"), CART_USERS, "user").alias("user_id"),
-        F.concat(
-            F.lit("product-"),
-            F.pmod(F.xxhash64(F.col("value"), F.lit("prod")), F.lit(50)).cast("string"),
-        ).alias("product_id"),
-        (F.lit(base_instant).cast("timestamp") + F.make_interval(secs=F.col("value").cast("double"))).alias("time"),
-    )
 
 
 # --- Gaming domain: the scripted 12-event timeline --------------------------

@@ -8,6 +8,15 @@ Module map:
   replay.py    — batch↔stream bridge: replay a bounded DataFrame through a
                  file stream; collect a stream to a DataFrame — the
                  streaming ≡ batch equivalence harness (SURVEY §5 test 4)
+  rollup.py    — continuous rollup (append-mode windowed materialization +
+                 materialized∪tail serving view), the stateless tokenize
+                 ingest and the canonical edge-set state
+
+Every other incremental aggregate is the batch operator itself, run on a
+streaming DataFrame in complete mode (``timeseries.binned_sums``,
+``profiling.fd_xy_counts``, ``sketches.countmin_grid``, ...); an operator
+whose report is non-incremental is ``report(state(df))``, and a stream
+drains ``state`` and runs ``report`` on read.
 
 Streaming semantics notes (deviations documented per SURVEY §7 hard parts):
   * Watermark cadence: Flink emits watermarks on a timer

@@ -1,5 +1,6 @@
 """Continuous rollup — a hypertable-style continuous aggregate on
-Structured Streaming.
+Structured Streaming — plus the two stream helpers that have no batch
+operator of their own (``tokenize_ingest_stream``, ``edge_set_stream``).
 
 The pattern (TimescaleDB continuous aggregates, Druid rollup ingestion): a
 streaming windowed aggregation MATERIALIZES finalized windows into a
@@ -16,6 +17,17 @@ Spark-first construction: the materialization IS a watermarked
 finalized windows — no custom trigger logic needed); the serving view is a
 ``unionByName`` of two DataFrames, so Catalyst prunes/pushes into both
 sides. No custom state management anywhere.
+
+Every other incremental aggregate is defined ONCE, in the operator module
+that owns it, and runs unchanged on a streaming DataFrame (complete mode):
+``timeseries.binned_sums`` / ``trend_power_sums``, ``profiling.
+defect_bins`` / ``fd_xy_counts`` / ``freshness_ts_counts`` /
+``referential_audit``, ``sketches.portable_hll_partials`` /
+``countmin_grid``, ``text.token_counts`` / ``grouped_term_counts``,
+``curation.dataset_card_counts``. Where the report is non-incremental by
+semantics (a share of a growing total, a global rank), the operator is
+``report(state(df))`` and a stream drains ``state`` then runs ``report``
+on read over the drained relation.
 
 Reference anchor: extends the windowed-aggregation surface
 (``WindowFunctions.scala:54-66``) + file sink (``DataStreams.scala:57-62``)
@@ -34,25 +46,20 @@ def _windowed_agg(
     df: DataFrame, ts_col: str, grain: str, aggs: list[Column]
 ) -> DataFrame:
     """Shared shape for both the streaming materialization and the batch
-    tail: flat (window_start, window_end, day, *aggs) rows."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), grain).alias("window"))
-        .agg(*aggs)
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            F.to_date(F.col("window.start")).alias("day"),
-            *[F.col(c) for c in _agg_names(aggs)],
-        )
+    tail: flat (window_start, window_end, day, *aggs) rows. The aggregate
+    names come from the aggregated frame's own schema and are selected
+    backtick-quoted, so any alias (dots, spaces, ``AS``) round-trips."""
+    agg = df.groupBy(F.window(F.col(ts_col), grain).alias("window")).agg(*aggs)
+    return agg.select(
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        F.to_date(F.col("window.start")).alias("day"),
+        *[_quoted(c) for c in agg.columns[1:]],
     )
 
 
-def _agg_names(aggs: list[Column]) -> list[str]:
-    names = []
-    for c in aggs:
-        # Column alias is the last name segment of the expression
-        names.append(c._jc.toString().split(" AS ")[-1].strip("`"))
-    return names
+def _quoted(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def continuous_rollup(
@@ -104,72 +111,19 @@ def realtime_aggregate(
     The cutoff read is one max() over the rollup table's window_end —
     O(|windows|), served from parquet footer stats after partition pruning.
     """
-    names = _agg_names(aggs)
-    cols = ["window_start", "window_end", "day", *names]
+    full = _windowed_agg(raw, ts_col, grain, aggs)
+    cols = [_quoted(c) for c in full.columns]
     try:
         rollup = spark.read.parquet(rollup_path).select(*cols)
         cutoff = rollup.agg(F.max("window_end")).first()[0]
     except Exception:  # noqa: BLE001 — no rollup written yet
         rollup, cutoff = None, None
     if cutoff is None:
-        return _windowed_agg(raw, ts_col, grain, aggs)
+        return full
     tail = _windowed_agg(
         raw.filter(F.col(ts_col) >= F.lit(cutoff)), ts_col, grain, aggs
     )
     return rollup.unionByName(tail)
-
-
-def dataset_card_stream(
-    stream: DataFrame,
-    group_cols: tuple[str, ...] = ("lang", "source"),
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of ``curation.dataset_card``'s aggregation half: a
-    complete-mode streaming groupBy on the stratum key maintaining the
-    SAME exact-integer counts (docs, tokens, Gopher passes) the batch op
-    computes. State is |strata| rows — bounded regardless of stream
-    length — and every aggregate is an associative integer sum, so the
-    finished aggregate is BIT-IDENTICAL to the batch aggregation over
-    the same rows in any arrival order (pinned by the stream≡batch
-    test). Feed the completed aggregate to ``finish_dataset_card`` for
-    the share/rate columns — those are derived on read because a share
-    of a still-growing total is only final when the stream is.
-    """
-    from apache_flink_essentials_spark.operators.text import (
-        gopher_pass_expr,
-        tokens_expr,
-    )
-
-    base = stream.select(
-        *group_cols,
-        F.size(tokens_expr(text_col)).alias("_nt"),
-        gopher_pass_expr(text_col).cast("long").alias("_pass"),
-    )
-    return base.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("_nt").alias("n_tokens"),
-        F.sum("_pass").alias("n_gopher_pass"),
-    )
-
-
-def finish_dataset_card(agg: DataFrame, group_cols: tuple[str, ...] = ("lang", "source")) -> DataFrame:
-    """Derive the dataset card's share/rate columns from a finished
-    stratum aggregate (streaming sink table or batch aggregate alike).
-    Ratios are exact-int / exact-int — the batch op's portability
-    contract — and the corpus-total window runs over the |strata|-row
-    aggregate, never the data."""
-    from pyspark.sql.window import Window as _W
-
-    total = F.sum("n_tokens").over(_W.partitionBy())
-    return agg.select(
-        *group_cols,
-        "n_docs",
-        "n_tokens",
-        (F.col("n_tokens") / total).alias("token_share"),
-        "n_gopher_pass",
-        (F.col("n_gopher_pass") / F.col("n_docs")).alias("gopher_pass_rate"),
-        (F.col("n_tokens") / F.col("n_docs")).alias("avg_doc_tokens"),
-    )
 
 
 def tokenize_ingest_stream(
@@ -200,370 +154,6 @@ def tokenize_ingest_stream(
     ).filter(F.col("_tok") != "")
 
 
-def token_counts_stream(
-    stream: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Streaming half of the vocabulary-coverage report: a complete-mode
-    token-type count aggregate over arriving documents. Counts are
-    associative integers, so the streaming state is the TYPE TABLE
-    (vocabulary-sized, bounded), never the corpus — the same state-shape
-    argument as the BPE pair-count twin. The coverage curve itself
-    (rank + cumulate + size sweep — ``text.coverage_from_counts``) runs
-    on read over the materialized type table: ranking is a global sort,
-    non-incremental by semantics, but it re-runs over |vocab| rows, not
-    |corpus|.
-    """
-    from apache_flink_essentials_spark.operators.text import tokens_expr
-
-    return (
-        stream.select(F.explode(tokens_expr(text_col)).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def binned_sums_stream(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    step_s: int = 3600,
-) -> DataFrame:
-    """Streaming twin of ``timeseries.binned_sums`` — the drift
-    workbench's shared relation as complete-mode stream state: per time
-    bin, the exact BIGINT row count and DECIMAL(18,2) value sum. Both
-    maintained quantities are associative exact sums, so the finished
-    aggregate is BIT-IDENTICAL to the batch binning over the same rows
-    in any arrival order, and state is |bins| rows — bounded by the
-    stream's time SPAN, not its volume (a year of hourly bins is 8,760
-    rows of state at any event rate).
-
-    Derive-on-read tails: feed the completed aggregate to
-    ``timeseries.cusum_from_binned`` (level-shift scan) and/or
-    ``timeseries.acf_from_binned`` (seasonality screen) — both
-    statistics depend on the GLOBAL bin mean, so they are
-    non-incremental by semantics and re-run on read over the |bins|-row
-    state (the ``token_counts_stream`` / ``coverage_from_counts``
-    split). Stream≡batch equality is pinned by tests for both tails.
-    """
-    bin_col = (F.col(ts_col).cast("long") / F.lit(step_s)).cast("long")
-    return (
-        stream.where(F.col(value_col).isNotNull())
-        .groupBy(bin_col.alias("bin"))
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col(value_col).cast("decimal(18,2)")).alias("_s"),
-        )
-    )
-
-
-def defect_bins_stream(
-    stream: DataFrame,
-    ts_col: str,
-    defect: "Column",
-    step_s: int = 86400,
-) -> DataFrame:
-    """Streaming twin of ``profiling.defect_bins`` — the p-chart's
-    per-bin (row count, defect count) relation as complete-mode stream
-    state. Both counts are associative BIGINT sums → drained state ≡
-    batch binning bit-for-bit in any arrival order; state is |bins|
-    rows (time-span-bounded). Feed the completed aggregate to
-    ``profiling.p_chart_from_binned`` — the center line moves with
-    every arrival, so the control flags are derive-on-read BY
-    SEMANTICS (the ``binned_sums_stream`` split)."""
-    bin_col = (F.col(ts_col).cast("long") / F.lit(step_s)).cast("long")
-    return stream.groupBy(bin_col.alias("bin")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(defect.cast("long")).alias("n_defect"),
-    )
-
-
-def trend_power_sums_stream(
-    stream: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming twin of ``timeseries.trend_ols``'s aggregation half: a
-    complete-mode groupBy maintaining the per-group OLS POWER SUMS —
-    count, min-epoch, and the five Σx/Σy/Σx²/Σxy/Σy² moments in exact
-    DECIMAL over ABSOLUTE epoch seconds. Every maintained quantity is an
-    associative min/sum of exact values, so the finished aggregate is
-    BIT-IDENTICAL to the batch sums over the same rows in any arrival
-    order, and state is |groups| rows — bounded regardless of stream
-    length. A linear regression is a mergeable sketch; this is the
-    streaming consequence.
-
-    The batch op shifts x to the group min BEFORE summing (numeric
-    headroom); a stream cannot — the min keeps moving. Instead raw sums
-    accumulate with x absolute (headroom audited in
-    ``finish_trend_ols``) and the finish applies the EXACT integer
-    shift identities, recovering the batch op's shifted sums digit for
-    digit.
-    """
-    return (
-        stream.where(F.col(value_col).isNotNull())
-        .select(
-            F.col(group_col).alias("grp"),
-            F.col(ts_col).cast("long").alias("_x"),
-            F.col(value_col).cast("decimal(18,2)").alias("_y"),
-        )
-        .groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("_x").alias("_t0"),
-            F.sum(F.col("_x").cast("decimal(38,0)")).alias("_rsx"),
-            F.sum("_y").alias("_sy"),
-            # cast BEFORE multiplying: a raw long*long x² overflows for
-            # epochs past ~3.04e9 s (~2066) even though the summed
-            # decimal has headroom — the per-row product must already
-            # be on the DECIMAL pathway the finish's audit reasons about
-            F.sum(
-                F.col("_x").cast("decimal(38,0)")
-                * F.col("_x").cast("decimal(38,0)")
-            ).alias("_rsxx"),
-            F.sum((F.col("_y") * F.col("_x")).cast("decimal(38,2)"))
-            .alias("_rsxy"),
-            F.sum((F.col("_y") * F.col("_y")).cast("decimal(38,4)"))
-            .alias("_syy"),
-        )
-    )
-
-
-def finish_trend_ols(
-    agg: DataFrame, group_col: str = "event_type"
-) -> DataFrame:
-    """Finish a ``trend_power_sums_stream`` aggregate into the batch
-    ``trend_ols`` output. The raw absolute-x sums shift to the group-min
-    origin via exact DECIMAL identities —
-
-      ``Sx' = Sx − n·t0;  Sxx' = Sxx − 2·t0·Sx + n·t0²;
-        Sxy' = Sxy − t0·Sy``
-
-    — integer algebra, no rounding, so the shifted sums equal the batch
-    op's digit for digit and the shared closed form
-    (`timeseries.ols_from_power_sums`) returns bit-identical doubles
-    (pinned by the stream≡batch equality test).
-
-    Overflow headroom: with epoch ≈ 1.7e9 s, Σx² per group stays inside
-    DECIMAL(38,0) up to ~3·10¹⁸ rows — audit before pointing a
-    century-scale stream at it.
-    """
-    from apache_flink_essentials_spark.operators.timeseries import (
-        ols_from_power_sums,
-    )
-
-    t0 = F.col("_t0").cast("decimal(38,0)")
-    n = F.col("n").cast("decimal(38,0)")
-    shifted = agg.select(
-        "grp",
-        "n",
-        (F.col("_rsx") - n * t0).cast("decimal(38,0)").alias("_sx"),
-        "_sy",
-        (F.col("_rsxx") - F.lit(2) * t0 * F.col("_rsx") + n * t0 * t0)
-        .cast("decimal(38,0)").alias("_sxx"),
-        (F.col("_rsxy") - t0 * F.col("_sy"))
-        .cast("decimal(38,2)").alias("_sxy"),
-        "_syy",
-    )
-    return ols_from_power_sums(shifted, group_col)
-
-
-def grouped_term_counts_stream(
-    stream: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming half of the per-group vocabulary-richness report: a
-    complete-mode (group, term) count aggregate over arriving documents
-    — the grouped sibling of ``token_counts_stream``. State is the
-    per-group TYPE TABLE (vocabulary-sized, bounded), never the corpus;
-    counts are associative integers, so the finished aggregate equals
-    the batch (group, term) aggregate bit-for-bit in any arrival order.
-    Feed the completed aggregate to :func:`finish_hapax_ratio`.
-    """
-    from apache_flink_essentials_spark.operators.text import tokens_expr
-
-    return (
-        stream.select(
-            F.col(group_col).alias("grp"),
-            F.explode(tokens_expr(text_col)).alias("term"),
-        )
-        .where(F.col("term") != "")
-        .groupBy("grp", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def finish_hapax_ratio(
-    agg: DataFrame, group_col: str = "source"
-) -> DataFrame:
-    """Finish a ``grouped_term_counts_stream`` aggregate into the batch
-    ``text.hapax_ratio`` output — vocabulary size, hapax count, and
-    their exact-integer ratio per group, derived on read over the
-    |vocab|-row aggregate (hapax-ness of a term is only final when the
-    stream is: one more occurrence demotes it, the same
-    derived-on-read argument as the dataset-card shares)."""
-    return (
-        agg.groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).alias("vocab_size"),
-            F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
-            .cast("long").alias("hapax_count"),
-        )
-        .select(
-            F.col("grp").alias(group_col),
-            "vocab_size",
-            "hapax_count",
-            (F.col("hapax_count") / F.col("vocab_size"))
-            .alias("hapax_ratio"),
-        )
-        .orderBy(group_col)
-    )
-
-
-def countmin_grid_stream(
-    stream: DataFrame, col: str, depth: int = 3, width: int = 512
-) -> DataFrame:
-    """Streaming half of the count-min sketch: a complete-mode
-    (seed, bucket) counter-grid aggregate over the arriving rows — the
-    production CMS deployment shape: state is the depth×width COUNTER
-    GRID (a parameter, not a function of the data), counts are
-    associative integer sums, so the streamed grid is BIT-IDENTICAL to
-    `sketches.countmin_topk`'s internal grid over the same rows in any
-    arrival order. Estimates for any candidate item derive on read via
-    :func:`countmin_estimate_from_grid` — per-item state is never kept.
-    Bucketing arithmetic mirrors `sketches.countmin_topk` exactly
-    (md5-seeded hash rows), so grids interchange between the batch and
-    streaming paths.
-    """
-    seeds = ", ".join(str(s) for s in range(depth))
-    buckets = stream.selectExpr(
-        f"`{col}` AS item",
-        f"explode(array({seeds})) AS _seed",
-    ).selectExpr(
-        "_seed",
-        "cast(conv(substring(md5(concat(cast(_seed as string), ':',"
-        f" cast(item as string))), 1, 8), 16, 10) as bigint) % {width}"
-        " AS _bucket",
-    )
-    return buckets.groupBy("_seed", "_bucket").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-
-
-def countmin_estimate_from_grid(
-    grid: DataFrame,
-    items: DataFrame,
-    col: str,
-    depth: int = 3,
-    width: int = 512,
-) -> DataFrame:
-    """Estimate counts for a candidate item relation from a finished
-    count-min grid (streamed or batch — they're interchangeable):
-    re-derive each item's (seed, bucket) keys with the same md5
-    arithmetic, broadcast-join the KB-sized grid, and take the
-    min-over-seeds — ``(item, est_count)``, the one-sided overestimate
-    contract (est ≥ true, pinned in tests)."""
-    seeds = ", ".join(str(s) for s in range(depth))
-    item_buckets = (
-        items.selectExpr(f"`{col}` AS item")
-        .distinct()
-        .selectExpr("item", f"explode(array({seeds})) AS _seed")
-        .selectExpr(
-            "item",
-            "_seed",
-            "cast(conv(substring(md5(concat(cast(_seed as string), ':',"
-            f" cast(item as string))), 1, 8), 16, 10) as bigint) % {width}"
-            " AS _bucket",
-        )
-    )
-    return (
-        item_buckets.join(F.broadcast(grid), ["_seed", "_bucket"], "left")
-        .groupBy("item")
-        .agg(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("est_count"))
-        .orderBy("item")
-    )
-
-
-def fd_xy_counts_stream(
-    stream: DataFrame, x_cols: "list[str]", y_col: str
-) -> DataFrame:
-    """Streaming twin of ``profiling.fd_xy_counts`` — the functional-
-    dependency audit's state relation as complete-mode stream state:
-    exact BIGINT count per distinct ``(X..., Y)``. The count is an
-    associative sum, so the drained state is BIT-IDENTICAL to the batch
-    relation over the same rows in any arrival order; state is
-    |distinct X, Y| rows — cardinality-bounded, not volume-bounded.
-    Feed the completed aggregate to ``profiling.fd_from_xy_counts``:
-    the g3 rollup depends on per-group maxima (every arrival can move
-    them), so the audit row is derive-on-read BY SEMANTICS (the
-    ``binned_sums_stream`` split)."""
-    return stream.groupBy(
-        *[F.col(c) for c in x_cols], F.col(y_col)
-    ).agg(F.count(F.lit(1)).alias("_n"))
-
-
-# ---------------------------------------------------------------------------
-# round-11 twins: HLL registers, referential-integrity counts, edge-set
-# state for graph stats, freshness second-counts. Each follows the
-# fd_xy_counts_stream contract: the STREAMED relation is an associative
-# integer aggregate (bit-identical to its batch twin over the same rows in
-# any arrival order); non-associative read-side math derives on read.
-# ---------------------------------------------------------------------------
-
-
-def hll_registers_stream(stream: DataFrame, col: str, p: int = 8) -> DataFrame:
-    """Streaming twin of ``sketches.portable_hll_distinct``: the per-bucket
-    ``max(rho)`` register relation maintained as complete-mode stream state.
-    ``max`` is associative AND idempotent, so the drained state equals the
-    batch ``portable_hll_partials`` bit-for-bit regardless of arrival order
-    or duplication (an at-least-once source cannot corrupt it — the HLL
-    register's native superpower). State is ≤ 2^p integer rows (the sketch,
-    never the data). Resolve on read with ``sketches.portable_hll_merge``."""
-    from apache_flink_essentials_spark.operators.sketches import (
-        portable_hll_partials,
-    )
-
-    return portable_hll_partials(stream, col, p=p)
-
-
-def referential_counts_stream(
-    fact_stream: DataFrame, fk: str, dim: DataFrame, pk: str
-) -> DataFrame:
-    """Incremental form of ``profiling.referential_audit`` for ONE
-    fact→dim relation: every micro-batch stream-static left-joins the
-    (deduplicated, marker-tagged) dimension key set — join strategy left
-    to Spark/AQE (broadcast when the dim key set fits
-    ``autoBroadcastJoinThreshold``, shuffle otherwise), re-planned per
-    batch so dim updates between batches are picked up — and a
-    complete-mode 1-row aggregate maintains ``(n_rows, n_null_fk,
-    n_orphans)``. All three are associative BIGINT sums → stream ≡ batch
-    exactly; state is ONE row.
-
-    No forced ``F.broadcast`` hint (r12, r11 advisory): a hint overrides
-    the size threshold, so a LARGE dimension would be force-broadcast
-    every micro-batch — an OOM at the 100 TB deployment target. The
-    planner's own sizing already broadcasts small dims per batch.
-
-    The monitoring deployment shape: the orphan count is the alert
-    signal and it is maintained at ingest — no periodic full-fact rescan
-    (at 100 TB the batch audit re-reads the world; this reads each row
-    once, when it arrives)."""
-    dkeys = (
-        dim.select(F.col(pk).alias(fk)).distinct().withColumn("_hit", F.lit(1))
-    )
-    joined = fact_stream.join(dkeys, fk, "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col(fk).isNull(), 1).otherwise(0)).cast("long")
-        .alias("n_null_fk"),
-        F.sum(
-            F.when(F.col(fk).isNotNull() & F.col("_hit").isNull(), 1)
-            .otherwise(0)
-        ).cast("long").alias("n_orphans"),
-    )
-
-
 def edge_set_stream(
     stream: DataFrame, a_col: str, b_col: str
 ) -> DataFrame:
@@ -584,59 +174,3 @@ def edge_set_stream(
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-
-
-def freshness_ts_counts_stream(
-    stream: DataFrame, ts_col: str, group_col: str
-) -> DataFrame:
-    """Streaming state for ``profiling.freshness_audit``: exact event
-    counts per (group, epoch-second) — associative sums, so the state
-    equals the batch grouping bit-for-bit. Cardinality-bounded by the
-    retention window's distinct seconds per group, never by row volume.
-    Resolve the audit row on read with :func:`freshness_from_ts_counts`
-    (the audit's lag/ratio math depends on the GLOBAL corpus watermark,
-    which every arrival can move — derive-on-read by semantics)."""
-    return stream.groupBy(
-        F.col(group_col).alias("grp"),
-        F.col(ts_col).cast("long").alias("ts_s"),
-    ).agg(F.count(F.lit(1)).alias("_n"))
-
-
-def freshness_from_ts_counts(
-    counts: DataFrame, group_col: str = "grp", window_s: int = 86400
-) -> DataFrame:
-    """Derive-on-read tail for :func:`freshness_ts_counts_stream` —
-    reproduces ``profiling.freshness_audit``'s output EXACTLY (same
-    expressions, weighted by the state's _n instead of scanning raw
-    rows): per group ``(group, last_ts_s, lag_s, n_total,
-    n_last_window, avg_per_window, last_window_ratio)``."""
-    bounds = counts.agg(
-        F.max("ts_s").alias("_gmax"), F.min("ts_s").alias("_gmin")
-    )
-    sided = counts.crossJoin(F.broadcast(bounds))
-    per = sided.groupBy("grp").agg(
-        F.max("ts_s").alias("last_ts_s"),
-        F.sum("_n").cast("long").alias("n_total"),
-        F.sum(
-            F.when(F.col("ts_s") > F.col("_gmax") - window_s, F.col("_n"))
-            .otherwise(0)
-        ).cast("long").alias("n_last_window"),
-        F.max("_gmax").alias("_gmax"),
-        F.max("_gmin").alias("_gmin"),
-    )
-    n_windows = (
-        F.expr(f"(_gmax - _gmin) div {window_s}") + F.lit(1)
-    ).cast("long")
-    return per.select(
-        F.col("grp").alias(group_col),
-        "last_ts_s",
-        (F.col("_gmax") - F.col("last_ts_s")).alias("lag_s"),
-        "n_total",
-        "n_last_window",
-        (F.col("n_total") / n_windows).alias("avg_per_window"),
-        (
-            F.col("n_last_window").cast("double")
-            * n_windows.cast("double")
-            / F.col("n_total").cast("double")
-        ).alias("last_window_ratio"),
-    ).orderBy(group_col)

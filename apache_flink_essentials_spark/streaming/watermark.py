@@ -39,12 +39,6 @@ def processing_time_trigger(interval: str = "1 second") -> dict:
     return {"processingTime": interval}
 
 
-def available_now_trigger() -> dict:
-    """Bounded drain-the-source trigger — used by the replay harness to run
-    a stream to completion over a finite fixture."""
-    return {"availableNow": True}
-
-
 def enrich_with_static(stream: "DataFrame", dim: "DataFrame", on, how: str = "left") -> "DataFrame":
     """Stream-static join: enrich a streaming frame with a bounded dimension
     table — Spark's native analog of Flink's broadcast-state pattern (the

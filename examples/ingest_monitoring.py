@@ -1,15 +1,17 @@
-"""Ingest-monitoring workbench (round-11 streaming twins, end to end):
+"""Ingest-monitoring workbench (round-11 stream state, end to end):
 the always-on data-quality reads a 100 TB ingest pipeline keeps warm —
 each maintained as a tiny ASSOCIATIVE state relation at ingest (stream ≡
 batch bit-for-bit, see tests/test_streaming_round11.py) with the
-non-associative report derived on read:
+non-associative report derived on read. The batch operators run
+unchanged on the stream:
 
   * referential integrity   — orphan/null-FK counts vs a dimension
-    (`referential_counts_stream`, 1-row state)
+    (`profiling.referential_audit`, 1-row state per relation)
   * source freshness        — lag + trailing-window volume ratio per
-    source (`freshness_ts_counts_stream` → `freshness_from_ts_counts`)
+    source (`profiling.freshness_ts_counts` → `freshness_from_ts_counts`)
   * distinct-user cardinality — portable-HLL registers
-    (`hll_registers_stream`, ≤2^p rows, duplicate-delivery idempotent)
+    (`sketches.portable_hll_partials`, ≤2^p rows, duplicate-delivery
+    idempotent)
   * co-occurrence graph     — canonical edge-set state feeding the batch
     degree/triangle reads (`edge_set_stream`)
   * online retrieval eval   — top-k neighbors of a fixed query set over
@@ -28,18 +30,20 @@ from pyspark.sql import functions as F
 
 from apache_flink_essentials_spark import get_spark, load_table
 from apache_flink_essentials_spark.operators import graph as G
-from apache_flink_essentials_spark.operators.sketches import portable_hll_merge
+from apache_flink_essentials_spark.operators.profiling import (
+    freshness_from_ts_counts,
+    freshness_ts_counts,
+    referential_audit,
+)
+from apache_flink_essentials_spark.operators.sketches import (
+    portable_hll_merge,
+    portable_hll_partials,
+)
 from apache_flink_essentials_spark.streaming.replay import (
     replay_as_stream,
     run_stream_to_df,
 )
-from apache_flink_essentials_spark.streaming.rollup import (
-    edge_set_stream,
-    freshness_from_ts_counts,
-    freshness_ts_counts_stream,
-    hll_registers_stream,
-    referential_counts_stream,
-)
+from apache_flink_essentials_spark.streaming.rollup import edge_set_stream
 from apache_flink_essentials_spark.streaming.stateful import knn_topk_stream
 
 
@@ -53,26 +57,27 @@ def run(spark=None, sf_dir="/root/testdata/sf0.001"):
 
     print("Referential integrity, maintained at ingest (orders→customer):")
     run_stream_to_df(
-        referential_counts_stream(
-            replay_as_stream(orders, num_files=3),
+        referential_audit([(
+            "orders->customer", replay_as_stream(orders, num_files=3),
             "o_custkey", customer, "c_custkey",
-        ),
+        )]),
         output_mode="complete",
     ).show()
 
     print("Source freshness (per event_type, 1h trailing window):")
     state = run_stream_to_df(
-        freshness_ts_counts_stream(
+        freshness_ts_counts(
             replay_as_stream(events, num_files=3, order_by="ts"),
             "ts", "event_type",
         ),
         output_mode="complete",
     )
-    freshness_from_ts_counts(state, "event_type", window_s=3600).show()
+    freshness = freshness_from_ts_counts(state, "event_type", window_s=3600)
+    freshness.show()
 
     print("Distinct users via streamed portable-HLL registers:")
     regs = run_stream_to_df(
-        hll_registers_stream(
+        portable_hll_partials(
             replay_as_stream(events, num_files=3), "user_id", p=8
         ),
         output_mode="complete",
@@ -102,6 +107,7 @@ def run(spark=None, sf_dir="/root/testdata/sf0.001"):
         out.groupBy("query_id", "vec_id").agg(F.max("score").alias("score"))
         .orderBy(F.desc("score")).limit(3).show()
     )
+    return freshness
 
 
 if __name__ == "__main__":

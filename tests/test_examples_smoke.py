@@ -49,3 +49,20 @@ def test_incremental_corpus_example_runs(spark):
     # O(corpus): one row per doc at most
     assert len(rows) == len({r.doc_id for r in rows})
     assert all(0.0 <= r.best_jaccard <= 1.0 for r in rows)
+
+
+def test_ingest_monitoring_example_runs(spark):
+    from apache_flink_essentials_spark import load_table
+    from apache_flink_essentials_spark.operators.profiling import (
+        freshness_audit,
+    )
+    from examples.ingest_monitoring import run
+
+    sf = "/root/testdata/sf0.001"
+    freshness = run(spark, sf_dir=sf)
+    want = freshness_audit(
+        load_table(spark, "events", sf), "ts", "event_type", window_s=3600
+    )
+    assert sorted(map(tuple, freshness.collect())) == sorted(
+        map(tuple, want.collect())
+    )

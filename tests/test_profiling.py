@@ -315,19 +315,17 @@ def test_fd_audit_stream_equals_batch(spark):
     from apache_flink_essentials_spark.operators.profiling import (
         fd_from_xy_counts,
         fd_violations,
+        fd_xy_counts,
     )
     from apache_flink_essentials_spark.streaming.replay import (
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        fd_xy_counts_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        fd_xy_counts_stream(stream_in, ["user_id"], "event_type"),
+        fd_xy_counts(stream_in, ["user_id"], "event_type"),
         output_mode="complete",
     )
     streamed = sorted(map(tuple, fd_from_xy_counts(

@@ -75,3 +75,26 @@ def test_realtime_aggregate_without_rollup_is_batch(spark, events):
     )
     batch = _windowed_agg(events, "ts", "6 hours", _aggs())
     assert _key(merged.collect()) == _key(batch.collect())
+
+
+def test_dotted_alias_round_trips(spark, events):
+    # aggregate names come from the aggregated frame's schema, so an
+    # alias with a dot or an " AS " inside survives the flat select, the
+    # parquet rollup and the serving union
+    aggs = [
+        F.count("*").alias("n.all"),
+        F.sum(F.col("value").cast("decimal(18,2)")).alias("x AS y"),
+    ]
+    full = _windowed_agg(events, "ts", "6 hours", aggs)
+    assert full.columns == [
+        "window_start", "window_end", "day", "n.all", "x AS y",
+    ]
+    out = tempfile.mkdtemp(prefix="rollup_dot_")
+    cutoff = "2024-01-15 00:00:00"
+    full.filter(F.col("window_end") <= F.lit(cutoff).cast("timestamp")).write.mode(
+        "overwrite"
+    ).partitionBy("day").parquet(out)
+
+    merged = realtime_aggregate(spark, out, events, "ts", "6 hours", aggs)
+    assert merged.columns == full.columns
+    assert _key(merged.collect()) == _key(full.collect())

@@ -338,22 +338,25 @@ def test_trend_power_sums_stream_equals_batch(spark):
     import sys, os
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from apache_flink_essentials_spark import load_table
-    from apache_flink_essentials_spark.operators.timeseries import trend_ols
+    from apache_flink_essentials_spark.operators.timeseries import (
+        ols_from_power_sums,
+        trend_ols,
+        trend_power_sums,
+    )
     from apache_flink_essentials_spark.streaming.replay import (
         replay_as_stream,
         run_stream_to_df,
-    )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        finish_trend_ols,
-        trend_power_sums_stream,
     )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     agg = run_stream_to_df(
-        trend_power_sums_stream(stream_in), output_mode="complete"
+        trend_power_sums(stream_in, "event_type", "ts", "value"),
+        output_mode="complete",
     )
-    streamed = sorted(map(tuple, finish_trend_ols(agg).collect()))
+    streamed = sorted(
+        map(tuple, ols_from_power_sums(agg, "event_type").collect())
+    )
     batch = sorted(
         map(tuple, trend_ols(events, "event_type", "ts", "value").collect())
     )
@@ -482,22 +485,22 @@ def test_grouped_term_counts_stream_equals_batch_hapax(spark):
     # complete-mode (group, term) counts over a replayed document
     # stream, finished on read == the batch hapax_ratio exactly
     from apache_flink_essentials_spark import load_table
-    from apache_flink_essentials_spark.operators.text import hapax_ratio
+    from apache_flink_essentials_spark.operators.text import (
+        grouped_term_counts,
+        hapax_from_term_counts,
+        hapax_ratio,
+    )
     from apache_flink_essentials_spark.streaming.replay import (
         replay_as_stream,
         run_stream_to_df,
-    )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        finish_hapax_ratio,
-        grouped_term_counts_stream,
     )
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(docs, num_files=3, order_by="doc_id")
     agg = run_stream_to_df(
-        grouped_term_counts_stream(stream_in), output_mode="complete"
+        grouped_term_counts(stream_in), output_mode="complete"
     )
-    streamed = sorted(map(tuple, finish_hapax_ratio(agg).collect()))
+    streamed = sorted(map(tuple, hapax_from_term_counts(agg).collect()))
     batch = sorted(map(tuple, hapax_ratio(docs).collect()))
     assert streamed == batch and len(batch) > 0
 
@@ -627,21 +630,19 @@ def test_countmin_grid_stream_matches_batch_estimates(spark):
     # every estimate >= the true count (the CMS one-sided contract)
     from apache_flink_essentials_spark import load_table
     from apache_flink_essentials_spark.operators.sketches import (
+        countmin_estimate_from_grid,
+        countmin_grid,
         countmin_topk,
     )
     from apache_flink_essentials_spark.streaming.replay import (
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        countmin_estimate_from_grid,
-        countmin_grid_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     grid = run_stream_to_df(
-        countmin_grid_stream(stream_in, "user_id"), output_mode="complete"
+        countmin_grid(stream_in, "user_id"), output_mode="complete"
     )
     batch = countmin_topk(events, "user_id", k=10).collect()
     ests = {

@@ -16,6 +16,7 @@ def test_binned_sums_stream_cusum_equals_batch(spark):
     # no floats anywhere to diverge)
     from apache_flink_essentials_spark import load_table
     from apache_flink_essentials_spark.operators.timeseries import (
+        binned_sums,
         cusum_changepoints,
         cusum_from_binned,
     )
@@ -23,14 +24,11 @@ def test_binned_sums_stream_cusum_equals_batch(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        binned_sums_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        binned_sums_stream(stream_in), output_mode="complete"
+        binned_sums(stream_in, "ts", "value"), output_mode="complete"
     )
     streamed = sorted(map(tuple, cusum_from_binned(state).collect()))
     batch = sorted(
@@ -48,19 +46,17 @@ def test_binned_sums_stream_acf_equals_batch(spark):
     from apache_flink_essentials_spark.operators.timeseries import (
         acf,
         acf_from_binned,
+        binned_sums,
     )
     from apache_flink_essentials_spark.streaming.replay import (
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        binned_sums_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        binned_sums_stream(stream_in), output_mode="complete"
+        binned_sums(stream_in, "ts", "value"), output_mode="complete"
     )
     lags = (1, 6, 12, 24)
     streamed = sorted(
@@ -366,6 +362,7 @@ def test_defect_bins_stream_pchart_equals_batch(spark):
 
     from apache_flink_essentials_spark import load_table
     from apache_flink_essentials_spark.operators.profiling import (
+        defect_bins,
         p_chart,
         p_chart_from_binned,
     )
@@ -373,16 +370,11 @@ def test_defect_bins_stream_pchart_equals_batch(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        defect_bins_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        defect_bins_stream(
-            stream_in, "ts", F.col("event_type") == "error"
-        ),
+        defect_bins(stream_in, "ts", F.col("event_type") == "error"),
         output_mode="complete",
     )
     streamed = sorted(map(tuple, p_chart_from_binned(state).collect()))

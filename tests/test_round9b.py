@@ -223,14 +223,11 @@ def test_binned_sums_stream_mad_equals_batch(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        binned_sums_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        binned_sums_stream(stream_in), output_mode="complete"
+        binned_sums(stream_in, "ts", "value"), output_mode="complete"
     )
     streamed = sorted(
         map(tuple, mad_anomalies_from_binned(state).collect())
@@ -256,14 +253,11 @@ def test_binned_sums_stream_permutation_entropy_equals_batch(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        binned_sums_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        binned_sums_stream(stream_in), output_mode="complete"
+        binned_sums(stream_in, "ts", "value"), output_mode="complete"
     )
     streamed = permutation_entropy_from_binned(state).collect()
     batch = permutation_entropy_from_binned(
@@ -286,14 +280,11 @@ def test_binned_sums_stream_bollinger_and_kendall_equal_batch(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        binned_sums_stream,
-    )
 
     events = load_table(spark, "events", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        binned_sums_stream(stream_in), output_mode="complete"
+        binned_sums(stream_in, "ts", "value"), output_mode="complete"
     )
     batch_bins = binned_sums(events, "ts", "value", 3600)
     assert sorted(map(tuple, bollinger_from_binned(state).collect())) == \

@@ -959,18 +959,18 @@ def test_dataset_card_stream_equals_batch(spark):
     # the batch dataset_card, bit-for-bit: every maintained aggregate is
     # an associative integer sum, so arrival order cannot matter
     from apache_flink_essentials_spark import load_table
-    from apache_flink_essentials_spark.operators.curation import dataset_card
-    from apache_flink_essentials_spark.streaming.rollup import (
-        dataset_card_stream,
-        finish_dataset_card,
+    from apache_flink_essentials_spark.operators.curation import (
+        dataset_card,
+        dataset_card_counts,
+        dataset_card_from_counts,
     )
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(docs, num_files=3, order_by="doc_id")
     agg = run_stream_to_df(
-        dataset_card_stream(stream_in), output_mode="complete"
+        dataset_card_counts(stream_in), output_mode="complete"
     )
-    streamed = finish_dataset_card(agg)
+    streamed = dataset_card_from_counts(agg)
     batch = dataset_card(docs)
     b = sorted(map(tuple, batch.collect()))
     s = sorted(map(tuple, streamed.collect()))
@@ -1090,16 +1090,14 @@ def test_vocab_coverage_stream_equals_batch(spark):
     from apache_flink_essentials_spark import load_table
     from apache_flink_essentials_spark.operators.text import (
         coverage_from_counts,
+        token_counts,
         vocab_coverage,
-    )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        token_counts_stream,
     )
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     stream_in = replay_as_stream(docs, num_files=3, order_by="doc_id")
     counts = run_stream_to_df(
-        token_counts_stream(stream_in), output_mode="complete"
+        token_counts(stream_in), output_mode="complete"
     )
     streamed = coverage_from_counts(counts).collect()
     batch = vocab_coverage(docs).collect()

@@ -1,7 +1,7 @@
-"""Round-11 streaming twins: HLL registers, referential-integrity counts,
+"""Round-11 stream state: HLL registers, referential-integrity counts,
 edge-set graph state, freshness second-counts, online KNN top-k. Each test
-replays a bounded fixture through the streaming operator and asserts the
-drained state / final emission equals the batch twin exactly."""
+replays a bounded fixture through the operator on a stream and asserts the
+drained state / final emission equals the batch result exactly."""
 
 from __future__ import annotations
 
@@ -27,14 +27,11 @@ def test_hll_registers_stream_equals_batch_partials(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        hll_registers_stream,
-    )
 
     events = _load(spark, "events")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        hll_registers_stream(stream_in, "user_id", p=6),
+        portable_hll_partials(stream_in, "user_id", p=6),
         output_mode="complete",
     )
     batch = portable_hll_partials(events, "user_id", p=6)
@@ -56,15 +53,12 @@ def test_hll_registers_stream_duplicate_delivery_safe(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        hll_registers_stream,
-    )
 
     events = _load(spark, "events").limit(2000)
     doubled = events.unionAll(events)
     stream_in = replay_as_stream(doubled, num_files=2)
     state = run_stream_to_df(
-        hll_registers_stream(stream_in, "user_id", p=6),
+        portable_hll_partials(stream_in, "user_id", p=6),
         output_mode="complete",
     )
     assert_stream_equals_batch(
@@ -80,9 +74,6 @@ def test_referential_counts_stream_equals_batch_audit(spark):
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        referential_counts_stream,
-    )
 
     orders = _load(spark, "orders")
     customer = _load(spark, "customer")
@@ -96,7 +87,10 @@ def test_referential_counts_stream_equals_batch_audit(spark):
     )
     stream_in = replay_as_stream(fact, num_files=3)
     got = run_stream_to_df(
-        referential_counts_stream(stream_in, "o_custkey", customer, "c_custkey"),
+        referential_audit(
+            [("orders->customer", stream_in, "o_custkey", customer,
+              "c_custkey")]
+        ),
         output_mode="complete",
     ).collect()[0]
     want = referential_audit(
@@ -105,6 +99,7 @@ def test_referential_counts_stream_equals_batch_audit(spark):
     assert (got.n_rows, got.n_null_fk, got.n_orphans) == (
         want.n_rows, want.n_null_fk, want.n_orphans,
     )
+    assert got.relation == want.relation
     assert got.n_null_fk > 0 and got.n_orphans > 0  # corruption visible
 
 
@@ -139,21 +134,19 @@ def test_edge_set_stream_feeds_batch_graph_ops(spark):
 def test_freshness_stream_equals_batch_audit(spark):
     from apache_flink_essentials_spark.operators.profiling import (
         freshness_audit,
+        freshness_from_ts_counts,
+        freshness_ts_counts,
     )
     from apache_flink_essentials_spark.streaming.replay import (
         assert_stream_equals_batch,
         replay_as_stream,
         run_stream_to_df,
     )
-    from apache_flink_essentials_spark.streaming.rollup import (
-        freshness_from_ts_counts,
-        freshness_ts_counts_stream,
-    )
 
     events = _load(spark, "events")
     stream_in = replay_as_stream(events, num_files=3, order_by="ts")
     state = run_stream_to_df(
-        freshness_ts_counts_stream(stream_in, "ts", "event_type"),
+        freshness_ts_counts(stream_in, "ts", "event_type"),
         output_mode="complete",
     )
     streamed = freshness_from_ts_counts(state, "event_type", window_s=3600)
