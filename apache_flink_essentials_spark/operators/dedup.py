@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apache_flink_essentials_spark.operators.text import tokens_expr
+from apache_flink_essentials_spark.session import loop_conf, loop_partitions
 
 
 def text_fingerprint_expr(text_col: str = "text") -> Column:
@@ -937,9 +938,10 @@ def connected_components(
     this lives in the north-star extension tier (SURVEY §2.10) serving
     near-dup cluster canonicalization.
 
-    Concurrency note: each round's action temporarily sets session-level
+    Concurrency note: each round's action runs under
+    `session.loop_conf`, which sets session-level
     ``spark.sql.adaptive.enabled=false`` and shrinks
-    ``spark.sql.shuffle.partitions`` (restored in ``finally``). Any query
+    ``spark.sql.shuffle.partitions`` until the action returns. Any query
     running CONCURRENTLY on the same SparkSession during a round would
     execute under those overrides — this operator assumes the session is
     not shared with concurrent queries while it runs (true for every
@@ -959,14 +961,10 @@ def connected_components(
     # count the convergence signature already measures (~2M slim rows
     # ≈ 32 MB per partition, capped at the session's configured
     # parallelism) — a converged-to-tiny tail stops paying per-task
-    # floors, a 1e10-edge round still spreads. Restored in `finally`.
+    # floors, a 1e10-edge round still spreads (`session.loop_conf`).
     sess = edges.sparkSession
-    aqe_key = "spark.sql.adaptive.enabled"
-    sp_key = "spark.sql.shuffle.partitions"
-    aqe_old = sess.conf.get(aqe_key)
-    sp_old = sess.conf.get(sp_key)
-    rows_per_part = 2_000_000
-    loop_sp = max(1, int(sp_old))
+    sp_old = int(sess.conf.get("spark.sql.shuffle.partitions"))
+    loop_sp = max(1, sp_old)
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("v"),
@@ -984,20 +982,12 @@ def connected_components(
         # (AQE disabled and partitions sized from the previous round's
         # measured edge count just for it; see the loop preamble).
         nonlocal loop_sp
-        sess.conf.set(aqe_key, "false")
-        sess.conf.set(sp_key, str(loop_sp))
-        try:
+        with loop_conf(sess, loop_sp):
             row = d.agg(
                 F.count("*").alias("n"),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
             ).first()
-        finally:
-            sess.conf.set(aqe_key, aqe_old)
-            sess.conf.set(sp_key, sp_old)
-        loop_sp = max(
-            1,
-            min(int(sp_old), -(-int(row["n"]) // rows_per_part)),
-        )
+        loop_sp = loop_partitions(sp_old, int(row["n"]))
         return (row["n"], row["s"])
 
     sig = signature(e)

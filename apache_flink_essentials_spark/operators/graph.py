@@ -33,12 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# partition sizing for the iterative loops: ~2M slim rows ≈ 32 MB per
-# partition (the connected_components constant — see dedup.py); the same
-# bound gates the driver small path (the _CC_DRIVER_MAX_EDGES precedent:
-# at or below it the distributed loop ran every round in ONE task anyway,
-# paying O(iterations) scheduling floors for single-machine work)
-_PR_ROWS_PER_PART = 2_000_000
+from apache_flink_essentials_spark.session import loop_conf, loop_partitions
+
+# the driver small-path gate: at or below one loop partition's worth of
+# edges (session.LOOP_ROWS_PER_PARTITION) the distributed loop ran every
+# round in ONE task anyway, paying O(iterations) scheduling floors for
+# single-machine work (the _CC_DRIVER_MAX_EDGES precedent)
 _PR_DRIVER_MAX_EDGES = 2_000_000
 
 
@@ -169,8 +169,8 @@ def _pagerank_setup(
         preserves partitioning and ordering), so the dangling mass is a
         FILTER over the rank table instead of a join.
 
-    Partition count derives from the measured max(|E|, |V|) at
-    ~2M slim rows per partition, capped at the session setting.
+    Partition count derives from the measured max(|E|, |V|)
+    (`loop_partitions`), capped at the session setting.
     Returns ``(e2, base, n, loop_sp, cleanup)``; unpersist each frame in
     ``cleanup`` when done."""
     sess = e0.sparkSession
@@ -183,9 +183,7 @@ def _pagerank_setup(
         .persist()
     )
     n = nodes0.count()
-    loop_sp = max(
-        1, min(sp_old, -(-max(n, m) // _PR_ROWS_PER_PART))
-    )
+    loop_sp = loop_partitions(sp_old, max(n, m))
     outdeg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     e2 = (
         e0.repartition(loop_sp, "src")
@@ -212,32 +210,6 @@ def _pagerank_setup(
     return e2, base, n, loop_sp, [e0, nodes0, e2, base]
 
 
-class _pagerank_loop_conf:
-    """Context manager: AQE off + loop-sized shuffle partitions for the
-    duration of the iteration actions (the CC discipline — AQE splits
-    every exchange materialization into its own job and buys nothing on
-    the loop's equal-width keyed shuffles; partition count comes from the
-    measured edge count instead). Assumes the session runs no concurrent
-    queries while held (true for every caller in this repo)."""
-
-    def __init__(self, sess, loop_sp: int):
-        self.sess = sess
-        self.loop_sp = loop_sp
-
-    def __enter__(self):
-        c = self.sess.conf
-        self.aqe_old = c.get("spark.sql.adaptive.enabled")
-        self.sp_old = c.get("spark.sql.shuffle.partitions")
-        c.set("spark.sql.adaptive.enabled", "false")
-        c.set("spark.sql.shuffle.partitions", str(self.loop_sp))
-
-    def __exit__(self, *exc):
-        c = self.sess.conf
-        c.set("spark.sql.adaptive.enabled", self.aqe_old)
-        c.set("spark.sql.shuffle.partitions", self.sp_old)
-        return False
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
@@ -262,7 +234,7 @@ def pagerank(
 
     ranks = base.withColumn("rank", F.lit(1.0 / n))
 
-    with _pagerank_loop_conf(edges.sparkSession, loop_sp):
+    with loop_conf(edges.sparkSession, loop_sp):
         for _ in range(iterations):
             # dangling mass: a FILTER over the rank table (the _dang flag
             # is loop-static) feeding a one-row aggregate that broadcast-
@@ -338,7 +310,7 @@ def pagerank_fixedpoint(
         "rank_fp", F.lit(int(scale) // n).cast("long")
     )
 
-    with _pagerank_loop_conf(edges.sparkSession, loop_sp):
+    with loop_conf(edges.sparkSession, loop_sp):
         for _ in range(iterations):
             dangling = ranks.filter(F.col("_dang")).agg(
                 F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long")

@@ -15,10 +15,15 @@ only a starting hint that AQE resizes from actual map-output statistics.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Rows per shuffle partition inside the iterative graph loops (connected
+# components, PageRank): ~2M slim rows ≈ 32 MB per partition.
+LOOP_ROWS_PER_PARTITION = 2_000_000
 
 
 def get_spark(
@@ -81,6 +86,36 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def loop_partitions(cap: int, rows: int) -> int:
+    """Shuffle partitions for one loop round over ``rows`` rows: one per
+    `LOOP_ROWS_PER_PARTITION`, at least 1, at most ``cap`` (the session's
+    own setting)."""
+    return max(1, min(cap, -(-rows // LOOP_ROWS_PER_PARTITION)))
+
+
+@contextmanager
+def loop_conf(spark: SparkSession, partitions: int):
+    """AQE off and ``partitions`` shuffle partitions while held; the
+    session's own settings come back on exit.
+
+    The iterative graph loops run under it: AQE splits every exchange
+    materialization into its own job and buys nothing on a loop's
+    equal-width keyed shuffles, so the loop sizes its partitions from a
+    measured row count (`loop_partitions`) instead. Session-level: a query
+    running concurrently on the same session would see these settings too
+    (no caller in this package shares its session that way)."""
+    conf = spark.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    sp = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        conf.set("spark.sql.shuffle.partitions", sp)
 
 
 def stop_spark() -> None:

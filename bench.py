@@ -3,19 +3,24 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Methodology: per-query wall time of plan + execute + count-style consume
-(collect capped results for top-k queries). Steady-state measurement: one
-untimed warm execution of each query AT THE MEASURED SF precedes the timed
-runs — this compiles whole-stage codegen for the exact physical plan that
-will be timed (warming at a smaller SF is not enough: AQE picks different
-physical plans at different data sizes, so the codegen cache misses) and
-takes JVM JIT out of the measurement. Each query is then timed four times
-as two spread passes of two consecutive samples (see the sampling comment
-in main) and the MINIMUM is reported — the minimum is the
-standard noise-robust estimator of a deterministic workload's cost (any
-excess over it is scheduler/host interference, not query work; this box
-shows 2-5× single-run spikes). The reported number is what a user's Nth
-query execution costs, which is the quantity that matters at 100 TB.
+Methodology: per-query wall time of building the query's DataFrame plus
+writing its full output to the ``noop`` sink (``count()`` would let
+Catalyst prune every projected column it does not need). Each sample goes
+through ``scripts/profile_query.py``'s ``Profiler.sample``, so every query
+also gets its full per-layer record (build jobs and shuffle bytes, planning
+phases, execution jobs, stages, tasks and per-exchange bytes), written to
+``bench_detail.json``. Steady-state measurement: one untimed warm execution
+of each query AT THE MEASURED SF precedes the timed runs — this compiles
+whole-stage codegen for the exact physical plan that will be timed
+(warming at a smaller SF is not enough: AQE picks different physical plans
+at different data sizes, so the codegen cache misses) and takes JVM JIT
+out of the measurement. Each query is then timed four times as two spread
+passes of two consecutive samples (see the sampling comment in main) and
+the MINIMUM is reported — the minimum is the standard noise-robust
+estimator of a deterministic workload's cost (any excess over it is
+scheduler/host interference, not query work; this box shows 2-5×
+single-run spikes). The reported number is what a user's Nth query
+execution costs, which is the quantity that matters at 100 TB.
 """
 
 from __future__ import annotations
@@ -23,13 +28,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.join(HERE, "scripts")]
 
 from apache_flink_essentials_spark import get_spark  # noqa: E402
 from apache_flink_essentials_spark import registry  # noqa: E402
-from apache_flink_essentials_spark.schemas import ALL_TABLES  # noqa: E402
+from profile_query import Profiler, duck, oracle_s  # noqa: E402
 
 HEADLINE = [
     # TPC-H-style core
@@ -323,12 +328,13 @@ def main() -> None:
         },
     )
     spark.range(1).count()  # JVM warm-up; session startup not billed to q1
+    prof = Profiler(spark)
 
     # warm pass at the measured SF (see module docstring: AQE re-plans per
     # data size, so only same-SF warming hits the codegen cache)
     for name in HEADLINE:
         try:
-            registry.QUERIES[name](spark, sf_dir).count()
+            prof.sample(name, sf_dir)
         except Exception:  # noqa: BLE001
             pass
 
@@ -341,18 +347,14 @@ def main() -> None:
     # cannot poison every sample (measured 1.73×→2.10× aggregate drift
     # between identical back-to-back-only runs).
     PASSES, PER_PASS = 2, 2
-    timings: dict[str, float] = {}
+    records: dict[str, dict] = {}
     for _ in range(PASSES):
         for name in HEADLINE:
-            fn = registry.QUERIES[name]
             for _ in range(PER_PASS):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                df.count()
-                el = time.perf_counter() - t0
-                if el < timings.get(name, float("inf")):
-                    timings[name] = el
-    timings = {n: round(t, 3) for n, t in timings.items()}
+                rec = prof.sample(name, sf_dir)
+                if rec["wall_s"] < records.get(name, {}).get("wall_s", float("inf")):
+                    records[name] = rec
+    timings = {n: round(r["wall_s"], 3) for n, r in records.items()}
     for name in HEADLINE:
         print(f"# {name}: {timings[name]}s", file=sys.stderr)
 
@@ -361,28 +363,16 @@ def main() -> None:
     # DuckDB anchor: the same oracle SQL on the same parquet at the same SF
     # (the reference repo publishes no numbers — BASELINE.md — so a tuned
     # single-node engine is the honest "within 2×" comparator). Same
-    # methodology: one warm run, min of the same sample count, full consumption.
+    # methodology: one warm run, min of four, full consumption.
     duck_timings: dict[str, float] = {}
     try:
-        import duckdb
-
-        con = duckdb.connect()
-        for t in ALL_TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        con = duck(sf_dir)
         for name in HEADLINE:
             sql = registry.ORACLES.get(name)
             if not sql:
                 continue  # rows-only ops (approx/iterative) have no oracle
             try:
-                con.sql(sql).fetchall()  # warm
-                best = float("inf")
-                for _ in range(PASSES * PER_PASS):
-                    t0 = time.perf_counter()
-                    con.sql(sql).fetchall()
-                    best = min(best, time.perf_counter() - t0)
-                duck_timings[name] = round(best, 3)
+                duck_timings[name] = round(oracle_s(con, sql), 3)
             except Exception as ex:  # noqa: BLE001
                 print(f"# duckdb {name} failed: {str(ex)[:120]}", file=sys.stderr)
     except ImportError:
@@ -411,10 +401,10 @@ def main() -> None:
         "duck_total_common": duck_total,
         "spark_total_common": spark_common,
         "spark_over_duck_ratio": ratio,
+        "records": records,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(os.path.join(here, "bench_detail.json"), "w") as f:
+        with open(os.path.join(HERE, "bench_detail.json"), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError:
         pass
@@ -438,7 +428,7 @@ def main() -> None:
         import re
 
         cand = sorted(
-            glob.glob(os.path.join(here, "BENCH_r*.json")),
+            glob.glob(os.path.join(HERE, "BENCH_r*.json")),
             key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
         )
         # skip alternate-cpu runs like BENCH_r12_c8.json: their lines are

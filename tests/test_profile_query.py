@@ -1,0 +1,23 @@
+"""The per-query profiler sees the jobs a query runs while its DataFrame is
+built, not only the jobs of the plan it returns."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+from conftest import SF_SMOKE
+
+
+def test_profile_splits_build_and_execution_jobs(spark):
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from profile_query import Profiler
+
+    # a child session: the profiler's QueryExecution listener reports only
+    # that session's queries, so the shared test session stays untouched
+    rec = Profiler(spark.newSession()).profile("dedup_cc_canonical", SF_SMOKE)
+    # connected components runs its rounds eagerly while the plan is built
+    assert rec["registry.build_jobs"] > 0
+    assert rec["registry.build_shuffle_bytes"] > 0
+    assert rec["operators.jobs"] >= 1
+    assert rec["cpus"] == len(os.sched_getaffinity(0))

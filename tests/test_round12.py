@@ -306,7 +306,7 @@ def test_theilsen_two_bins_single_pair(spark):
 
 
 def test_shuffle_audit_reads_real_exchange_metrics(spark):
-    # Guards the py4j executed-plan traversal in scripts/shuffle_audit.py
+    # Guards the py4j executed-plan traversal in scripts/profile_query.py
     # (AQE wrappers + QueryStage descent) against Spark upgrades: a
     # grouped aggregate MUST surface a shuffle exchange with non-zero
     # shuffleBytesWritten, and a broadcast join a BroadcastExchange.
@@ -316,7 +316,7 @@ def test_shuffle_audit_reads_real_exchange_metrics(spark):
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
     )
-    from shuffle_audit import collect_exchanges
+    from profile_query import collect_exchanges
 
     df = (
         spark.range(0, 10_000)
