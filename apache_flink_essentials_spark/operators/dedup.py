@@ -23,8 +23,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.operators.skew import hot_bucket_salted_join
 from apache_flink_essentials_spark.operators.text import tokens_expr
-from apache_flink_essentials_spark.session import loop_conf, loop_partitions
+from apache_flink_essentials_spark.session import (
+    driver_small_path,
+    loop_conf,
+    loop_partitions,
+)
 
 
 def text_fingerprint_expr(text_col: str = "text") -> Column:
@@ -499,45 +504,6 @@ def ngram_jaccard_best_match(
     )
 
 
-# Hot-bucket salting for the banded self-joins below. AQE's skew-join
-# never helps here: it splits by partition BYTES (256 MB default), but a
-# hot band bucket is COMPUTE-skewed at tiny byte size — 50k slim
-# (id, fingerprint) rows are ~1 MB yet do n² popcounts in one task (the
-# r12 sf1 curve watched 3 stragglers carry a 32-task stage for ~25 min).
-# Salting splits the WORK, not the bytes: left rows get a deterministic
-# slice pmod(xxhash64(id), S_k); right rows replicate across all S_k
-# slices — but ONLY for keys the broadcast hot-set marks, with
-# S_k = ceil(n_k / threshold) capped at _SALT_MAX_SLICES, so cold keys
-# (the overwhelming majority) pay zero replication and the join stays a
-# single equi-shuffle on (band, salt). Pair semantics are untouched:
-# every (left, right) row combination meets in exactly one slice.
-_SALT_BUCKET_THRESHOLD = 4096
-_SALT_MAX_SLICES = 64
-
-
-def _salted_band_join(
-    a: DataFrame,
-    b: DataFrame,
-    key: str,
-    id_a: str = "id_a",
-    threshold: int | None = None,
-    max_slices: int | None = None,
-) -> DataFrame:
-    """Module front door for :func:`skew.hot_bucket_salted_join` (see
-    module comment above) binding this module's threshold/slice constants
-    at CALL time so tests can monkeypatch them."""
-    from .skew import hot_bucket_salted_join
-
-    return hot_bucket_salted_join(
-        a,
-        b,
-        key,
-        id_a=id_a,
-        threshold=threshold or _SALT_BUCKET_THRESHOLD,
-        max_slices=max_slices or _SALT_MAX_SLICES,
-    )
-
-
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32) -> DataFrame:
     """SimHash fingerprint (Charikar '02): sum ±1 per bit over token hashes,
     sign → bit. Near-dups differ in few bits (Hamming distance).
@@ -637,9 +603,9 @@ def simhash_dup_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     catches most h ≤ 2). Verified by exact popcount filter.
 
     Hot band buckets (e.g. boilerplate or empty docs sharing one
-    fingerprint half) are salted via :func:`_salted_band_join` so the
-    quadratic within-bucket compare parallelizes instead of funneling
-    into one task; pair output is identical."""
+    fingerprint half) are salted via :func:`skew.hot_bucket_salted_join`
+    so the quadratic within-bucket compare parallelizes instead of
+    funneling into one task; pair output is identical."""
     half = bits // 2
     sh = simhash(df, id_col, text_col, bits)
     sh = sh.withColumn("lo", F.col("simhash") % (2 ** half)).withColumn(
@@ -663,7 +629,7 @@ def simhash_dup_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     # unchanged — it runs map-side in the join task either way.
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
-        _salted_band_join(a, b, "_band")
+        hot_bucket_salted_join(a, b, "_band")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
@@ -702,7 +668,7 @@ def simhash_best_match(
     b = _banded(sh, "id_b", "sh_b", id_col)
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     cands = (
-        _salted_band_join(a, b, "_band")
+        hot_bucket_salted_join(a, b, "_band")
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
             F.col("id_a").alias("doc"),
@@ -755,10 +721,10 @@ def simhash_dedup_with_fingerprints(
     the 100 TB contract is that ingest cost is O(batch), never
     O(corpus).
 
-    The banded join goes through :func:`_salted_band_join` with the
-    CORPUS as the counted side, so a hot corpus bucket (boilerplate
-    fingerprints) replicates the SMALL batch side across salts — the
-    cheap direction."""
+    The banded join goes through :func:`skew.hot_bucket_salted_join`
+    with the CORPUS as the counted side, so a hot corpus bucket
+    (boilerplate fingerprints) replicates the SMALL batch side across
+    salts — the cheap direction."""
     if "sig_bits" not in fingerprint_table.columns:
         raise ValueError(
             "fingerprint_table lacks a sig_bits column; build it with "
@@ -798,7 +764,7 @@ def _simhash_dedup_validated(
     newb = _banded(new_sh, "new_id", "sh_n", id_col)
     hamming = F.bit_count(F.col("sh_c").bitwiseXOR(F.col("sh_n")))
     hits = (
-        _salted_band_join(corp, newb, "_band", id_a="corpus_id")
+        hot_bucket_salted_join(corp, newb, "_band", id_a="corpus_id")
         .filter(hamming <= max_hamming)
         .select("new_id")
         .distinct()
@@ -841,27 +807,13 @@ def simhash_dedup_against_corpus(
     )
 
 
-# Edge count at or below which the canonicalized edge list is pulled to
-# the driver and solved with a vectorized min-label propagation instead of
-# running distributed star rounds. Rationale (r12 optimization round): at
-# or below `rows_per_part` (2M) the loop ALREADY runs every round in ONE
-# task (loop_sp = ceil(n / 2e6) = 1), so the distributed path is the same
-# single-machine computation paid for O(log n) times over 4 exchanges per
-# round of scheduling floors (measured: 5,380 edges → 23 jobs, multi-second
-# wall for ~ms of actual work). The collect is bounded by construction
-# (≤ 2M slim (v, u) rows ≈ 32 MB — the aggregate-sized-collect rule), the
-# numpy fold is exact (min-label propagation with pointer doubling,
-# identical output contract), and any larger edge set takes the unchanged
-# distributed path. Tests pin small-path ≡ distributed-path equality.
-_CC_DRIVER_MAX_EDGES = 2_000_000
-
-
 def _cc_driver_small_path(e: DataFrame, n_edges: int) -> DataFrame:
     """Driver-side exact CC for edge sets that fit one task anyway (see
-    `_CC_DRIVER_MAX_EDGES`): vectorized min-label propagation with pointer
-    doubling over the canonicalized (v, u) relation. Returns the same
-    ``(node, component=min id in component)`` relation, every edge-touched
-    node present, reps self-assigned."""
+    `session.DRIVER_MAX_ROWS`; at 5,380 edges the star rounds measured
+    23 jobs and multi-second wall for ~ms of work): vectorized min-label
+    propagation with pointer doubling over the canonicalized (v, u)
+    relation. Returns the same ``(node, component=min id in component)``
+    relation, every edge-touched node present, reps self-assigned."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -914,8 +866,9 @@ def connected_components(
     in an edge list, so they are their own trivial component by definition).
 
     Size-adaptive: once the first convergence-signature action has measured
-    the canonical edge count, edge sets at or below `_CC_DRIVER_MAX_EDGES`
-    (= the loop's own one-partition bound) are solved on the driver in one
+    the canonical edge count, edge sets at or below
+    `session.DRIVER_MAX_ROWS` (= the loop's own one-partition bound, the
+    ``cc`` gate) are solved on the driver in one
     vectorized pass instead of O(log n) single-task distributed rounds —
     see `_cc_driver_small_path`. Larger graphs take the star rounds below
     unchanged.
@@ -991,7 +944,7 @@ def connected_components(
         return (row["n"], row["s"])
 
     sig = signature(e)
-    if sig[0] <= _CC_DRIVER_MAX_EDGES:
+    if driver_small_path("cc", sig[0]):
         return _cc_driver_small_path(e, sig[0])
     for _ in range(max_iterations):
         # large-star: for every node, attach its strictly-larger neighbors

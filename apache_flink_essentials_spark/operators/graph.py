@@ -33,13 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_flink_essentials_spark.session import loop_conf, loop_partitions
-
-# the driver small-path gate: at or below one loop partition's worth of
-# edges (session.LOOP_ROWS_PER_PARTITION) the distributed loop ran every
-# round in ONE task anyway, paying O(iterations) scheduling floors for
-# single-machine work (the _CC_DRIVER_MAX_EDGES precedent)
-_PR_DRIVER_MAX_EDGES = 2_000_000
+from apache_flink_essentials_spark.session import (
+    driver_small_path,
+    loop_conf,
+    loop_partitions,
+)
 
 
 def _pagerank_edges(
@@ -62,92 +60,32 @@ def _pagerank_edges(
     return raw, raw.count()
 
 
-def _pagerank_driver_arrays(raw: DataFrame):
-    """Collect the (bounded — see `_PR_DRIVER_MAX_EDGES`) raw edge list,
-    dedup it driver-side, and index it: returns
-    ``(ids, asrc, adst, outdeg, dang)`` where ``asrc``/``adst`` are
-    per-edge node indices into the sorted-unique ``ids``."""
+def _pagerank_driver(
+    raw: DataFrame, n_edges: int, rank_col: str, rank_type: str, solve
+) -> DataFrame:
+    """Driver small path shared by both PageRanks (the
+    `_cc_driver_small_path` precedent): collect the raw edge list
+    (bounded by `session.DRIVER_MAX_ROWS`), dedup and index it on the
+    driver, and return ``(node, <rank_col>)`` with the ranks
+    ``solve(n, asrc, adst, outdeg, dang)`` computes — ``asrc``/``adst``
+    are per-edge indices into the ``n`` sorted-unique node ids,
+    ``dang`` flags nodes without out-edges."""
     import numpy as np
+    import pandas as pd
 
+    spark = raw.sparkSession
+    node_type = raw.schema["src"].dataType.simpleString()
+    schema = f"node {node_type}, {rank_col} {rank_type}"
+    if n_edges == 0:
+        return spark.createDataFrame([], schema)
     pdf = raw.toPandas().drop_duplicates()
     vals = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
     ids, inv = np.unique(vals, return_inverse=True)
     asrc, adst = inv[: len(pdf)], inv[len(pdf):]
     outdeg = np.bincount(asrc, minlength=len(ids)).astype(np.int64)
-    return ids, asrc, adst, outdeg, outdeg == 0
-
-
-def _pagerank_fp_driver(
-    e0: DataFrame, n_edges: int, iterations: int, scale: int
-) -> DataFrame:
-    """Driver small path for :func:`pagerank_fixedpoint` (the
-    `_cc_driver_small_path` precedent): every quantity is int64 with
-    floor division, and integer addition is order-free, so the numpy
-    replay is BIT-IDENTICAL to the distributed loop (pinned by test) at
-    a fraction of its O(iterations) job floors."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = e0.sparkSession
-    node_type = e0.schema["src"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", node_type, True),
-            T.StructField("rank_fp", T.LongType(), True),
-        ]
-    )
-    if n_edges == 0:
-        return spark.createDataFrame([], out_schema)
-    ids, asrc, adst, outdeg, dang = _pagerank_driver_arrays(e0)
-    n = len(ids)
-    od_src = outdeg[asrc]
-    base = (15 * scale) // (100 * n)
-    r = np.full(n, scale // n, dtype=np.int64)
-    for _ in range(iterations):
-        d_mass = int(r[dang].sum())  # total mass ≤ scale — no overflow
-        c = (85 * r[asrc]) // (100 * od_src)  # floor div on non-negatives
-        agg = np.zeros(n, dtype=np.int64)
-        np.add.at(agg, adst, c)
-        r = base + (85 * d_mass) // (100 * n) + agg
+    ranks = solve(len(ids), asrc, adst, outdeg, outdeg == 0)
     return spark.createDataFrame(
-        pd.DataFrame({"node": ids, "rank_fp": r}), out_schema
-    )
-
-
-def _pagerank_float_driver(
-    e0: DataFrame, n_edges: int, iterations: int, damping: float
-) -> DataFrame:
-    """Driver small path for float :func:`pagerank`: same structure as
-    the fixed-point twin; float contribution sums differ from the
-    distributed loop only in IEEE summation order (the float variant is
-    rows-only by contract, semantics pinned by rtol-1e-9 fixtures)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = e0.sparkSession
-    node_type = e0.schema["src"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", node_type, True),
-            T.StructField("rank", T.DoubleType(), True),
-        ]
-    )
-    if n_edges == 0:
-        return spark.createDataFrame([], out_schema)
-    ids, asrc, adst, outdeg, dang = _pagerank_driver_arrays(e0)
-    n = len(ids)
-    od_src = outdeg[asrc].astype(np.float64)
-    r = np.full(n, 1.0 / n, dtype=np.float64)
-    for _ in range(iterations):
-        d_mass = float(r[dang].sum())
-        c = r[asrc] / od_src
-        agg = np.zeros(n, dtype=np.float64)
-        np.add.at(agg, adst, c)
-        r = ((1.0 - damping) / n + damping * d_mass / float(n)) + damping * agg
-    return spark.createDataFrame(
-        pd.DataFrame({"node": ids, "rank": r}), out_schema
+        pd.DataFrame({"node": ids, rank_col: ranks}), schema
     )
 
 
@@ -225,8 +163,22 @@ def pagerank(
     out-edges. Ranks sum to 1 every iteration (asserted in tests).
     """
     e0, m = _pagerank_edges(edges, src_col, dst_col)
-    if m <= _PR_DRIVER_MAX_EDGES:
-        out = _pagerank_float_driver(e0, m, iterations, damping)
+    if driver_small_path("pagerank", m):
+        # float sums differ from the distributed loop only in IEEE
+        # summation order (rows-only by contract, rtol-1e-9 fixtures)
+        def solve(n, asrc, adst, outdeg, dang):
+            import numpy as np
+
+            od_src = outdeg[asrc].astype(np.float64)
+            r = np.full(n, 1.0 / n, dtype=np.float64)
+            for _ in range(iterations):
+                agg = np.zeros(n, dtype=np.float64)
+                np.add.at(agg, adst, r[asrc] / od_src)
+                r = ((1.0 - damping) / n + damping * float(r[dang].sum()) / n
+                     + damping * agg)
+            return r
+
+        out = _pagerank_driver(e0, m, "rank", "double", solve)
         e0.unpersist()
         return out
     e2, base, n, loop_sp, cleanup = _pagerank_setup(e0, m)
@@ -298,8 +250,23 @@ def pagerank_fixedpoint(
     Overflow headroom: rank ≤ scale = 1e12, ×85 ≈ 8.5e13 ≪ 2^63.
     """
     e0, m = _pagerank_edges(edges, src_col, dst_col)
-    if m <= _PR_DRIVER_MAX_EDGES:
-        out = _pagerank_fp_driver(e0, m, iterations, scale)
+    if driver_small_path("pagerank_fixedpoint", m):
+        # int64 floor divisions and order-free integer sums: the numpy
+        # replay is BIT-IDENTICAL to the distributed loop (pinned by test)
+        def solve(n, asrc, adst, outdeg, dang):
+            import numpy as np
+
+            od_src = outdeg[asrc]
+            base = (15 * scale) // (100 * n)
+            r = np.full(n, scale // n, dtype=np.int64)
+            for _ in range(iterations):
+                d_mass = int(r[dang].sum())  # total mass ≤ scale
+                agg = np.zeros(n, dtype=np.int64)
+                np.add.at(agg, adst, (85 * r[asrc]) // (100 * od_src))
+                r = base + (85 * d_mass) // (100 * n) + agg
+            return r
+
+        out = _pagerank_driver(e0, m, "rank_fp", "bigint", solve)
         e0.unpersist()
         return out
     e2, nbase, n, loop_sp, cleanup = _pagerank_setup(e0, m)

@@ -10,7 +10,7 @@ cover the cases AQE can't fix:
   * ``replicate_join_skewed`` — hot join keys with a non-broadcastable but
     bounded right side: salt the left, replicate the right per salt.
   * ``hot_bucket_salted_join`` — the ADAPTIVE form for bucketed self-joins
-    (LSH bands, sign buckets): only keys a broadcast hot-set marks are
+    (LSH bands, sign buckets): only keys the collected hot set marks are
     salted, with a per-key slice count, because AQE's skew-join splits by
     partition BYTES while a quadratic within-bucket compare is
     COMPUTE-skewed at tiny byte sizes (a ~1 MB bucket of 50k slim rows is
@@ -24,6 +24,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from apache_flink_essentials_spark.session import log_gate
 
 
 def salted_agg(
@@ -73,37 +75,45 @@ def replicate_join_skewed(
     return l.join(r, on=[key, "_salt"], how="inner").drop("_salt")
 
 
+# The salting gate, defined once for every hot-bucket join: a key is hot
+# when more than SALT_THRESHOLD ``a`` rows share it, and a hot key gets
+# ceil(n_k / SALT_THRESHOLD) slices, at most SALT_MAX_SLICES.
+SALT_THRESHOLD = 4096
+SALT_MAX_SLICES = 64
+
+
 def hot_bucket_salted_join(
     a: DataFrame,
     b: DataFrame,
     key: str,
     id_a: str = "id_a",
-    threshold: int = 4096,
-    max_slices: int = 64,
     max_inline_hot: int = 64,
 ) -> DataFrame:
     """Self-band-join ``a ⋈ b ON key`` with deterministic salting of hot
     band buckets only. ``a`` must carry one row per corpus element — its
-    per-key counts define the hot set (count > ``threshold``), which is
-    aggregate-sized by construction (≤ corpus/threshold keys). Hot keys
-    get ``S_k = ceil(n_k/threshold) ≤ max_slices`` slices: ``a`` rows
-    take slice ``pmod(xxhash64(id_a), S_k)``, ``b`` rows replicate
-    across all ``S_k`` slices; cold keys keep salt 0 and zero
-    replication. Every (a, b) row combination meets in exactly one
+    per-key counts define the hot set (count > `SALT_THRESHOLD`), which
+    is aggregate-sized by construction (≤ corpus/threshold keys). Hot
+    keys get ``S_k = ceil(n_k/SALT_THRESHOLD) ≤ SALT_MAX_SLICES``
+    slices: ``a`` rows take slice ``pmod(xxhash64(id_a), S_k)``, ``b``
+    rows replicate across all ``S_k`` slices; cold keys keep salt 0 and
+    zero replication. Every (a, b) row combination meets in exactly one
     slice, so join output is identical to the unsalted form — only the
     task-level distribution of the quadratic compare changes.
 
-    Self-funding at low skew (r13, the r12 verdict's one regression):
-    the hot set is COLLECTED up front (one bounded aggregate job — the
-    same aggregate the broadcast build ran anyway) and the plan adapts:
+    Self-funding at low skew: the hot set is COLLECTED up front (one
+    aggregate job over ``a`` — the only one: the broadcast form below
+    ships the collected rows, it never re-runs the aggregate) and the
+    plan adapts, logging its choice as the ``salt_join`` gate
+    (`session.log_gate`: hot keys vs ``max_inline_hot``):
 
       * no hot keys (the common case): the plain unsalted equi-join —
         zero salt columns, zero extra joins in the plan;
       * ≤ ``max_inline_hot`` hot keys: the per-key slice counts inline
         as ONE map literal (an O(|hot|) lookup per row — trivial at the
         64-key cap), still no join against the hot set;
-      * more (a pathologically hot corpus): the broadcast-join form,
-        which never collects more than ``max_inline_hot + 1`` rows here.
+      * more (a pathologically hot corpus): the collected hot set joins
+        back as a broadcast relation (a broadcast holds it on the driver
+        anyway, so the collect adds no driver memory).
     """
     hot = (
         # null keys never survive the equi-join, and a null map key would
@@ -111,18 +121,25 @@ def hot_bucket_salted_join(
         a.filter(F.col(key).isNotNull())
         .groupBy(key)
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > threshold)
+        .filter(F.col("_n") > SALT_THRESHOLD)
         .select(
             key,
             F.least(
-                F.ceil(F.col("_n") / F.lit(threshold)), F.lit(max_slices)
+                F.ceil(F.col("_n") / F.lit(SALT_THRESHOLD)),
+                F.lit(SALT_MAX_SLICES),
             ).cast("int").alias("_slices"),
         )
     )
-    hot_rows = hot.limit(max_inline_hot + 1).collect()
-    if not hot_rows:
+    hot_rows = hot.collect()
+    path = (
+        "plain" if not hot_rows
+        else "inline" if len(hot_rows) <= max_inline_hot
+        else "broadcast"
+    )
+    log_gate("salt_join", len(hot_rows), max_inline_hot, path)
+    if path == "plain":
         return a.join(b, on=key)
-    if len(hot_rows) <= max_inline_hot:
+    if path == "inline":
         mapping = F.create_map(
             *[
                 lit
@@ -130,47 +147,26 @@ def hot_bucket_salted_join(
                 for lit in (F.lit(r[0]), F.lit(int(r[1])))
             ]
         )
-        sl_a = F.element_at(mapping, F.col(key))
-        a2 = a.withColumn(
-            "_salt",
+        a2 = a.withColumn("_slices", F.element_at(mapping, F.col(key)))
+        b2 = b.withColumn("_slices", F.element_at(mapping, F.col(key)))
+    else:
+        hot = F.broadcast(a.sparkSession.createDataFrame(hot_rows, hot.schema))
+        a2 = a.join(hot, on=key, how="left")
+        b2 = b.join(hot, on=key, how="left")
+    slices = F.col("_slices")
+    a2 = a2.withColumn(
+        "_salt",
+        F.when(
+            slices.isNotNull(),
+            F.pmod(F.xxhash64(F.col(id_a)), slices).cast("int"),
+        ).otherwise(F.lit(0)),
+    ).drop("_slices")
+    b2 = b2.withColumn(
+        "_salt",
+        F.explode(
             F.when(
-                sl_a.isNotNull(),
-                F.pmod(F.xxhash64(F.col(id_a)), sl_a).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        sl_b = F.element_at(mapping, F.col(key))
-        b2 = b.withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    sl_b.isNotNull(),
-                    F.sequence(F.lit(0), sl_b - F.lit(1)),
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        return a2.join(b2, on=[key, "_salt"]).drop("_salt")
-    a2 = (
-        a.join(F.broadcast(hot), on=key, how="left")
-        .withColumn(
-            "_salt",
-            F.when(
-                F.col("_slices").isNotNull(),
-                F.pmod(F.xxhash64(F.col(id_a)), F.col("_slices")).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_slices")
-    )
-    b2 = (
-        b.join(F.broadcast(hot), on=key, how="left")
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_slices").isNotNull(),
-                    F.sequence(F.lit(0), F.col("_slices") - F.lit(1)),
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("_slices")
-    )
+                slices.isNotNull(), F.sequence(F.lit(0), slices - F.lit(1))
+            ).otherwise(F.array(F.lit(0)))
+        ),
+    ).drop("_slices")
     return a2.join(b2, on=[key, "_salt"]).drop("_salt")

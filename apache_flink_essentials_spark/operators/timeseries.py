@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.session import driver_small_path
+
 
 def bucket_expr(ts_col: str, step_s: int) -> Column:
     """Epoch-second bucket start: floor(epoch/step)*step as BIGINT —
@@ -644,13 +646,6 @@ def _micro_means(binned: DataFrame) -> DataFrame:
     )
 
 
-# pair count above which theilsen_from_binned ranks with the distributed
-# two-phase global_row_number instead of a single-task window (2M rows in
-# one sort task is ms-scale; module-level so tests can lower it to pin
-# two-path equivalence without generating 2M pairs)
-_THEILSEN_SMALL_PAIRS = 2_000_000
-
-
 def theilsen_from_binned(binned: DataFrame) -> DataFrame:
     """Theil-Sen robust trend over a finished ``binned_sums`` relation →
     ONE row ``(n_bins, n_pairs, slope_micro_per_bin)``: the MEDIAN of
@@ -676,8 +671,9 @@ def theilsen_from_binned(binned: DataFrame) -> DataFrame:
     of data) so the scan-agg runs ONCE instead of once per join side,
     and so the pair count is known at the driver. The median rank
     strategy is then chosen on the ACTUAL pair count, not a file-size
-    proxy: ≤2M pairs → a plain single-task window (ms-scale, and any
-    two-phase plan is strictly more jobs); above that the pair fanout
+    proxy: at most `session.DRIVER_MAX_ROWS` pairs (the ``theilsen``
+    gate) → the median in numpy on the driver (ms-scale, and any
+    distributed plan is strictly more jobs); above that the pair fanout
     is spread over ``defaultParallelism`` slices and ranked by the
     two-phase ``global_row_number`` (range partition + broadcast
     offsets — never a 38M-row single task, which is what the earlier
@@ -686,37 +682,31 @@ def theilsen_from_binned(binned: DataFrame) -> DataFrame:
     a total order.
     """
     spark = binned.sparkSession
-    small_pairs = _THEILSEN_SMALL_PAIRS
     m_rows = sorted(
         (int(r["bin"]), int(r["m"]))
         for r in _micro_means(binned).collect()
     )
     n_bins = len(m_rows)
     n_pairs = n_bins * (n_bins - 1) // 2
-    if n_bins == 0:
-        return spark.createDataFrame(
-            [],
-            "n_bins long, n_pairs long, slope_micro_per_bin double",
-        )
     # middle rank(s): odd N -> the single (N+1) div 2; even N -> both
     # N div 2 and N div 2 + 1 (their fixed-order average is the median)
     r_lo = (n_pairs + 1) // 2
     r_hi = n_pairs // 2 + 1
     if n_pairs == 0:
-        # one bin → no pairs → zero rows (the grouped-form contract)
+        # zero or one bin → no pairs → zero rows (the grouped-form contract)
         return spark.createDataFrame(
             [],
             "n_bins long, n_pairs long, slope_micro_per_bin double",
         )
-    if n_pairs <= small_pairs:
+    if driver_small_path("theilsen", n_pairs):
         # SMALL path: the bins are ALREADY on the driver (the collect
         # above — aggregate-sized, the codebook-collect justification),
-        # so the ≤2M-pair median is pure local arithmetic; shipping it
+        # so the bounded-pair median is pure local arithmetic; shipping it
         # back through Spark costs a full extra job (+literal-array
         # analysis) for work numpy finishes in ~20 ms. This is exactly
         # what the single-node oracle engine does, and the adaptive
         # gate keeps everything distributed the moment the pair table
-        # outgrows the driver (>2M pairs → explode + two-phase rank).
+        # outgrows one loop partition (→ explode + two-phase rank).
         import numpy as np
 
         bins_arr = np.array([b for b, _ in m_rows], dtype=np.int64)

@@ -19,6 +19,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.operators.skew import hot_bucket_salted_join
+from apache_flink_essentials_spark.session import driver_small_path
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double precision, left-to-right fold (deterministic)."""
@@ -164,12 +167,8 @@ def cosine_pairs_blocked(
         F.col(vec_col).alias("vec_b"),
         F.col("norm").alias("norm_b"),
     )
-    from .skew import hot_bucket_salted_join
-
     scored = (
-        hot_bucket_salted_join(
-            a, b, block_col, id_a="id_a", threshold=_VEC_SALT_THRESHOLD
-        )
+        hot_bucket_salted_join(a, b, block_col, id_a="id_a")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
             block_col,
@@ -1032,14 +1031,6 @@ def _ann_lsh_cosine_arrow(
     )
 
 
-# hot-bucket salting threshold for the embedding-dedup self-join: vector
-# rows are WIDE (~8·dim bytes), so replication is costlier per row than in
-# the simhash joins — but each within-bucket compare is a dim-length dot
-# product, so the single-task stall arrives at much SMALLER buckets too.
-# Module-level so tests can force the salted path on small fixtures.
-_VEC_SALT_THRESHOLD = 4096
-
-
 def embedding_dedup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.99,
@@ -1116,12 +1107,8 @@ def embedding_dedup_pairs(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"),
         "bucket", F.col("_norm").alias("_nb"),
     )
-    from .skew import hot_bucket_salted_join
-
     scored = (
-        hot_bucket_salted_join(
-            a, b, "bucket", id_a="id_a", threshold=_VEC_SALT_THRESHOLD
-        )
+        hot_bucket_salted_join(a, b, "bucket", id_a="id_a")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
@@ -1227,12 +1214,8 @@ def embedding_dedup_with_buckets(
         f"{_bucket_sql(vec_col, num_planes, dim)} AS bucket",
         f"{_safe_norm_sql(vec_col)} AS _nb",
     )
-    from .skew import hot_bucket_salted_join
-
     matched = (
-        hot_bucket_salted_join(
-            corp, newb, "bucket", id_a="id_a", threshold=_VEC_SALT_THRESHOLD
-        )
+        hot_bucket_salted_join(corp, newb, "bucket", id_a="id_a")
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
             "id_b",
@@ -1733,13 +1716,6 @@ def mmr_diversify(
     return candidates.groupBy(query_col).applyInPandas(pick, out_schema)
 
 
-# Sim-table row bound for the driver-side greedy MMR selection (see
-# mmr_diversify_exact): candidate lists are request-sized by contract
-# (|Q|·k² sim rows), so the bound exists only to keep the distributed
-# unroll available for a pathological caller. 1M slim rows ≈ 32 MB.
-_MMR_DRIVER_MAX_SIM_ROWS = 1_000_000
-
-
 def _mmr_greedy_driver(
     cand: DataFrame,
     sims: DataFrame,
@@ -1861,7 +1837,8 @@ def mmr_diversify_exact(
     corpus quadratic), then the k-step greedy selection. The selection is
     inherently sequential and runs over the tiny (candidate-sized)
     relations only, so when the materialized sim table is at or below
-    `_MMR_DRIVER_MAX_SIM_ROWS` it is pulled to the driver and the greedy
+    `session.DRIVER_MAX_ROWS` (the ``mmr`` gate; |Q|·k² rows are
+    request-sized by contract) it is pulled to the driver and the greedy
     loop runs in plain Python over the SAME JVM-computed rounded sims —
     every arithmetic step (lam·rel − (1−lam)·max_sim on IEEE doubles,
     argmax by (score desc, id asc)) is identical, so scores are
@@ -1901,7 +1878,7 @@ def mmr_diversify_exact(
     )
 
     n_sims = sims.count()  # cheap: counts the materialized checkpoint
-    if n_sims <= _MMR_DRIVER_MAX_SIM_ROWS:
+    if driver_small_path("mmr", n_sims):
         out = _mmr_greedy_driver(
             cand, sims, k, lam, one_minus, query_col, id_col
         )

@@ -4,7 +4,8 @@ Covers the reference's execution-environment surface (SURVEY §2.7):
 ``StreamExecutionEnvironment.getExecutionEnvironment`` (reference
 ``DataStreams.scala:12``) maps to a configured ``SparkSession``. Parallelism
 knobs (``setParallelism``, ``DataStreams.scala:62``) map to
-``spark.sql.shuffle.partitions`` + AQE.
+``spark.sql.shuffle.partitions`` + AQE. The driver small-path gate
+(`driver_small_path`) and the gate log live here too.
 
 Scale posture: these defaults are tuned so the SAME logical plans scale from
 local[32] tests to a 1000-executor cluster — AQE handles runtime partition
@@ -14,6 +15,7 @@ only a starting hint that AQE resizes from actual map-output statistics.
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
@@ -24,6 +26,30 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # Rows per shuffle partition inside the iterative graph loops (connected
 # components, PageRank): ~2M slim rows ≈ 32 MB per partition.
 LOOP_ROWS_PER_PARTITION = 2_000_000
+
+# The driver small-path bound shared by every size-adaptive operator
+# (connected components, both PageRanks, exact MMR, Theil-Sen): at or
+# below one loop partition the distributed form runs in ONE task anyway,
+# paying per-job scheduling floors for single-machine work, so the
+# operator collects its (bounded) input and solves it on the driver.
+DRIVER_MAX_ROWS = LOOP_ROWS_PER_PARTITION
+
+# One line per adaptive-gate decision: gate, rows, bound, path taken.
+GATE_LOG = logging.getLogger("apache_flink_essentials_spark.gates")
+
+
+def log_gate(gate: str, rows: int, bound: int, path: str) -> None:
+    """Record one adaptive-gate decision on `GATE_LOG` (INFO level)."""
+    GATE_LOG.info("gate %s: rows=%d bound=%d path=%s", gate, rows, bound, path)
+
+
+def driver_small_path(gate: str, rows: int) -> bool:
+    """True when an operator should solve its ``rows``-row input on the
+    driver (``rows <= DRIVER_MAX_ROWS``); logs the decision. ``rows`` is
+    a count the caller has already measured, so the gate costs no job."""
+    small = rows <= DRIVER_MAX_ROWS
+    log_gate(gate, rows, DRIVER_MAX_ROWS, "driver" if small else "distributed")
+    return small
 
 
 def get_spark(

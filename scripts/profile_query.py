@@ -13,7 +13,9 @@ runs when *executed*. A record holds build time, jobs and shuffle bytes;
 Catalyst's analysis, optimization and planning times; execution time,
 jobs, stages and tasks; exchanges, codegen stages and Python-eval nodes of
 the executed (post-AQE) plan, with the bytes of each exchange; and the
-session's ``cpus``. Counters come from ``perfbench/spans.py`` and keep its
+session's ``cpus``; and ``gates``, the adaptive-gate decisions
+(``session.GATE_LOG``: driver small path, salting) logged while the
+query was built. Counters come from ``perfbench/spans.py`` and keep its
 names. Where a DuckDB oracle exists, its time (same warm-up, min of four)
 is the ``oracle_s`` column.
 
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import math
 import os
 import sys
@@ -92,12 +95,27 @@ def collect_exchanges(plan) -> list[dict]:
     return found
 
 
+class _GateRecorder(logging.Handler):
+    """Keeps each gate decision logged on ``session.GATE_LOG`` as a dict."""
+
+    def __init__(self):
+        super().__init__()
+        self.decisions: list[dict] = []
+
+    def emit(self, record):
+        self.decisions.append(dict(zip(("gate", "rows", "bound", "path"), record.args)))
+
+
 class Profiler:
     """Runs registry queries on ``spark`` and reads back what each run did."""
 
     def __init__(self, spark):
         from apache_flink_essentials_spark import registry
+        from apache_flink_essentials_spark.session import GATE_LOG
 
+        self.gates = _GateRecorder()
+        GATE_LOG.addHandler(self.gates)
+        GATE_LOG.setLevel(logging.INFO)
         self.spark = spark
         self.queries = registry.QUERIES
         self.capture = QueryExecutionCapture(spark)
@@ -112,9 +130,11 @@ class Profiler:
         self.spark.sparkContext.setJobGroup(name, name)
         status.drain()
         before = status.job_ids(name)
+        self.gates.decisions = []
         t0 = time.perf_counter()
         df = self.queries[name](self.spark, fixture)
         build_s = time.perf_counter() - t0
+        gates = self.gates.decisions.copy()
         status.drain()
         build_ids = status.job_ids(name) - before
         self.capture.events.clear()
@@ -142,6 +162,7 @@ class Profiler:
             **plan_counts(plan.toString()),
             **stage_counters(b_jobs, status.jobs(exec_ids)),
             "exchanges": collect_exchanges(plan),
+            "gates": gates,
         }
 
     def profile(self, name: str, fixture: str, plans: str | None = None) -> dict:

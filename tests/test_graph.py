@@ -122,29 +122,3 @@ def test_degree_distribution_dedups_multi_edges(spark):
     assert out[("src", 2)] == 1 and out[("src", 1)] == 2
     # in-degrees: 10 <- 2 (deduped), 11 <- 1, 12 <- 1
     assert out[("dst", 2)] == 1 and out[("dst", 1)] == 2
-
-
-def test_pagerank_fixedpoint_driver_path_equals_distributed(spark, monkeypatch):
-    # the driver small path must be BIT-identical to the distributed loop
-    # (integer fixed-point arithmetic is order-free) — adversarial shape:
-    # dangling nodes, a cycle, a hub, duplicate edges
-    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 5), (5, 4), (1, 2),
-             (6, 7), (7, 8), (3, 9), (9, 9)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    small = {(r.node, r.rank_fp)
-             for r in G.pagerank_fixedpoint(df, iterations=5).collect()}
-    monkeypatch.setattr(G, "_PR_DRIVER_MAX_EDGES", -1)
-    dist = {(r.node, r.rank_fp)
-            for r in G.pagerank_fixedpoint(df, iterations=5).collect()}
-    assert small == dist and small
-
-
-def test_pagerank_float_driver_path_equals_distributed(spark, monkeypatch):
-    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (5, 5), (6, 7)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    small = {r.node: r.rank for r in G.pagerank(df, iterations=6).collect()}
-    monkeypatch.setattr(G, "_PR_DRIVER_MAX_EDGES", -1)
-    dist = {r.node: r.rank for r in G.pagerank(df, iterations=6).collect()}
-    assert small.keys() == dist.keys()
-    for k in small:  # float sums differ only in IEEE summation order
-        assert small[k] == pytest.approx(dist[k], rel=1e-12)

@@ -1,5 +1,6 @@
 """The per-query profiler sees the jobs a query runs while its DataFrame is
-built, not only the jobs of the plan it returns."""
+built, not only the jobs of the plan it returns, and the adaptive-gate
+decisions that build made."""
 
 from __future__ import annotations
 
@@ -21,3 +22,5 @@ def test_profile_splits_build_and_execution_jobs(spark):
     assert rec["registry.build_shuffle_bytes"] > 0
     assert rec["operators.jobs"] >= 1
     assert rec["cpus"] == len(os.sched_getaffinity(0))
+    # the record names the adaptive gates its build decided
+    assert [g["path"] for g in rec["gates"] if g["gate"] == "cc"] == ["driver"]

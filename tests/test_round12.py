@@ -1,5 +1,5 @@
-"""Round-12 additions: Theil-Sen distributed-rank path equivalence and
-the tightened global-window walker interplay (fanout-above-aggregate is
+"""Round-12 additions: the Theil-Sen single-bin contract and the
+tightened global-window walker interplay (fanout-above-aggregate is
 covered in test_plans.py::test_walker_catches_pair_fanout_above_aggregate).
 """
 
@@ -17,25 +17,6 @@ def _mk_events(spark, vals):
         ],
         "ts timestamp, value double",
     )
-
-
-def test_theilsen_two_path_equivalence(spark, monkeypatch):
-    # the distributed (two-phase global_row_number) rank path must return
-    # BIT-identical results to the single-task window path — same total
-    # order, same middle-rank pick. Lower the gate so 36 bins (630
-    # pairs) takes the distributed branch instead of generating 2M+.
-    from apache_flink_essentials_spark.operators import timeseries as TS
-
-    vals = [3.0 * i + 7.0 + (50.0 if i == 11 else 0.0) for i in range(36)]
-    df = _mk_events(spark, vals)
-    small = TS.theilsen_trend(df, "ts", "value").collect()
-    monkeypatch.setattr(TS, "_THEILSEN_SMALL_PAIRS", 10)
-    big = TS.theilsen_trend(df, "ts", "value").collect()
-    assert [r.asDict() for r in small] == [r.asDict() for r in big]
-    assert small[0]["n_bins"] == 36
-    assert small[0]["n_pairs"] == 36 * 35 // 2
-    # outlier-resistant: the single spiked bin must not drag the median
-    assert abs(small[0]["slope_micro_per_bin"] - 3_000_000.0) < 1e-6
 
 
 def test_theilsen_single_bin_yields_empty(spark):
@@ -340,34 +321,3 @@ def test_shuffle_audit_reads_real_exchange_metrics(spark):
     plan2.execute().count()
     kinds = {e["kind"] for e in collect_exchanges(plan2)}
     assert "broadcast" in kinds
-
-
-def test_cc_driver_small_path_equals_distributed(spark, monkeypatch):
-    # r12 optimization: edge sets at/below _CC_DRIVER_MAX_EDGES are solved
-    # on the driver (vectorized min-label propagation). Pin that the small
-    # path and the distributed star rounds produce the IDENTICAL relation
-    # on adversarial shapes: a long chain (worst case for propagation), a
-    # star, duplicate/reversed edges, self-loops, and disjoint pairs.
-    from apache_flink_essentials_spark.operators import dedup as D
-
-    rows = (
-        [(i, i + 1) for i in range(40)]          # chain 0..40
-        + [(100, x) for x in (101, 102, 103)]    # star
-        + [(102, 100), (101, 100)]               # reversed dups
-        + [(200, 200)]                           # self-loop (dropped)
-        + [(300, 301), (302, 303)]               # disjoint pairs
-    )
-    df = spark.createDataFrame(rows, "id_a long, id_b long")
-    small = sorted(map(tuple, D.connected_components(df).collect()))
-    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", -1)  # force star rounds
-    big = sorted(map(tuple, D.connected_components(df).collect()))
-    assert small == big and small
-    # chain collapses to min id 0; star to 100; pairs to their min
-    comp = dict(small)
-    assert comp[40] == 0 and comp[103] == 100 and comp[303] == 302
-    assert 200 not in comp  # self-loops contribute no component
-
-    # empty-edge relation: both paths return an empty (node, component)
-    empty = spark.createDataFrame([], "id_a long, id_b long")
-    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 2_000_000)
-    assert D.connected_components(empty).count() == 0

@@ -1,12 +1,15 @@
 """Skew utilities + bucketed-table co-located joins (SCALING.md items)."""
 
+import logging
 
 from pyspark.sql import functions as F
 
+from apache_flink_essentials_spark.operators import skew as SK
 from apache_flink_essentials_spark.operators.skew import (
     replicate_join_skewed,
     salted_agg,
 )
+from apache_flink_essentials_spark.session import GATE_LOG
 
 
 def test_salted_agg_matches_plain_agg(spark, events):
@@ -126,3 +129,33 @@ def test_replicate_join_skewed_equals_plain_join(spark, events):
     a = sorted(map(tuple, rep.select("event_id", "type_tag").collect()))
     b = sorted(map(tuple, plain.select("event_id", "type_tag").collect()))
     assert a == b
+
+
+def test_hot_bucket_salted_join_evaluates_hot_aggregate_once(
+    spark, monkeypatch, caplog
+):
+    # broadcast branch (more than max_inline_hot hot keys): the hot-key
+    # aggregate over `a` runs once, for the gating collect, and the
+    # broadcast side ships the collected rows — `a` is read once more,
+    # as the join side, never again for the aggregate
+    monkeypatch.setattr(SK, "SALT_THRESHOLD", 2)
+    caplog.set_level(logging.INFO, logger=GATE_LOG.name)
+    reads = spark.sparkContext.accumulator(0)
+
+    def read(bucket):
+        reads.add(1)
+        return bucket
+
+    counted = F.udf(read, "long").asNondeterministic()
+    rows = [(i, i % 5) for i in range(60)]
+    a = spark.createDataFrame(rows, "id_a long, bucket long").select(
+        "id_a", counted("bucket").alias("bucket")
+    )
+    b = spark.createDataFrame(rows, "id_b long, bucket long")
+    out = SK.hot_bucket_salted_join(a, b, "bucket", max_inline_hot=1)
+    assert reads.value == 60
+    assert out.count() == 5 * 12 * 12
+    assert reads.value == 120
+    assert [
+        r.getMessage() for r in caplog.records if r.args[0] == "salt_join"
+    ] == ["gate salt_join: rows=5 bound=1 path=broadcast"]

@@ -1,0 +1,149 @@
+"""Driver small paths ≡ their distributed paths.
+
+Connected components, both PageRanks, exact MMR and Theil-Sen each solve
+inputs at or below `session.DRIVER_MAX_ROWS` on the driver. Every test
+here runs an operator on its default (driver) path, forces the
+distributed path by patching that one bound, and requires the same
+result."""
+
+import datetime
+import logging
+
+import pytest
+
+from apache_flink_essentials_spark import session as S
+from apache_flink_essentials_spark.operators import dedup as D
+from apache_flink_essentials_spark.operators import graph as G
+from apache_flink_essentials_spark.operators import timeseries as TS
+from apache_flink_essentials_spark.operators import vector as V
+
+
+def test_cc_driver_small_path_equals_distributed(spark, monkeypatch):
+    # edge sets at/below the bound are solved on the driver (vectorized
+    # min-label propagation). Pin that the small path and the distributed
+    # star rounds produce the IDENTICAL relation on adversarial shapes: a
+    # long chain (worst case for propagation), a star, duplicate/reversed
+    # edges, self-loops, and disjoint pairs.
+    rows = (
+        [(i, i + 1) for i in range(40)]          # chain 0..40
+        + [(100, x) for x in (101, 102, 103)]    # star
+        + [(102, 100), (101, 100)]               # reversed dups
+        + [(200, 200)]                           # self-loop (dropped)
+        + [(300, 301), (302, 303)]               # disjoint pairs
+    )
+    df = spark.createDataFrame(rows, "id_a long, id_b long")
+    small = sorted(map(tuple, D.connected_components(df).collect()))
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", -1)  # force star rounds
+    big = sorted(map(tuple, D.connected_components(df).collect()))
+    assert small == big and small
+    # chain collapses to min id 0; star to 100; pairs to their min
+    comp = dict(small)
+    assert comp[40] == 0 and comp[103] == 100 and comp[303] == 302
+    assert 200 not in comp  # self-loops contribute no component
+
+    # empty-edge relation: both paths return an empty (node, component)
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 2_000_000)
+    assert D.connected_components(empty).count() == 0
+
+
+def test_cc_gate_decision_is_logged(spark, monkeypatch, caplog):
+    caplog.set_level(logging.INFO, logger=S.GATE_LOG.name)
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7)], "id_a long, id_b long"
+    )
+
+    def cc_lines():
+        lines = [r.getMessage() for r in caplog.records if r.args[0] == "cc"]
+        caplog.clear()
+        return lines
+
+    D.connected_components(df).collect()
+    assert cc_lines() == ["gate cc: rows=5 bound=2000000 path=driver"]
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", -1)
+    D.connected_components(df).collect()
+    assert cc_lines() == ["gate cc: rows=5 bound=-1 path=distributed"]
+
+
+def test_pagerank_fixedpoint_driver_path_equals_distributed(spark, monkeypatch):
+    # the driver small path must be BIT-identical to the distributed loop
+    # (integer fixed-point arithmetic is order-free) — adversarial shape:
+    # dangling nodes, a cycle, a hub, duplicate edges
+    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 5), (5, 4), (1, 2),
+             (6, 7), (7, 8), (3, 9), (9, 9)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    small = {(r.node, r.rank_fp)
+             for r in G.pagerank_fixedpoint(df, iterations=5).collect()}
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", -1)
+    dist = {(r.node, r.rank_fp)
+            for r in G.pagerank_fixedpoint(df, iterations=5).collect()}
+    assert small == dist and small
+
+
+def test_pagerank_float_driver_path_equals_distributed(spark, monkeypatch):
+    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (5, 5), (6, 7)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    small = {r.node: r.rank for r in G.pagerank(df, iterations=6).collect()}
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", -1)
+    dist = {r.node: r.rank for r in G.pagerank(df, iterations=6).collect()}
+    assert small.keys() == dist.keys()
+    for k in small:  # float sums differ only in IEEE summation order
+        assert small[k] == pytest.approx(dist[k], rel=1e-12)
+
+
+def test_mmr_exact_driver_path_equals_distributed(spark, monkeypatch):
+    # the driver-side greedy (default at test sizes) must be bit-identical
+    # to the distributed unroll — force the unroll by disabling the driver
+    # gate and compare every (query, rank, id, mmr_score), tie cases
+    # included
+    rows = [
+        (1, 10, [1.0, 0.0, 0.0], 0.95),
+        (1, 11, [0.999, 0.01, 0.0], 0.94),
+        (1, 12, [0.0, 1.0, 0.0], 0.80),
+        (1, 13, [0.0, 0.9, 0.4], 0.70),
+        (1, 7, [0.0, 0.9, 0.4], 0.70),   # duplicate vector+score tie
+        (2, 20, [1.0, 0.0, 0.0], 0.9),
+        (2, 21, [0.0, 0.0, 1.0], 0.9),   # rank-1 score tie
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "query_id long, neighbor_id long, embedding array<double>, cosine double",
+    )
+    driver = sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.mmr_score)
+        for r in V.mmr_diversify_exact(df, k=4, lam=0.5).collect()
+    )
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", -1)
+    unrolled = sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.mmr_score)
+        for r in V.mmr_diversify_exact(df, k=4, lam=0.5).collect()
+    )
+    assert driver == unrolled and driver
+
+
+def _mk_events(spark, vals):
+    t0 = datetime.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [
+            (t0 + datetime.timedelta(hours=i), float(v))
+            for i, v in enumerate(vals)
+        ],
+        "ts timestamp, value double",
+    )
+
+
+def test_theilsen_two_path_equivalence(spark, monkeypatch):
+    # the distributed (two-phase global_row_number) rank path must return
+    # BIT-identical results to the driver path — same total order, same
+    # middle-rank pick. Lower the bound so 36 bins (630 pairs) takes the
+    # distributed branch instead of generating 2M+.
+    vals = [3.0 * i + 7.0 + (50.0 if i == 11 else 0.0) for i in range(36)]
+    df = _mk_events(spark, vals)
+    small = TS.theilsen_trend(df, "ts", "value").collect()
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 10)
+    big = TS.theilsen_trend(df, "ts", "value").collect()
+    assert [r.asDict() for r in small] == [r.asDict() for r in big]
+    assert small[0]["n_bins"] == 36
+    assert small[0]["n_pairs"] == 36 * 35 // 2
+    # outlier-resistant: the single spiked bin must not drag the median
+    assert abs(small[0]["slope_micro_per_bin"] - 3_000_000.0) < 1e-6

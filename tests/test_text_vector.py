@@ -575,45 +575,11 @@ def test_mmr_exact_rank1_tiebreak_and_k_truncation(spark):
     assert [(r.rank, r.neighbor_id) for r in out] == [(1, 3)]
 
 
-def test_mmr_exact_driver_path_equals_distributed(spark, monkeypatch):
-    # the driver-side greedy (default at test sizes) must be bit-identical
-    # to the distributed unroll — force the unroll by disabling the driver
-    # gate and compare every (query, rank, id, mmr_score), tie cases
-    # included (r12 advisory: the docstring claimed this pin existed)
-    import apache_flink_essentials_spark.operators.vector as VV
-
-    rows = [
-        (1, 10, [1.0, 0.0, 0.0], 0.95),
-        (1, 11, [0.999, 0.01, 0.0], 0.94),
-        (1, 12, [0.0, 1.0, 0.0], 0.80),
-        (1, 13, [0.0, 0.9, 0.4], 0.70),
-        (1, 7, [0.0, 0.9, 0.4], 0.70),   # duplicate vector+score tie
-        (2, 20, [1.0, 0.0, 0.0], 0.9),
-        (2, 21, [0.0, 0.0, 1.0], 0.9),   # rank-1 score tie
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "query_id long, neighbor_id long, embedding array<double>, cosine double",
-    )
-    driver = sorted(
-        (r.query_id, r.rank, r.neighbor_id, r.mmr_score)
-        for r in V.mmr_diversify_exact(df, k=4, lam=0.5).collect()
-    )
-    monkeypatch.setattr(VV, "_MMR_DRIVER_MAX_SIM_ROWS", -1)
-    unrolled = sorted(
-        (r.query_id, r.rank, r.neighbor_id, r.mmr_score)
-        for r in V.mmr_diversify_exact(df, k=4, lam=0.5).collect()
-    )
-    assert driver == unrolled and driver
-
-
-def test_hot_bucket_salted_join_broadcast_fallback_unchanged(spark):
+def test_hot_bucket_salted_join_broadcast_fallback_unchanged(spark, monkeypatch):
     # >max_inline_hot hot keys routes through the broadcast-join form —
     # pin its output against the plain join (r13: the inline-map and
-    # empty-hot paths are pinned by the forced-salting tests above)
-    from apache_flink_essentials_spark.operators.skew import (
-        hot_bucket_salted_join,
-    )
+    # empty-hot paths are pinned by the forced-salting tests below)
+    import apache_flink_essentials_spark.operators.skew as SK
 
     rows = [(i, i % 5) for i in range(60)]
     df = spark.createDataFrame(rows, "id_a long, bucket long")
@@ -622,10 +588,11 @@ def test_hot_bucket_salted_join_broadcast_fallback_unchanged(spark):
         (r.bucket, r.id_a, r.id_b)
         for r in df.join(right, "bucket").collect()
     }
+    monkeypatch.setattr(SK, "SALT_THRESHOLD", 2)
     salted = {
         (r.bucket, r.id_a, r.id_b)
-        for r in hot_bucket_salted_join(
-            df, right, "bucket", threshold=2, max_inline_hot=1
+        for r in SK.hot_bucket_salted_join(
+            df, right, "bucket", max_inline_hot=1
         ).collect()
     }
     assert salted == plain and plain
@@ -1430,11 +1397,11 @@ def test_simhash_bit_sliced_guards(spark):
         D.simhash(big).collect()
 
 
-def test_simhash_salted_band_join_pairs_unchanged(spark, docs, monkeypatch):
+def test_simhash_hot_bucket_salting_pairs_unchanged(spark, docs, monkeypatch):
     # force EVERY multi-doc band bucket through the hot-bucket salting
     # path (threshold 1) — the pair set and per-doc bests must be
     # byte-identical to the unsalted plan
-    import apache_flink_essentials_spark.operators.dedup as DD
+    import apache_flink_essentials_spark.operators.skew as SK
 
     base_pairs = {
         (r.id_a, r.id_b, r.hamming)
@@ -1444,7 +1411,7 @@ def test_simhash_salted_band_join_pairs_unchanged(spark, docs, monkeypatch):
         (r.doc_id, r.best_match_id, r.best_hamming)
         for r in D.simhash_best_match(docs).collect()
     }
-    monkeypatch.setattr(DD, "_SALT_BUCKET_THRESHOLD", 1)
+    monkeypatch.setattr(SK, "SALT_THRESHOLD", 1)
     salted_pairs = {
         (r.id_a, r.id_b, r.hamming)
         for r in D.simhash_dup_pairs(docs).collect()
@@ -1509,7 +1476,7 @@ def test_embedding_dedup_salted_bucket_join_unchanged(spark, monkeypatch):
     # identical vectors share a bucket at any plane count; force every
     # multi-vector bucket through the salted path and require identical
     # pair output
-    import apache_flink_essentials_spark.operators.vector as VV
+    import apache_flink_essentials_spark.operators.skew as SK
 
     rows = [(i, [float((i * 7 + j * 3) % 5) - 2.0 for j in range(8)]) for i in range(40)]
     rows += [(100 + i, rows[i][1]) for i in range(10)]  # planted exact dups
@@ -1518,7 +1485,7 @@ def test_embedding_dedup_salted_bucket_join_unchanged(spark, monkeypatch):
         (r.id_a, r.id_b, r.cosine)
         for r in V.embedding_dedup_pairs(df, dim=8).collect()
     }
-    monkeypatch.setattr(VV, "_VEC_SALT_THRESHOLD", 1)
+    monkeypatch.setattr(SK, "SALT_THRESHOLD", 1)
     salted = {
         (r.id_a, r.id_b, r.cosine)
         for r in V.embedding_dedup_pairs(df, dim=8).collect()
@@ -1555,7 +1522,7 @@ def test_embedding_dedup_incremental_prebuilt_equals_inline(spark):
 
 
 def test_cosine_pairs_blocked_salted_unchanged(spark, monkeypatch):
-    import apache_flink_essentials_spark.operators.vector as VV
+    import apache_flink_essentials_spark.operators.skew as SK
 
     rows = [
         (i, "blk%d" % (i % 3), [float((i * 11 + j) % 6) - 2.5 for j in range(8)])
@@ -1566,7 +1533,7 @@ def test_cosine_pairs_blocked_salted_unchanged(spark, monkeypatch):
         (r.id_a, r.id_b, r.cosine)
         for r in V.cosine_pairs_blocked(df, "label", 0.2).collect()
     }
-    monkeypatch.setattr(VV, "_VEC_SALT_THRESHOLD", 1)
+    monkeypatch.setattr(SK, "SALT_THRESHOLD", 1)
     salted = {
         (r.id_a, r.id_b, r.cosine)
         for r in V.cosine_pairs_blocked(df, "label", 0.2).collect()
