@@ -294,7 +294,9 @@ def chunk_documents(
     if overlap >= max_tokens:
         raise ValueError("overlap must be < max_tokens")
     stride = max_tokens - overlap
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    from .text import tokens_expr
+
+    toks = tokens_expr(text_col)
     n = F.size(toks)
     # last chunk start: largest multiple of stride < n (and ≥ 0)
     last_start = F.greatest(
@@ -609,10 +611,7 @@ def contrastive_pairs(
         probes = anchors.select(
             "anchor_id",
             F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(n_neg)),
-                    lambda j: (F.col("_rn") - 1 + j) % F.col("_n") + 1,
-                )
+                F.expr(f"transform(sequence(1, {n_neg}), j -> (_rn - 1 + j) % _n + 1)")
             ).alias("_target_rn"),
         )
         negs = probes.join(

@@ -23,8 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.functions import sql_ident
 from apache_flink_essentials_spark.operators.skew import hot_bucket_salted_join
-from apache_flink_essentials_spark.operators.text import tokens_expr
+from apache_flink_essentials_spark.operators.text import tokens_expr, tokens_sql
 from apache_flink_essentials_spark.session import (
     driver_small_path,
     loop_conf,
@@ -86,23 +87,20 @@ def shingles_expr(text_col: str = "text", k: int = 3) -> Column:
     subexpression elimination across the lambda boundary — the same
     O(tokens²) pathology measured in repetition_stats), while top-level
     slices of the token array are CSE'd to one tokenization per row."""
-    toks = tokens_expr(text_col)
-    n = F.size(toks)
-    width = n - k + 1
-    zipped = F.slice(toks, 1, width)
+    toks = tokens_sql(text_col)
+    n = f"size({toks})"
+    width = f"{n} - {k} + 1"
+    zipped = f"slice({toks}, 1, {width})"
     for j in range(2, k + 1):
-        zipped = F.zip_with(
-            zipped, F.slice(toks, j, width), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.when(
-        n >= k, F.array_distinct(zipped)
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+        zipped = (f"zip_with({zipped}, slice({toks}, {j}, {width}), "
+                  "(a, b) -> concat_ws(' ', a, b))")
+    return F.expr(f"CASE WHEN {n} >= {k} THEN array_distinct({zipped}) "
+                  f"ELSE array(concat_ws(' ', {toks})) END")
 
 
-def hashed_shingles_expr(shingles: Column, seed: int) -> Column:
-    """One md5 per shingle per seed (binds seed via factory — a 2-arg lambda
-    would be interpreted by transform() as (element, index))."""
-    return F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s)))
+def hashed_shingles_expr(shingles_col: str, seed: int) -> Column:
+    """One md5 per shingle of column ``shingles_col`` per seed."""
+    return F.expr(f"transform({sql_ident(shingles_col)}, s -> md5(concat('{seed}:', s)))")
 
 
 def minhash_from_hashed(hashed_col: str, chunk: int) -> Column:
@@ -111,9 +109,8 @@ def minhash_from_hashed(hashed_col: str, chunk: int) -> Column:
     FOUR hash functions — 4× fewer digest computations than hashing per
     function. Lexicographic min over fixed-width lowercase hex ≡ numeric min
     — portable across engines."""
-    return F.array_min(
-        F.transform(F.col(hashed_col), lambda h: F.substring(h, chunk * 8 + 1, 8))
-    )
+    return F.expr(f"array_min(transform({sql_ident(hashed_col)}, "
+                  f"h -> substring(h, {chunk * 8 + 1}, 8)))")
 
 
 def _tok_bands(
@@ -124,15 +121,23 @@ def _tok_bands(
     bands: int,
     shingle_k: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared MinHash signature pipeline: (id, tok_set, shingles) base frame
-    plus the exploded (id, band_idx, band_hash) frame. Every stage narrow;
-    the repartition spreads the md5-heavy signature work across cores (a
-    single small parquet file would otherwise serialize it on one task)."""
+    """Shared MinHash signature pipeline: the (id, tok_set, mh0..mh{n-1})
+    signature frame plus the exploded (id, band_idx, band_hash) frame.
+    Every stage narrow; the repartition spreads the md5-heavy signature
+    work across cores (a single small parquet file would otherwise
+    serialize it on one task).
+
+    Null ids are dropped BEFORE the repartition: they join no candidate
+    (``collect_list`` skips them, the join-back drops them), and the
+    join-back's inferred ``isnotnull(id)`` filter is pushed below the
+    repartition on that side only — without the explicit filter the two
+    sides shuffle the same documents through two different exchanges
+    instead of one reused exchange."""
     assert num_hashes % 4 == 0 and num_hashes // 4 >= 1
     num_seeds = num_hashes // 4
     rows_per_band = num_hashes // bands
     spark = df.sparkSession
-    base = df.repartition(
+    base = df.filter(F.col(id_col).isNotNull()).repartition(
         spark.sparkContext.defaultParallelism, F.col(id_col)
     ).select(
         F.col(id_col),
@@ -142,10 +147,7 @@ def _tok_bands(
     hashed = base.select(
         id_col,
         "tok_set",
-        *[
-            hashed_shingles_expr(F.col("shingles"), s).alias(f"h{s}")
-            for s in range(num_seeds)
-        ],
+        *[hashed_shingles_expr("shingles", s).alias(f"h{s}") for s in range(num_seeds)],
     )
     sig = hashed.select(
         id_col,
@@ -156,17 +158,63 @@ def _tok_bands(
         ],
     )
     band_cols = [
-        F.md5(F.concat_ws("|", *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)])).alias(f"band{b}")
+        F.expr("md5(concat_ws('|', " + ", ".join(
+            f"mh{b * rows_per_band + r}" for r in range(rows_per_band)) + "))").alias(f"band{b}")
         for b in range(bands)
     ]
     banded = sig.select(F.col(id_col), *band_cols)
     exploded = banded.select(
         F.col(id_col),
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
+        F.expr(f"posexplode(array({', '.join(f'band{b}' for b in range(bands))}))").alias(
             "band_idx", "band_hash"
         ),
     )
-    return base, exploded
+    return sig, exploded
+
+
+# exact Jaccard of the candidate sides' distinct-token sets
+_TOKEN_JACCARD = "size(array_intersect(tok_a, tok_b)) / size(array_union(tok_a, tok_b))"
+
+
+def _lsh_candidates(
+    exploded: DataFrame,
+    sides: DataFrame,
+    id_col: str,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of every band bucket of ``exploded``,
+    each side's ``sides`` columns joined back in (column ``c`` arrives as
+    ``c_a`` and ``c_b``).
+
+    ONE groupBy (band_idx, band_hash) shuffle of (id, band) tuples, then
+    all id<id pairs generated WITHIN each bucket (posexplode + slice —
+    JVM-side, no Python): the only pairwise step, confined to same-bucket
+    docs. A bucket of more than ``max_bucket_size`` ids is dropped."""
+    buckets = (
+        exploded.groupBy("band_idx", "band_hash")
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
+    # all i<j pairs within a bucket: anchor row per position, slice() the
+    # sorted tail — streams pairs without materializing an m² array
+    candidates = (
+        buckets.select(F.posexplode("ids").alias("i", "id_a"), F.col("ids"))
+        .select(
+            "id_a",
+            F.explode(F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))).alias("id_b"),
+        )
+        .distinct()
+    )
+    cols = [c for c in sides.columns if c != id_col]
+    for side in ("a", "b"):
+        candidates = candidates.join(
+            sides.select(F.col(id_col).alias(f"id_{side}"),
+                         *[F.col(c).alias(f"{c}_{side}") for c in cols]),
+            on=f"id_{side}",
+        )
+    return candidates
 
 
 def minhash_lsh_pairs(
@@ -214,44 +262,17 @@ def minhash_lsh_pairs(
         pairs; cap with ``max_bucket_size`` (oversized buckets are almost
         always boilerplate better handled by exact_dedup first)
     """
-    base, exploded = _tok_bands(
+    sig, exploded = _tok_bands(
         df, id_col, text_col, num_hashes, bands, shingle_k
     )
-    buckets = (
-        exploded.groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
+    verified = _lsh_candidates(
+        exploded, sig.select(id_col, F.col("tok_set").alias("tok")), id_col, max_bucket_size
     )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    # all i<j pairs within a bucket: anchor row per position, slice() the
-    # sorted tail — streams pairs without materializing an m² array
-    candidates = (
-        buckets.select(F.posexplode("ids").alias("i", "id_a"), F.col("ids"))
-        .select(
-            "id_a",
-            F.explode(F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))).alias("id_b"),
-        )
-        .distinct()
-    )
-    tok_sets = base.select(F.col(id_col), F.col("tok_set"))
-    verified = (
-        candidates.join(
-            tok_sets.select(F.col(id_col).alias("id_a"), F.col("tok_set").alias("tok_a")),
-            on="id_a",
-        )
-        .join(
-            tok_sets.select(F.col(id_col).alias("id_b"), F.col("tok_set").alias("tok_b")),
-            on="id_b",
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b")))
-    union = F.size(F.array_union(F.col("tok_a"), F.col("tok_b")))
     # NO rounding: int/int division of identical operands is bit-identical
     # across engines, while decimal-string rounding (Spark) vs binary-scaled
     # rounding (DuckDB) DISAGREE on exact-boundary rationals like 1923/1920
     return (
-        verified.withColumn("jaccard", inter / union)
+        verified.withColumn("jaccard", F.expr(_TOKEN_JACCARD))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -540,7 +561,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits:
     # trip per lambda literal.
     if bits != 32:
         raise ValueError("simhash bit-sliced fold is specified for bits=32")
-    toks_sql = rf"array_distinct(split(lower(`{text_col}`), '\\s+'))"
+    toks_sql = f"array_distinct({tokens_sql(text_col)})"
     mask_sql = (
         "cast(conv(translate(md5(t), '02468ace13579bdf', "
         "'0000000011111111'), 2, 10) as bigint)"
@@ -1439,12 +1460,8 @@ def substring_dup_spans(
         id_col,
         F.size("_toks").alias("n_tokens"),
         F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("_toks") - k),
-                lambda i: F.md5(
-                    F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, k))
-                ),
-            )
+            F.expr(f"transform(sequence(0, size(_toks) - {k}), "
+                   f"i -> md5(concat_ws(' ', slice(_toks, i + 1, {k}))))")
         ).alias("pos", "gram_fp"),
     )
     dup_grams = (
@@ -1767,17 +1784,8 @@ def paragraph_dedup_docs(
             F.sum(F.col("kept").cast("long")).alias("n_kept"),
             F.concat_ws(
                 sep_out,
-                F.transform(
-                    F.filter(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct("para_idx", "paragraph", "kept")
-                            )
-                        ),
-                        lambda s: s["kept"],
-                    ),
-                    lambda s: s["paragraph"],
-                ),
+                F.expr("transform(filter(array_sort(collect_list("
+                       "struct(para_idx, paragraph, kept))), s -> s.kept), s -> s.paragraph)"),
             ).alias("retained_text"),
         )
     )
@@ -1849,105 +1857,20 @@ def minhash_estimate_pairs(
     exact jaccard >= 0.5 OR estimate >= 0.5 (both sides of the
     estimator's error are interesting).
     """
-    assert num_hashes % 4 == 0
-    num_seeds = num_hashes // 4
-    rows_per_band = num_hashes // bands
-    spark = df.sparkSession
-    base = df.repartition(
-        spark.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(
-        F.col(id_col),
-        F.array_distinct(tokens_expr(text_col)).alias("tok_set"),
-        shingles_expr(text_col, shingle_k).alias("shingles"),
-    )
-    hashed = base.select(
+    sig, exploded = _tok_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
+    joined = _lsh_candidates(exploded, sig.select(
         id_col,
-        "tok_set",
-        *[
-            hashed_shingles_expr(F.col("shingles"), s).alias(f"h{s}")
-            for s in range(num_seeds)
-        ],
-    )
-    sig = hashed.select(
-        id_col,
-        "tok_set",
-        F.array(
-            *[
-                minhash_from_hashed(f"h{i // 4}", i % 4)
-                for i in range(num_hashes)
-            ]
-        ).alias("sig"),
-    )
-    banded = sig.select(
-        F.col(id_col),
-        "tok_set",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    buckets = (
-        banded.select(id_col, "band_idx", "band_hash")
-        .groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    candidates = (
-        buckets.select(F.posexplode("ids").alias("i", "id_a"), F.col("ids"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
-    sides = sig.select(F.col(id_col), "tok_set", "sig")
-    joined = candidates.join(
-        sides.select(
-            F.col(id_col).alias("id_a"),
-            F.col("tok_set").alias("tok_a"),
-            F.col("sig").alias("sig_a"),
-        ),
-        "id_a",
-    ).join(
-        sides.select(
-            F.col(id_col).alias("id_b"),
-            F.col("tok_set").alias("tok_b"),
-            F.col("sig").alias("sig_b"),
-        ),
-        "id_b",
-    )
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("sig_a"),
-            F.col("sig_b"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b")))
-    union = F.size(F.array_union(F.col("tok_a"), F.col("tok_b")))
+        F.col("tok_set").alias("tok"),
+        F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig"),
+    ), id_col)
+    agree = F.expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
+                   "0, (n, v) -> n + v)")
     return (
         joined.select(
             "id_a",
             "id_b",
             (agree / F.lit(num_hashes)).alias("est_jaccard"),
-            (inter / union).alias("jaccard"),
+            F.expr(_TOKEN_JACCARD).alias("jaccard"),
         )
         .filter((F.col("jaccard") >= 0.5) | (F.col("est_jaccard") >= 0.5))
         .select("id_a", "id_b", "est_jaccard", "jaccard")

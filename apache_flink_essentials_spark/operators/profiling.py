@@ -288,12 +288,8 @@ def expect(
         # structs orders by the native field, then we project the string.
         return reports.join(
             samples.groupBy("rule").agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("_native_id", "example_id"))
-                    ),
-                    lambda x: x["example_id"],
-                ).alias("examples")
+                F.expr("transform(array_sort(collect_list(struct(_native_id, example_id))), "
+                       "x -> x.example_id)").alias("examples")
             ),
             "rule",
             "left",

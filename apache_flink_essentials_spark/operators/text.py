@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.functions import sql_ident, sql_in, sql_str
+
 # Tiny deterministic stopword inventories — enough for ratio features and a
 # stopword-overlap language heuristic (the real thing would be a fastText
 # model behind mapInPandas; heuristic keeps it dependency-free + oracle-able).
@@ -34,9 +36,28 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
+_WHITESPACE = sql_str(r"\s+")
+
+
+def tokens_sql(text_col: str = "text") -> str:
+    """Whitespace tokenization of lower-cased text → array<string>, as SQL
+    text: THE tokenization, for SQL higher-order-function expressions."""
+    return f"split(lower({sql_ident(text_col)}), {_WHITESPACE})"
+
+
 def tokens_expr(text_col: str = "text") -> Column:
-    """Whitespace tokenization of lower-cased text → array<string>."""
-    return F.split(F.lower(F.col(text_col)), r"\s+")
+    """`tokens_sql` as a Column."""
+    return F.expr(tokens_sql(text_col))
+
+
+def _stopword_hits_expr(text_col: str) -> Column:
+    """Tokens of ``text_col`` that are `STOPWORDS_EN` entries (with repeats)."""
+    return F.expr(f"size(filter({tokens_sql(text_col)}, t -> {sql_in('t', STOPWORDS_EN)}))")
+
+
+def _token_chars_expr(text_col: str) -> Column:
+    """Total characters over the tokens of ``text_col`` (bigint)."""
+    return F.expr(f"aggregate({tokens_sql(text_col)}, 0L, (acc, t) -> acc + length(t))")
 
 
 def bpe_ish_tokens_expr(text_col: str = "text") -> Column:
@@ -65,10 +86,8 @@ def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     toks = tokens_expr(text_col)
     n_tokens = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS_EN)))
-    total_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
+    stop_hits = _stopword_hits_expr(text_col)
+    total_len = _token_chars_expr(text_col)
     return df.select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
@@ -86,7 +105,7 @@ def quality_score_expr(text_col: str = "text") -> Column:
     toks = tokens_expr(text_col)
     n_tokens = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS_EN)))
+    stop_hits = _stopword_hits_expr(text_col)
     length_component = F.least(F.lit(1.0), n_tokens / F.lit(100.0))
     diversity = n_distinct / n_tokens
     stop_presence = F.least(F.lit(1.0), stop_hits / F.lit(5.0))
@@ -702,7 +721,7 @@ def bm25_rank(
     docs = df.select(
         F.col(id_col),
         F.size(toks).alias("dl"),
-        F.filter(toks, lambda t: t.isin(query_terms)).alias("_qt"),
+        F.expr(f"filter({tokens_sql(text_col)}, t -> {sql_in('t', query_terms)})").alias("_qt"),
     ).localCheckpoint(eager=False)
     scalars = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -803,7 +822,7 @@ def winnow_fingerprints(
             min_partitions=df.sparkSession.sparkContext.defaultParallelism,
             min_task_bytes=1 << 14,
         )
-        .selectExpr(qid, rf"split(lower(`{text_col}`), '\\s+') AS _toks")
+        .selectExpr(qid, f"{tokens_sql(text_col)} AS _toks")
         .filter(f"size(_toks) >= {k + w - 1}")
     )
     hashed = base.selectExpr(
@@ -1281,6 +1300,9 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 GOPHER_BULLETS = ["-", "*", "•", "‣"]
 
+_NEWLINE = sql_str(r"\n")
+_ELLIPSIS_END = sql_str(r"(\.\.\.|…)\s*$")
+
 
 def _gopher_exprs(
     text_col: str = "text",
@@ -1300,9 +1322,7 @@ def _gopher_exprs(
     SAME columns without re-deriving them."""
     toks = tokens_expr(text_col)
     n_words = F.size(toks)
-    total_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
+    total_len = _token_chars_expr(text_col)
     mean_word_len = total_len / n_words
     # '#' occurrences + '...' occurrences, counted by length difference
     # (integer arithmetic — portable); '…' counts as an ellipsis symbol too
@@ -1317,16 +1337,12 @@ def _gopher_exprs(
         F.regexp_replace(F.col(text_col), "…", "")
     )
     symbol_ratio = (hash_cnt + ell_cnt + uni_ell_cnt) / n_words
-    lines = F.split(F.col(text_col), r"\n")
-    n_lines = F.size(lines)
+    lines_sql = f"split({sql_ident(text_col)}, {_NEWLINE})"
+    n_lines = F.expr(f"size({lines_sql})")
     bullet_re = "^[\\s]*[" + "".join(GOPHER_BULLETS) + "]"
-    n_bullet = F.size(
-        F.filter(lines, lambda ln: ln.rlike(bullet_re))
-    )
-    n_ellipsis_end = F.size(
-        F.filter(lines, lambda ln: ln.rlike(r"(\.\.\.|…)\s*$"))
-    )
-    n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]")))
+    n_bullet = F.expr(f"size(filter({lines_sql}, ln -> ln rlike {sql_str(bullet_re)}))")
+    n_ellipsis_end = F.expr(f"size(filter({lines_sql}, ln -> ln rlike {_ELLIPSIS_END}))")
+    n_alpha = F.expr(f"size(filter({tokens_sql(text_col)}, t -> t rlike '[a-zA-Z]'))")
     stop_hits = F.size(
         F.array_intersect(
             F.array_distinct(toks),
@@ -1441,19 +1457,12 @@ def hash_classifier_score(
     half = n_weights // 2
     toks = tokens_expr(text_col)
 
-    def tok_weight(t: Column) -> Column:
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
-            F.lit(n_buckets),
-        )
-        return F.pmod(bucket * F.lit(2654435761), F.lit(n_weights)) - F.lit(half)
-
+    bucket = f"pmod(CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT), {n_buckets})"
+    tok_weight = f"pmod({bucket} * 2654435761, {n_weights}) - {half}"
     out = df.select(
         F.col(id_col),
         F.size(toks).cast("bigint").alias("n_tokens"),
-        F.aggregate(
-            toks, F.lit(0).cast("bigint"), lambda acc, t: acc + tok_weight(t)
-        ).alias("_sw"),
+        F.expr(f"aggregate({tokens_sql(text_col)}, 0L, (acc, t) -> acc + ({tok_weight}))").alias("_sw"),
     ).select(
         F.col(id_col),
         F.col("n_tokens"),
@@ -1514,6 +1523,9 @@ def novelty_stats(
 RAKE_STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
 
 
+_PHRASE_BREAK = sql_str(r"\s*\|\s*")
+
+
 def rake_keyphrases(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1553,19 +1565,10 @@ def rake_keyphrases(
         min_task_bytes=1 << 14,
     )
     qid = F.col(id_col)
-    marked = F.transform(
-        tokens_expr(text_col),
-        lambda t: F.when(t.isin(*stopwords), F.lit("|")).otherwise(t),
-    )
-    phrases = F.array_distinct(
-        F.filter(
-            F.transform(
-                F.split(F.array_join(marked, " "), r"\s*\|\s*"),
-                lambda p: F.trim(p),
-            ),
-            lambda p: p != "",
-        )
-    )
+    marked = (f"transform({tokens_sql(text_col)}, "
+              f"t -> CASE WHEN {sql_in('t', stopwords)} THEN '|' ELSE t END)")
+    phrases = F.expr(f"array_distinct(filter(transform(split(array_join({marked}, ' '), "
+                     f"{_PHRASE_BREAK}), p -> trim(p)), p -> p != ''))")
     pw = (
         df.select(qid, F.explode(phrases).alias("phrase"))
         .select(qid, F.col("phrase"), F.split("phrase", " ").alias("_ws"))
@@ -1900,23 +1903,12 @@ def flesch_reading_ease(
     per row inside whole-stage codegen; nothing joins, nothing
     aggregates. Runs at scan speed at any size.
     """
-    toks = F.array_remove(tokens_expr(text_col), "")
-    n_words = F.size(toks)
-    n_sent = F.greatest(
-        F.size(
-            F.filter(
-                F.split(F.col(text_col), r"[.!?]+"),
-                lambda s: F.trim(s) != "",
-            )
-        ),
-        F.lit(1),
-    )
-    n_syll = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc
-        + F.size(F.regexp_extract_all(t, F.lit("[aeiouy]+"), 0)),
-    )
+    toks = f"array_remove({tokens_sql(text_col)}, '')"
+    n_words = F.expr(f"size({toks})")
+    n_sent = F.expr(f"greatest(size(filter(split({sql_ident(text_col)}, '[.!?]+'), "
+                    "s -> trim(s) != '')), 1)")
+    n_syll = F.expr(f"aggregate({toks}, 0L, "
+                    "(acc, t) -> acc + size(regexp_extract_all(t, '[aeiouy]+', 0)))")
     out = df.select(
         F.col(id_col),
         n_words.cast("long").alias("n_words"),

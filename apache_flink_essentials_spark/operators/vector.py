@@ -19,25 +19,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.functions import sql_ident
 from apache_flink_essentials_spark.operators.skew import hot_bucket_salted_join
 from apache_flink_essentials_spark.session import driver_small_path
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ in double precision, left-to-right fold (deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def dot_expr(a: str, b: str) -> Column:
+    """Σ aᵢ·bᵢ over array columns ``a`` and ``b`` in double precision,
+    left-to-right fold (deterministic)."""
+    return F.expr(_dot_sql(sql_ident(a), sql_ident(b)))
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`dot_expr` — the same fold parsed in ONE
-    py4j call. Use when an expression embeds many float literals (plane /
-    centroid tables): building those through the Column API costs a py4j
-    round trip per literal, which at 8×64 literals is more driver time
-    than the query's execution."""
+    """:func:`dot_expr` over SQL expressions ``a`` and ``b``, as SQL text —
+    parsed in ONE py4j call. Every vector fold is SQL text: building one
+    through the Column API costs a py4j round trip per node and per
+    float literal, which at 8×64 literals is more driver time than the
+    query's execution."""
     return (
         f"aggregate(zip_with({a}, {b},"
         " (x, y) -> cast(x as double) * cast(y as double)),"
@@ -57,32 +55,34 @@ def _sq_dist_sql(a: str, center: list[float]) -> str:
     )
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
+def _norm_sql(v: str) -> str:
+    return f"sqrt({_dot_sql(v, v)})"
 
 
-def safe_norm_expr(a: Column) -> Column:
-    """L2 norm with 0 mapped to 1, so dividing by it leaves zero vectors
-    unchanged — the exact expression twin of the Arrow paths'
-    ``n[n == 0] = 1.0`` guard (keeps the documented arrow≡expression
+def safe_norm_expr(a: str) -> Column:
+    """L2 norm of array column ``a`` with 0 mapped to 1, so dividing by it
+    leaves zero vectors unchanged — the exact expression twin of the Arrow
+    paths' ``n[n == 0] = 1.0`` guard (keeps the documented arrow≡expression
     equality on corpora that contain zero vectors)."""
-    return F.coalesce(F.nullif(norm_expr(a), F.lit(0.0)), F.lit(1.0))
+    return F.expr(_safe_norm_sql(sql_ident(a)))
 
 
 def _safe_norm_sql(v: str) -> str:
-    """SQL-string twin of :func:`safe_norm_expr` — the norm every
+    """:func:`safe_norm_expr` over SQL expression ``v`` — the norm every
     cosine-search SQL path divides by. A zero vector (a real artifact:
     padding rows, failed embedder calls) must score cosine 0 and sink
     to the bottom of the ranking, not raise ANSI DIVIDE_BY_ZERO and
     kill the whole search."""
     return (
-        f"coalesce(nullif(sqrt({_dot_sql(v, v)}), cast(0.0 as double)),"
+        f"coalesce(nullif({_norm_sql(v)}, cast(0.0 as double)),"
         " cast(1.0 as double))"
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+def cosine_expr(a: str, b: str) -> Column:
+    """Cosine of array columns ``a`` and ``b``."""
+    qa, qb = sql_ident(a), sql_ident(b)
+    return F.expr(f"{_dot_sql(qa, qb)} / ({_norm_sql(qa)} * {_norm_sql(qb)})")
 
 
 def knn_cosine_bruteforce(
@@ -153,7 +153,7 @@ def cosine_pairs_blocked(
         F.col(block_col),
         F.col(id_col),
         F.col(vec_col),
-        safe_norm_expr(F.col(vec_col)).alias("norm"),  # per-row, pre-join
+        safe_norm_expr(vec_col).alias("norm"),  # per-row, pre-join
     )
     a = base.select(
         F.col(block_col),
@@ -175,7 +175,7 @@ def cosine_pairs_blocked(
             "id_a",
             "id_b",
             F.round(
-                dot_expr(F.col("vec_a"), F.col("vec_b")) / (F.col("norm_a") * F.col("norm_b")),
+                dot_expr("vec_a", "vec_b") / (F.col("norm_a") * F.col("norm_b")),
                 round_dp,
             ).alias("cosine"),
         )
@@ -752,7 +752,7 @@ def ann_lsh_cosine(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("q_vec"), F.col("n_vec")), round_dp).alias("cosine"),
+            F.round(cosine_expr("q_vec", "n_vec"), round_dp).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -909,7 +909,7 @@ def ivf_search(
     indexed = assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("n_vec"),
-        safe_norm_expr(F.col(vec_col)).alias("n_norm"),
+        safe_norm_expr(vec_col).alias("n_norm"),
         "cluster_id",
     )
     # probe selection as ONE parsed SQL string (see _dot_sql): the
@@ -936,7 +936,7 @@ def ivf_search(
         "query_id",
         "neighbor_id",
         F.round(
-            dot_expr(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")),
+            dot_expr("q_vec", "n_vec") / (F.col("q_norm") * F.col("n_norm")),
             round_dp,
         ).alias("cosine"),
     )
@@ -1020,7 +1020,7 @@ def _ann_lsh_cosine_arrow(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("q_vec"), F.col("n_vec")), round_dp).alias("cosine"),
+            F.round(cosine_expr("q_vec", "n_vec"), round_dp).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -1114,7 +1114,7 @@ def embedding_dedup_pairs(
             "id_a",
             "id_b",
             F.round(
-                dot_expr(F.col("vec_a"), F.col("vec_b"))
+                dot_expr("vec_a", "vec_b")
                 / (F.col("_na") * F.col("_nb")),
                 6,
             ).alias("cosine"),
@@ -1220,7 +1220,7 @@ def embedding_dedup_with_buckets(
         .select(
             "id_b",
             F.round(
-                dot_expr(F.col("vec_a"), F.col("vec_b"))
+                dot_expr("vec_a", "vec_b")
                 / (F.col("_na") * F.col("_nb")),
                 6,
             ).alias("cosine"),
@@ -1279,22 +1279,13 @@ def quantize_int8_stats(
     defined to quantize to all-zero (guarded, no 0/0).
     """
     staged = _quant_staged(df, [F.col(id_col)], vec_col)
-    q = _quant_codes_col()
-    scale = F.col("_scale")
     return staged.select(
         F.col(id_col),
-        scale.alias("scale"),
-        F.aggregate(
-            q, F.lit(0.0), lambda acc, v: acc + v * v
-        ).cast("long").alias("qnorm2"),
-        (
-            F.aggregate(
-                F.zip_with(F.col("_vd"), q, lambda x, qi: (x - qi * scale) ** 2),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            / F.size(F.col("_vd"))
-        ).alias("mse"),
+        F.col("_scale").alias("scale"),
+        F.expr(f"CAST(aggregate({_QUANT_CODES}, 0D, (acc, v) -> acc + v * v) AS BIGINT)")
+        .alias("qnorm2"),
+        F.expr(f"aggregate(zip_with(_vd, {_QUANT_CODES}, (x, qi) -> power(x - qi * _scale, 2)), "
+               "0D, (acc, v) -> acc + v) / size(_vd)").alias("mse"),
     )
 
 
@@ -1306,28 +1297,23 @@ def _quant_staged(df: DataFrame, keep: list, vec_col: str) -> DataFrame:
     lambda-CSE rule in SCALING.md, third sighting). Column references
     inside a lambda are plain attribute reads; CollapseProject keeps the
     stage because the scale is non-cheap and multiply-referenced."""
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.select(*keep, vd.alias("_vd")).withColumn(
-        "_scale", F.array_max(F.transform(F.col("_vd"), F.abs)) / F.lit(127.0)
+    return df.select(*keep, _doubles_expr(vec_col).alias("_vd")).withColumn(
+        "_scale", F.expr("array_max(transform(_vd, x -> abs(x))) / 127D")
     )
 
 
-def _quant_codes_col() -> Column:
-    """int8 code array (as doubles, exact integers) over the staged
-    ``_vd``/``_scale`` columns; scales cancel in cosine so codes alone
-    suffice for scoring."""
-    scale = F.col("_scale")
-    return F.when(
-        scale == 0, F.transform(F.col("_vd"), lambda _: F.lit(0.0))
-    ).otherwise(
-        F.transform(
-            F.col("_vd"),
-            lambda x: F.greatest(
-                F.lit(-127.0),
-                F.least(F.lit(127.0), F.floor(x / scale + F.lit(0.5)).cast("double")),
-            ),
-        )
-    )
+# int8 code array (as doubles, exact integers) over the staged
+# ``_vd``/``_scale`` columns; scales cancel in cosine so codes alone
+# suffice for scoring
+_QUANT_CODES = (
+    "CASE WHEN _scale = 0 THEN transform(_vd, x -> 0D) "
+    "ELSE transform(_vd, x -> greatest(-127D, least(127D, CAST(floor(x / _scale + 0.5D) AS DOUBLE)))) END"
+)
+
+
+def _doubles_expr(vec_col: str) -> Column:
+    """Array column ``vec_col`` with every element cast to double."""
+    return F.expr(f"transform({sql_ident(vec_col)}, x -> CAST(x AS DOUBLE))")
 
 
 def knn_cosine_quantized(
@@ -1358,12 +1344,12 @@ def knn_cosine_quantized(
         embeddings, [F.col(id_col).alias("neighbor_id")], vec_col
     ).select(
         "neighbor_id",
-        _quant_codes_col().alias("_qe"),
-    ).withColumn("_e_norm", safe_norm_expr(F.col("_qe")))
+        F.expr(_QUANT_CODES).alias("_qe"),
+    ).withColumn("_e_norm", safe_norm_expr("_qe"))
     qry = _quant_staged(
         queries, [F.col(id_col).alias("query_id")], vec_col
-    ).select("query_id", _quant_codes_col().alias("_qq")).withColumn(
-        "_q_norm", safe_norm_expr(F.col("_qq"))
+    ).select("query_id", F.expr(_QUANT_CODES).alias("_qq")).withColumn(
+        "_q_norm", safe_norm_expr("_qq")
     )
     scored = (
         emb.join(F.broadcast(qry))
@@ -1372,7 +1358,7 @@ def knn_cosine_quantized(
             "query_id",
             "neighbor_id",
             F.round(
-                dot_expr(F.col("_qq"), F.col("_qe"))
+                dot_expr("_qq", "_qe")
                 / (F.col("_q_norm") * F.col("_e_norm")),
                 round_dp,
             ).alias("cosine"),
@@ -1423,11 +1409,9 @@ def centroid_outliers(
         )
     )
     centroids = comps.groupBy(group_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("centroid")
+        F.expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").alias("centroid")
     )
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec_d = _doubles_expr(vec_col)
     return (
         df.select(F.col(id_col), F.col(group_col), vec_d.alias("_v"))
         .join(F.broadcast(centroids), group_col)
@@ -1435,7 +1419,7 @@ def centroid_outliers(
             F.col(id_col),
             F.col(group_col),
             F.round(
-                cosine_expr(F.col("_v"), F.col("centroid")), round_digits
+                cosine_expr("_v", "centroid"), round_digits
             ).alias("cosine_to_centroid"),
         )
     )
@@ -1497,7 +1481,7 @@ def semantic_dedup(
         F.col(id_col),
         F.col(vec_col),
         "cluster_id",
-        safe_norm_expr(F.col(vec_col)).alias("_norm"),
+        safe_norm_expr(vec_col).alias("_norm"),
     )
     a = assigned.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"),
@@ -1515,7 +1499,7 @@ def semantic_dedup(
             "id_a",
             "id_b",
             F.round(
-                dot_expr(F.col("vec_a"), F.col("vec_b"))
+                dot_expr("vec_a", "vec_b")
                 / (F.col("_na") * F.col("_nb")),
                 6,
             ).alias("cosine"),
@@ -1858,7 +1842,7 @@ def mmr_diversify_exact(
         F.col(id_col).alias("cid"),
         F.col(score_col).cast("double").alias("rel"),
         F.col(vec_col).alias("_v"),
-        safe_norm_expr(F.col(vec_col)).alias("_n"),
+        safe_norm_expr(vec_col).alias("_n"),
     ).localCheckpoint(eager=True)
     a = cand.select("q", F.col("cid").alias("ia"), F.col("_v").alias("va"),
                     F.col("_n").alias("na"))
@@ -1869,7 +1853,7 @@ def mmr_diversify_exact(
         .select(
             "q", "ia", "ib",
             F.round(
-                dot_expr(F.col("va"), F.col("vb"))
+                dot_expr("va", "vb")
                 / (F.col("na") * F.col("nb")),
                 round_dp,
             ).alias("sim"),
@@ -1963,22 +1947,22 @@ def knn_cosine_matryoshka(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         prefix.alias("q_pre"),
-    ).withColumn("q_pre_norm", safe_norm_expr(F.col("q_pre"))).withColumn(
-        "q_norm", safe_norm_expr(F.col("q_vec"))
+    ).withColumn("q_pre_norm", safe_norm_expr("q_pre")).withColumn(
+        "q_norm", safe_norm_expr("q_vec")
     )
     e = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("n_vec"),
         prefix.alias("n_pre"),
-    ).withColumn("n_pre_norm", safe_norm_expr(F.col("n_pre"))).withColumn(
-        "n_norm", safe_norm_expr(F.col("n_vec"))
+    ).withColumn("n_pre_norm", safe_norm_expr("n_pre")).withColumn(
+        "n_norm", safe_norm_expr("n_vec")
     )
     coarse = (
         e.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id", "q_vec", "n_vec", "q_norm", "n_norm",
             F.round(
-                dot_expr(F.col("q_pre"), F.col("n_pre"))
+                dot_expr("q_pre", "n_pre")
                 / (F.col("q_pre_norm") * F.col("n_pre_norm")),
                 round_dp,
             ).alias("_coarse"),
@@ -1994,7 +1978,7 @@ def knn_cosine_matryoshka(
         "query_id",
         "neighbor_id",
         F.round(
-            dot_expr(F.col("q_vec"), F.col("n_vec"))
+            dot_expr("q_vec", "n_vec")
             / (F.col("q_norm") * F.col("n_norm")),
             round_dp,
         ).alias("cosine"),
@@ -2174,12 +2158,10 @@ def pq_fit(
 
     base = embeddings
     if normalize:
+        v = sql_ident(vec_col)
         base = base.select(
             F.col(id_col),
-            F.transform(
-                vec_col,
-                lambda x: x.cast("double") / safe_norm_expr(F.col(vec_col)),
-            ).alias(vec_col),
+            F.expr(f"transform({v}, x -> CAST(x AS DOUBLE) / {_safe_norm_sql(v)})").alias(vec_col),
         )
     for _ in range(iters):
         enc = pq_encode(base, books, id_col, vec_col, use_arrow=False)

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.functions import sql_ident
+
 
 def _cols(keys: Sequence[Column | str]) -> list[Column]:
     return [F.col(k) if isinstance(k, str) else k for k in keys]
@@ -325,18 +327,8 @@ def session_paths(
         F.col(key_col), F.session_window(F.col(ts_col), gap)
     ).agg(
         F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(ts_col).cast("long").alias("ts_s"),
-                            F.col("event_id"),
-                            F.col(label_col).alias("label"),
-                        )
-                    )
-                ),
-                lambda x: x["label"],
-            ),
+            F.expr(f"transform(array_sort(collect_list(struct(CAST({sql_ident(ts_col)} AS BIGINT) AS ts_s, "
+                   f"event_id, {sql_ident(label_col)} AS label))), x -> x.label)"),
             sep,
         ).alias("path")
     )

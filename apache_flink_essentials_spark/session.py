@@ -70,6 +70,19 @@ def get_spark(
         hot paths we allow: stateful ops + vector UDFs).
       * Session timezone pinned to UTC so event-time semantics are
         deterministic and match the DuckDB oracle (naive timestamps = UTC).
+      * ``spark.python.sql.dataFrameDebugging.enabled=false``: with it on,
+        PySpark captures the Python call site of every ``F.*``/DataFrame
+        call and ships it to the JVM — about 5 extra Py4J round-trips per
+        call (active-session lookup, a reflective ``PySparkCurrentOrigin``
+        lookup, a conf read, set, clear), about half of all plan-building
+        round-trips. PySpark reads the conf once per process, on the
+        first wrapped call made with an active session, so it must be a
+        builder setting, not a later ``spark.conf.set``. Lost with it:
+        runtime errors (an ANSI overflow, say) no longer carry the Python
+        file:line in their query context. Analysis is eager in classic
+        mode, so analysis errors still raise at the building line.
+        Sessions the engine does not build (an external driver's own
+        session) keep PySpark's default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -86,6 +99,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # JDK 17 + local[32] + parquet readers: allocation-heavy stages can
         # die with a SPURIOUS "Retried waiting for GCLocker too often" OOM

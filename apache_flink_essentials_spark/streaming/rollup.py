@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_flink_essentials_spark.functions import sql_ident
 from apache_flink_essentials_spark.streaming.watermark import with_event_time
 
 
@@ -59,7 +60,7 @@ def _windowed_agg(
 
 
 def _quoted(name: str) -> Column:
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(sql_ident(name))
 
 
 def continuous_rollup(

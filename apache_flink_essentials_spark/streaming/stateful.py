@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from apache_flink_essentials_spark.functions import sql_ident
+from apache_flink_essentials_spark.operators.vector import _dot_sql
+
 COUNT_WINDOW_OUTPUT = T.StructType(
     [
         T.StructField("key", T.StringType(), True),
@@ -863,16 +866,8 @@ def knn_topk_stream(
     """
     structs = []
     for qid, qv in queries:
-        arr = F.array(*[F.lit(float(x)) for x in qv])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                arr,
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        arr = "array(" + ", ".join(f"{float(x)!r}D" for x in qv) + ")"
+        dot = F.expr(_dot_sql(f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)", arr))
         structs.append(
             F.struct(
                 F.lit(int(qid)).cast("long").alias("query_id"),

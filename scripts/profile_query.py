@@ -10,6 +10,7 @@ four runs is reported, its output materialized through the ``noop`` sink.
 A query's cost has two sides: the jobs it runs while its DataFrame is
 *built* (eager counts, checkpoints, driver collects) and the jobs its plan
 runs when *executed*. A record holds build time, jobs and shuffle bytes;
+``build_py4j_calls``, the driver→JVM Py4J round-trips of the build;
 Catalyst's analysis, optimization and planning times; execution time,
 jobs, stages and tasks; exchanges, codegen stages and Python-eval nodes of
 the executed (post-AQE) plan, with the bytes of each exchange; and the
@@ -37,6 +38,7 @@ import logging
 import math
 import os
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -48,7 +50,7 @@ from spans import (  # noqa: E402
 
 RUNS = 4
 COLUMNS = (  # (record key, table heading)
-    ("wall_s", "wall_s"), ("registry.build_s", "build_s"),
+    ("wall_s", "wall_s"), ("registry.build_s", "build_s"), ("build_py4j_calls", "b_py4j"),
     ("registry.build_jobs", "b_jobs"), ("registry.build_shuffle_bytes", "b_shuf_B"),
     ("operators.exec_s", "exec_s"), ("operators.jobs", "jobs"),
     ("operators.stages", "stages"), ("operators.tasks", "tasks"),
@@ -95,6 +97,30 @@ def collect_exchanges(plan) -> list[dict]:
     return found
 
 
+_ROUND_TRIPS = [0]  # Py4J commands sent since `_count_round_trips` ran
+
+
+def _count_round_trips() -> None:
+    """Count every Py4J command the main thread sends (one per round-trip
+    to the JVM) in `_ROUND_TRIPS`; installs once per process. Py4J's
+    background thread that releases garbage-collected JVM references is
+    not counted: its commands arrive at arbitrary times, off the thread
+    that builds the plan."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    if getattr(send, "counts_round_trips", False):
+        return
+
+    def counting(self, command):
+        if threading.current_thread() is threading.main_thread():
+            _ROUND_TRIPS[0] += 1
+        return send(self, command)
+
+    counting.counts_round_trips = True
+    ClientServerConnection.send_command = counting
+
+
 class _GateRecorder(logging.Handler):
     """Keeps each gate decision logged on ``session.GATE_LOG`` as a dict."""
 
@@ -113,6 +139,7 @@ class Profiler:
         from apache_flink_essentials_spark import registry
         from apache_flink_essentials_spark.session import GATE_LOG
 
+        _count_round_trips()
         self.gates = _GateRecorder()
         GATE_LOG.addHandler(self.gates)
         GATE_LOG.setLevel(logging.INFO)
@@ -131,9 +158,10 @@ class Profiler:
         status.drain()
         before = status.job_ids(name)
         self.gates.decisions = []
-        t0 = time.perf_counter()
+        calls0, t0 = _ROUND_TRIPS[0], time.perf_counter()
         df = self.queries[name](self.spark, fixture)
         build_s = time.perf_counter() - t0
+        build_calls = _ROUND_TRIPS[0] - calls0
         gates = self.gates.decisions.copy()
         status.drain()
         build_ids = status.job_ids(name) - before
@@ -153,6 +181,7 @@ class Profiler:
         return {
             "query": name, "cpus": self.cpus, "wall_s": build_s + write_s,
             "registry.build_s": build_s,
+            "build_py4j_calls": build_calls,
             "registry.build_shuffle_bytes": sum(s["shuffle_bytes"] for j in b_jobs
                                                 for s in j["stages"]),
             "plans.analysis_s": built[1] - built[0] + dur.get("analysis", 0.0),

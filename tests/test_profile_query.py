@@ -20,6 +20,7 @@ def test_profile_splits_build_and_execution_jobs(spark):
     # connected components runs its rounds eagerly while the plan is built
     assert rec["registry.build_jobs"] > 0
     assert rec["registry.build_shuffle_bytes"] > 0
+    assert rec["build_py4j_calls"] > 0  # driver round-trips while building
     assert rec["operators.jobs"] >= 1
     assert rec["cpus"] == len(os.sched_getaffinity(0))
     # the record names the adaptive gates its build decided
