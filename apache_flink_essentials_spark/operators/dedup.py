@@ -27,6 +27,7 @@ from apache_flink_essentials_spark.functions import sql_ident
 from apache_flink_essentials_spark.operators.skew import hot_bucket_salted_join
 from apache_flink_essentials_spark.operators.text import tokens_expr, tokens_sql
 from apache_flink_essentials_spark.session import (
+    driver_frame,
     driver_small_path,
     loop_conf,
     loop_partitions,
@@ -836,7 +837,6 @@ def _cc_driver_small_path(e: DataFrame, n_edges: int) -> DataFrame:
     relation. Returns the same ``(node, component=min id in component)``
     relation, every edge-touched node present, reps self-assigned."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     spark = e.sparkSession
@@ -848,7 +848,7 @@ def _cc_driver_small_path(e: DataFrame, n_edges: int) -> DataFrame:
         ]
     )
     if n_edges == 0:
-        return spark.createDataFrame([], out_schema)
+        return driver_frame(spark, {"node": [], "component": []}, out_schema)
     pdf = e.toPandas()
     vals = np.concatenate([pdf["v"].to_numpy(), pdf["u"].to_numpy()])
     # ids sorted ascending → the minimum INDEX in a component is the
@@ -868,8 +868,8 @@ def _cc_driver_small_path(e: DataFrame, n_edges: int) -> DataFrame:
             lab = nl
         if np.array_equal(lab, before):
             break
-    return spark.createDataFrame(
-        pd.DataFrame({"node": ids, "component": ids[lab]}), out_schema
+    return driver_frame(
+        spark, {"node": ids, "component": ids[lab]}, out_schema
     )
 
 

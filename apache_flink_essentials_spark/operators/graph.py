@@ -30,10 +30,11 @@ algorithms (SURVEY §5).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from apache_flink_essentials_spark.session import (
+    driver_frame,
     driver_small_path,
     loop_conf,
     loop_partitions,
@@ -71,22 +72,19 @@ def _pagerank_driver(
     are per-edge indices into the ``n`` sorted-unique node ids,
     ``dang`` flags nodes without out-edges."""
     import numpy as np
-    import pandas as pd
 
     spark = raw.sparkSession
     node_type = raw.schema["src"].dataType.simpleString()
     schema = f"node {node_type}, {rank_col} {rank_type}"
     if n_edges == 0:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, {"node": [], rank_col: []}, schema)
     pdf = raw.toPandas().drop_duplicates()
     vals = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
     ids, inv = np.unique(vals, return_inverse=True)
     asrc, adst = inv[: len(pdf)], inv[len(pdf):]
     outdeg = np.bincount(asrc, minlength=len(ids)).astype(np.int64)
     ranks = solve(len(ids), asrc, adst, outdeg, outdeg == 0)
-    return spark.createDataFrame(
-        pd.DataFrame({"node": ids, rank_col: ranks}), schema
-    )
+    return driver_frame(spark, {"node": ids, rank_col: ranks}, schema)
 
 
 def _pagerank_setup(
@@ -495,6 +493,127 @@ def undirected_edges(
     )
 
 
+# Packed-order domain of `triangle_stats`: node ids in [0, 10^12) and
+# degrees below 9·10^6, so ``degree * 10^12 + node`` neither collides nor
+# overflows a BIGINT. Both paths enforce it with the same error.
+_TRI_ID_BOUND = 10**12
+_TRI_DEG_BOUND = 9 * 10**6
+_TRI_DOMAIN_MSG = (
+    "triangle_stats packed-order domain exceeded: "
+    "requires 0 <= node id < 10^12 and degree < 9*10^6"
+)
+# Oriented wedges the driver triangle count tests per step: its working
+# set is a few int64 arrays of this length, whatever the degrees.
+_TRI_CHUNK = 1 << 20
+
+
+def _tri_guard(ok: Column) -> Column:
+    """0 while ``ok`` holds; otherwise fails the job with
+    `_TRI_DOMAIN_MSG`. The assert is coalesced into a BIGINT term that
+    callers add to an output column, so column pruning can't drop it:
+    ``assert_true`` yields NULL when the bound holds and raises
+    otherwise."""
+    return F.coalesce(
+        F.assert_true(ok, F.lit(_TRI_DOMAIN_MSG)).cast("long"),
+        F.lit(0).cast("long"),
+    )
+
+
+def _tri_census(counts: DataFrame) -> DataFrame:
+    """The one-row `triangle_stats` result from ``(n_nodes, n_edges,
+    n_wedges, n_triangles)``: appends ``global_clustering`` in the JVM,
+    so both paths produce the same double and the same schema."""
+    return counts.select(
+        "n_nodes", "n_edges", "n_wedges", "n_triangles",
+        F.when(F.col("n_wedges") > 0,
+               F.lit(3).cast("long") * F.col("n_triangles")
+               / F.col("n_wedges"))
+        .otherwise(F.lit(0.0)).alias("global_clustering"),
+    )
+
+
+def _count_oriented_triangles(ia, ib, deg) -> int:
+    """Triangles of the undirected edges ``(ia[k], ib[k])`` over nodes
+    ``0..len(deg)-1`` with degrees ``deg`` (node index order = id
+    order): the distributed path's degree-ordered orientation, counted
+    in numpy. Each edge points from the lower to the higher rank in the
+    (degree, id) order; every triangle is then exactly one oriented
+    wedge ``v → w1, v → w2`` (w1 < w2) closed by the edge ``w1 → w2``.
+    The oriented edges, sorted on ``src·n + dst``, are both the CSR
+    adjacency and the membership index (``searchsorted``). Wedges are
+    enumerated `_TRI_CHUNK` at a time, in CSR order."""
+    import numpy as np
+
+    n, m = len(deg), len(ia)
+    rank = np.empty(n, dtype=np.int64)
+    rank[np.argsort(deg, kind="stable")] = np.arange(n)
+    ra, rb = rank[ia], rank[ib]
+    keys = np.sort(np.minimum(ra, rb) * n + np.maximum(ra, rb))
+    src, dst = keys // n, keys % n
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(src, minlength=n), out=indptr[1:])
+    # wedges opened by edge k: the out-edges after it in src's list
+    opened = indptr[src + 1] - np.arange(m) - 1
+    done = np.cumsum(opened)
+    n_tri, lo = 0, 0
+    while lo < m:
+        # the edges whose wedges fit one chunk (at least one edge)
+        hi = max(
+            int(np.searchsorted(done, done[lo] - opened[lo] + _TRI_CHUNK,
+                                side="right")),
+            lo + 1,
+        )
+        c = opened[lo:hi]
+        k = np.repeat(np.arange(lo, hi), c)
+        j = k + 1 + np.arange(len(k)) - np.repeat(np.cumsum(c) - c, c)
+        q = dst[k] * n + dst[j]
+        pos = np.minimum(np.searchsorted(keys, q), m - 1)
+        n_tri += int(np.count_nonzero(keys[pos] == q))
+        lo = hi
+    return n_tri
+
+
+def _triangle_driver(e: DataFrame, n_edges: int) -> DataFrame:
+    """Driver small path of :func:`triangle_stats` for edge sets within
+    `session.DRIVER_MAX_ROWS`: collect the (checkpointed) edges as Arrow
+    and count in numpy (`_count_oriented_triangles`). The counts go back
+    with a declared schema through `session.driver_frame`, so no Python
+    worker runs when the row executes. Matches the distributed row
+    exactly: NULL ``n_edges``/``n_wedges`` on empty input (SUM over no
+    rows), the same nullability, and the same packed-order domain
+    error."""
+    import numpy as np
+
+    nodes, tri, ok = 0, 0, True
+    edges_n = wedges = None
+    if n_edges:
+        t = e.toArrow()
+        m = t.num_rows
+        ids, inv = np.unique(
+            np.concatenate([t.column("a").to_numpy(),
+                            t.column("b").to_numpy()]),
+            return_inverse=True,
+        )
+        deg = np.bincount(inv).astype(np.int64)
+        nodes, edges_n = len(ids), int(deg.sum()) // 2
+        wedges = int((deg * (deg - 1) // 2).sum())
+        ok = bool(ids[0] >= 0 and ids[-1] < _TRI_ID_BOUND
+                  and deg.max() < _TRI_DEG_BOUND)
+        if ok:
+            tri = _count_oriented_triangles(inv[:m], inv[m:], deg)
+    counts = driver_frame(
+        e.sparkSession,
+        {"n_nodes": [nodes], "n_edges": [edges_n],
+         "n_wedges": [wedges], "n_triangles": [tri]},
+        "n_nodes bigint not null, n_edges bigint, n_wedges bigint, "
+        "n_triangles bigint not null",
+    )
+    return _tri_census(counts.select(
+        (F.col("n_nodes") + _tri_guard(F.lit(ok))).alias("n_nodes"),
+        "n_edges", "n_wedges", "n_triangles",
+    ))
+
+
 def triangle_stats(
     edges: DataFrame, max_degree: int | None = None
 ) -> DataFrame:
@@ -534,13 +653,26 @@ def triangle_stats(
     contributes up to 10^12 wedge candidates; capped results are a
     documented under-count of triangles THROUGH dropped hubs.
 
-    Scale: degrees = one hash agg on the exploded endpoints; orientation
-    = two broadcast-or-shuffle joins of the slim (node, ord) relation
-    (AQE converts to broadcast when the node relation fits); adjacency
-    build = one |E|-row groupBy; the intersect joins carry Σ outdeg =
-    |E| array elements per side — strictly less data than the wedge
-    relation they replace. All aggregates map-side combined; output is
-    one row.
+    Two paths, one row. The (capped) edge list is lazily checkpointed
+    and counted; that count is the ``triangles`` gate
+    (`session.driver_small_path`). At or below `session.DRIVER_MAX_ROWS`
+    edges the DRIVER path collects the edges and counts the same
+    oriented wedges in numpy (`_triangle_driver`): three jobs (count,
+    collect, the one-row result) instead of the distributed plan's
+    joins and exchanges. Its wedges are tested `_TRI_CHUNK` at a time,
+    so its working memory stays a few arrays of that length plus the
+    O(|E|) edge arrays, however dense the graph; its time is
+    O(Σ C(outdeg, 2) · log |E|) — about 1.3·10^9 wedge probes for a
+    2000-clique at the bound. Above the bound the DISTRIBUTED path
+    below runs.
+
+    Scale (distributed path): degrees = one hash agg on the exploded
+    endpoints; orientation = two broadcast-or-shuffle joins of the slim
+    (node, ord) relation (AQE converts to broadcast when the node
+    relation fits); adjacency build = one |E|-row groupBy; the intersect
+    joins carry Σ outdeg = |E| array elements per side — strictly less
+    data than the wedge relation they replace. All aggregates map-side
+    combined; output is one row.
 
     ``global_clustering = 3 * n_triangles / n_wedges`` is a ratio of two
     BIGINTs — bit-identical across engines (no rounding needed).
@@ -560,6 +692,9 @@ def triangle_stats(
         ).join(deg0.withColumnRenamed("node", "b"), "b", "left_semi")
         e = e.select("a", "b")
     e = e.localCheckpoint(eager=False)
+    n = e.count()  # materializes the checkpoint for either path
+    if driver_small_path("triangles", n):
+        return _triangle_driver(e, n)
 
     deg = (
         e.select(F.col("a").alias("node"))
@@ -567,25 +702,16 @@ def triangle_stats(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    # the guard is folded INTO the packed key (coalesce of an always-
-    # NULL assert term) so column pruning can't drop it: assert_true
-    # yields NULL when the bound holds and raises otherwise
-    _guard = F.coalesce(
-        F.assert_true(
-            (F.col("node").cast("long") < F.lit(10**12))
-            & (F.col("node").cast("long") >= 0)
-            & (F.col("degree").cast("long") < F.lit(9 * 10**6)),
-            F.lit(
-                "triangle_stats packed-order domain exceeded: "
-                "requires 0 <= node id < 10^12 and degree < 9*10^6"
-            ),
-        ).cast("long"),
-        F.lit(0).cast("long"),
+    # the guard is folded INTO the packed key
+    _guard = _tri_guard(
+        (F.col("node").cast("long") < F.lit(_TRI_ID_BOUND))
+        & (F.col("node").cast("long") >= 0)
+        & (F.col("degree").cast("long") < F.lit(_TRI_DEG_BOUND))
     )
     ord_ = deg.select(
         "node",
         (
-            F.col("degree").cast("long") * F.lit(10**12)
+            F.col("degree").cast("long") * F.lit(_TRI_ID_BOUND)
             + F.col("node")
             + _guard
         ).alias("ord"),
@@ -654,16 +780,7 @@ def triangle_stats(
             F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_triangles")
         )
     )
-    return (
-        totals.crossJoin(F.broadcast(tri))
-        .select(
-            "n_nodes", "n_edges", "n_wedges", "n_triangles",
-            F.when(F.col("n_wedges") > 0,
-                   F.lit(3).cast("long") * F.col("n_triangles")
-                   / F.col("n_wedges"))
-            .otherwise(F.lit(0.0)).alias("global_clustering"),
-        )
-    )
+    return _tri_census(totals.crossJoin(F.broadcast(tri)))
 
 
 def neighbor_overlap_pairs(

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from apache_flink_essentials_spark.session import driver_small_path
+from apache_flink_essentials_spark.session import driver_frame, driver_small_path
 
 
 def bucket_expr(ts_col: str, step_s: int) -> Column:
@@ -692,11 +692,13 @@ def theilsen_from_binned(binned: DataFrame) -> DataFrame:
     # N div 2 and N div 2 + 1 (their fixed-order average is the median)
     r_lo = (n_pairs + 1) // 2
     r_hi = n_pairs // 2 + 1
+    out_schema = "n_bins long, n_pairs long, slope_micro_per_bin double"
     if n_pairs == 0:
         # zero or one bin → no pairs → zero rows (the grouped-form contract)
-        return spark.createDataFrame(
-            [],
-            "n_bins long, n_pairs long, slope_micro_per_bin double",
+        return driver_frame(
+            spark,
+            {"n_bins": [], "n_pairs": [], "slope_micro_per_bin": []},
+            out_schema,
         )
     if driver_small_path("theilsen", n_pairs):
         # SMALL path: the bins are ALREADY on the driver (the collect
@@ -731,9 +733,11 @@ def theilsen_from_binned(binned: DataFrame) -> DataFrame:
                 Decimal("0.000001"), rounding=ROUND_HALF_UP
             )
         )
-        return spark.createDataFrame(
-            [(n_bins, n_pairs, val)],
-            "n_bins long, n_pairs long, slope_micro_per_bin double",
+        return driver_frame(
+            spark,
+            {"n_bins": [n_bins], "n_pairs": [n_pairs],
+             "slope_micro_per_bin": [val]},
+            out_schema,
         )
     # DISTRIBUTED path: pair generation by INDEX explode over
     # spark.range — row i emits sequence(i+1, n−1) partner indices

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from apache_flink_essentials_spark.functions import sql_ident
 from apache_flink_essentials_spark.operators.skew import hot_bucket_salted_join
-from apache_flink_essentials_spark.session import driver_small_path
+from apache_flink_essentials_spark.session import driver_frame, driver_small_path
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -1733,7 +1733,7 @@ def _mmr_greedy_driver(
             T.StructField("mmr_score", T.DoubleType(), True),
         ]
     )
-    def _py(v):  # numpy scalar → plain Python (createDataFrame rejects np types)
+    def _py(v):  # numpy scalar → plain Python (one key type per dict)
         return v.item() if hasattr(v, "item") else v
 
     cand_pdf = cand.select("q", "cid", "rel").toPandas()
@@ -1777,7 +1777,11 @@ def _mmr_greedy_driver(
             rows.append((q, rank, best, score))
             picked.append(best)
             remaining.discard(best)
-    return spark.createDataFrame(rows, out_schema)
+    return driver_frame(
+        spark,
+        {f.name: [r[i] for r in rows] for i, f in enumerate(out_schema)},
+        out_schema,
+    )
 
 
 class _NegKey:

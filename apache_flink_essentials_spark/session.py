@@ -19,7 +19,7 @@ import logging
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -28,10 +28,11 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 LOOP_ROWS_PER_PARTITION = 2_000_000
 
 # The driver small-path bound shared by every size-adaptive operator
-# (connected components, both PageRanks, exact MMR, Theil-Sen): at or
-# below one loop partition the distributed form runs in ONE task anyway,
-# paying per-job scheduling floors for single-machine work, so the
-# operator collects its (bounded) input and solves it on the driver.
+# (connected components, both PageRanks, exact MMR, Theil-Sen, the
+# triangle census): at or below one loop partition the distributed form
+# runs in ONE task anyway, paying per-job scheduling floors for
+# single-machine work, so the operator collects its (bounded) input and
+# solves it on the driver.
 DRIVER_MAX_ROWS = LOOP_ROWS_PER_PARTITION
 
 # One line per adaptive-gate decision: gate, rows, bound, path taken.
@@ -50,6 +51,17 @@ def driver_small_path(gate: str, rows: int) -> bool:
     small = rows <= DRIVER_MAX_ROWS
     log_gate(gate, rows, DRIVER_MAX_ROWS, "driver" if small else "distributed")
     return small
+
+
+def driver_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
+    """A driver small path's result: ``columns`` (name → list or numpy
+    array, in ``schema`` order) shipped to the JVM as one Arrow table.
+    ``createDataFrame`` over a Python list (and over pandas when the
+    session's Arrow setting is off) runs a Python worker in every task
+    each time the result executes; an Arrow table never does."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
 
 
 def get_spark(

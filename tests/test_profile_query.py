@@ -25,3 +25,14 @@ def test_profile_splits_build_and_execution_jobs(spark):
     assert rec["cpus"] == len(os.sched_getaffinity(0))
     # the record names the adaptive gates its build decided
     assert [g["path"] for g in rec["gates"] if g["gate"] == "cc"] == ["driver"]
+
+
+def test_triangle_stats_job_budget(spark):
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from profile_query import Profiler
+
+    rec = Profiler(spark.newSession()).profile("graph_triangle_stats", SF_SMOKE)
+    # measured 6 build + 1 execution jobs with the driver census (the
+    # distributed census ran 6 + 8); one job of slack
+    assert rec["registry.build_jobs"] + rec["operators.jobs"] <= 8
+    assert [g["path"] for g in rec["gates"] if g["gate"] == "triangles"] == ["driver"]

@@ -1,15 +1,19 @@
 """Driver small paths ≡ their distributed paths.
 
-Connected components, both PageRanks, exact MMR and Theil-Sen each solve
-inputs at or below `session.DRIVER_MAX_ROWS` on the driver. Every test
-here runs an operator on its default (driver) path, forces the
-distributed path by patching that one bound, and requires the same
-result."""
+Connected components, both PageRanks, exact MMR, Theil-Sen and the
+triangle census each solve inputs at or below `session.DRIVER_MAX_ROWS`
+on the driver. Every test here runs an operator on its default (driver)
+path, forces the distributed path by patching that one bound, and
+requires the same result. A small path's result is shipped to the JVM
+whole, so executing it runs no Python worker."""
 
 import datetime
+import itertools
 import logging
+import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from apache_flink_essentials_spark import session as S
 from apache_flink_essentials_spark.operators import dedup as D
@@ -147,3 +151,107 @@ def test_theilsen_two_path_equivalence(spark, monkeypatch):
     assert small[0]["n_pairs"] == 36 * 35 // 2
     # outlier-resistant: the single spiked bin must not drag the median
     assert abs(small[0]["slope_micro_per_bin"] - 3_000_000.0) < 1e-6
+
+
+def _tri_both(spark, monkeypatch, rows, **kw):
+    """(driver, distributed) results of triangle_stats: rows + schema."""
+    e = G.undirected_edges(spark.createDataFrame(rows, "x long, y long"), "x", "y")
+    driver = G.triangle_stats(e, **kw)
+    with monkeypatch.context() as m:
+        m.setattr(S, "DRIVER_MAX_ROWS", -1)
+        dist = G.triangle_stats(e, **kw)
+        dist_rows = dist.collect()
+    return (driver.schema, driver.collect()), (dist.schema, dist_rows)
+
+
+def _random_graph(n_nodes, n_edges, seed):
+    rnd = random.Random(seed)
+    return sorted({tuple(sorted(rnd.sample(range(n_nodes), 2)))
+                   for _ in range(n_edges)})
+
+
+def test_triangle_driver_path_equals_distributed(spark, monkeypatch):
+    k4 = list(itertools.combinations(range(4), 2))
+    path = [(i, i + 1) for i in range(8)]
+    star_closure = [(0, i) for i in range(1, 7)] + [(1, 2), (3, 4)]
+    # hub 100 (degree 6) is dropped by the cap; the leaf triangle stays
+    hub = [(100, i) for i in range(1, 7)] + [(1, 2), (2, 3), (1, 3)]
+    cases = [(k4, {}), (path, {}), (star_closure, {}),
+             (hub, {"max_degree": 4}), ([], {}),
+             (_random_graph(60, 300, seed=7), {})]
+    rows_out = []
+    for rows, kw in cases:
+        driver, dist = _tri_both(spark, monkeypatch, rows, **kw)
+        assert driver == dist, (rows, kw)
+        rows_out.append(driver[1][0].asDict())
+    assert [r["n_triangles"] for r in rows_out] == [4, 0, 2, 1, 0, 141]
+    # K4 is fully clustered; the empty census keeps the NULL sums
+    assert rows_out[0]["global_clustering"] == 1.0
+    assert rows_out[4] == {"n_nodes": 0, "n_edges": None, "n_wedges": None,
+                           "n_triangles": 0, "global_clustering": 0.0}
+
+
+def test_triangle_driver_chunks_match_brute_force(spark, monkeypatch):
+    import numpy as np
+
+    rows = _random_graph(60, 400, seed=11)
+    adj = {}
+    for a, b in rows:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    brute = sum(1 for u, v, w in itertools.combinations(sorted(adj), 3)
+                if v in adj[u] and w in adj[u] and w in adj[v])
+    ids, inv = np.unique(np.array(rows).T.ravel(), return_inverse=True)
+    deg = np.bincount(inv).astype(np.int64)
+    ia, ib = inv[: len(rows)], inv[len(rows):]
+    # chunks of 1 and 7 wedges run the loop many times; the default once
+    for chunk in (1, 7, G._TRI_CHUNK):
+        monkeypatch.setattr(G, "_TRI_CHUNK", chunk)
+        assert G._count_oriented_triangles(ia, ib, deg) == brute
+    monkeypatch.setattr(G, "_TRI_CHUNK", 7)
+    driver, dist = _tri_both(spark, monkeypatch, rows)
+    assert driver == dist and driver[1][0].n_triangles == brute
+
+
+def test_triangle_domain_error_on_both_paths(spark, monkeypatch):
+    for rows in ([(1, 10**12), (1, 2)], [(-1, 2), (2, 3)]):
+        e = G.undirected_edges(
+            spark.createDataFrame(rows, "x long, y long"), "x", "y")
+        for bound in (S.DRIVER_MAX_ROWS, -1):
+            monkeypatch.setattr(S, "DRIVER_MAX_ROWS", bound)
+            with pytest.raises(Exception, match="packed-order domain exceeded"):
+                G.triangle_stats(e).collect()
+
+
+def test_triangle_gate_decision_is_logged(spark, caplog):
+    caplog.set_level(logging.INFO, logger=S.GATE_LOG.name)
+    e = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "a long, b long")
+    G.triangle_stats(e).collect()
+    assert [r.getMessage() for r in caplog.records if r.args[0] == "triangles"] \
+        == ["gate triangles: rows=3 bound=2000000 path=driver"]
+
+
+def test_small_path_results_run_no_python_worker(spark):
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "a long, b long")
+    directed = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    pairs = edges.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+    mmr_in = spark.createDataFrame(
+        [(1, 10, [1.0, 0.0], 0.9), (1, 11, [0.0, 1.0], 0.8)],
+        "query_id long, neighbor_id long, embedding array<double>, cosine double",
+    )
+    outputs = {
+        "cc": D.connected_components(pairs),
+        "cc empty": D.connected_components(pairs.limit(0)),
+        "pagerank": G.pagerank(directed, iterations=2),
+        "pagerank empty": G.pagerank(directed.limit(0), iterations=2),
+        "pagerank_fixedpoint": G.pagerank_fixedpoint(directed, iterations=2),
+        "mmr": V.mmr_diversify_exact(mmr_in, k=2, lam=0.5),
+        "theilsen": TS.theilsen_trend(_mk_events(spark, [1.0, 3.0, 4.0]), "ts", "value"),
+        "theilsen empty": TS.theilsen_trend(_mk_events(spark, [1.0]), "ts", "value"),
+        "triangles": G.triangle_stats(edges),
+        "triangles empty": G.triangle_stats(edges.limit(0)),
+    }
+    lineage = {k: df._jdf.queryExecution().toRdd().toDebugString()
+               for k, df in outputs.items()}
+    assert [k for k, text in lineage.items() if "PythonRDD" in text] == []
+    assert outputs["triangles"].first().n_triangles == 1
