@@ -29,6 +29,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_flink_essentials_spark.session import small_input
+
 _HASH_DENOM = float(2**32)
 
 
@@ -1051,7 +1053,7 @@ def dsir_weights(
     node reuse.
     """
     from .text import tokens_expr
-    from .transform import _estimated_input_bytes, floor_parallelism
+    from .transform import floor_parallelism
 
     toks = (
         floor_parallelism(df, min_task_bytes=1 << 14)
@@ -1062,8 +1064,6 @@ def dsir_weights(
         )
         .filter(F.col("_tok") != "")
     )
-    size = _estimated_input_bytes(df)
-    small = size is not None and size < (64 << 20)
     ml = lambda c: F.round(  # noqa: E731
         F.log10((c + F.lit(1)).cast("double")) * 1e6
     ).cast("long")
@@ -1103,7 +1103,7 @@ def dsir_weights(
         F.sum(F.col("_n_occ") * F.col("_ml_diff")).alias("_s"),
         F.sum("_v1").alias("_v"),
     )
-    if small:
+    if small_input("dsir_weights", df):
         wf = Window.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
@@ -1245,7 +1245,7 @@ def perplexity_buckets(
     converges on one task.
 
     Size-adaptive (the ``bigram_logprob`` precedent): when the plan's
-    leaf-scan bytes prove the ranked relation small (< 64 MB of source
+    leaf-scan bytes prove the ranked relation small (`session.small_input`
     — the per-doc score table is strictly smaller than its input), the
     rank is a plain single-partition ``Window.orderBy`` — the two-phase
     machinery's 3 extra exchanges + offsets join are pure stage
@@ -1253,13 +1253,9 @@ def perplexity_buckets(
     after). Unknown or large inputs take the distributed path; both
     produce identical ranks (total order ⇒ deterministic).
     """
-    from apache_flink_essentials_spark.operators.transform import (
-        _estimated_input_bytes,
-        global_row_number,
-    )
+    from apache_flink_essentials_spark.operators.transform import global_row_number
 
-    size = _estimated_input_bytes(scored)
-    if size is not None and size < (64 << 20):
+    if small_input("perplexity_buckets", scored):
         # the doc count rides the SAME single-partition window stage as
         # the rank (unbounded frame, evaluated once per partition) — a
         # separate count branch would re-evaluate the whole upstream

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apache_flink_essentials_spark.session import small_input
+
 
 def match_strict_sequence(
     df: DataFrame,
@@ -205,17 +207,14 @@ def association_rules(
     never a global cross. Item marginals are domain-sized and broadcast
     both ways.
     """
-    from .transform import _estimated_input_bytes
-
     bi = df.select(
         F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
     ).distinct()
     # bi feeds FOUR consumers (n_baskets, marginals, both self-join
-    # sides); above ~64 MB of input the lazily-materialized form beats
-    # four recomputations of the scan+distinct — below it, recompute is
-    # cheaper than the write (the dsir_weights size gate)
-    size = _estimated_input_bytes(df)
-    if size is None or size >= (64 << 20):
+    # sides); on a large or unknown input the lazily-materialized form
+    # beats four recomputations of the scan+distinct — on a small one
+    # (`session.small_input`), recompute is cheaper than the write
+    if not small_input("association_rules", df):
         bi = bi.localCheckpoint(eager=False)
     nb = bi.agg(F.countDistinct("basket").alias("n_baskets"))
     item_counts = bi.groupBy("item").agg(F.count(F.lit(1)).alias("n_item"))

@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from apache_flink_essentials_spark.session import driver_frame
+
 
 def approx_distinct(
     df: DataFrame, col: str, keys: Sequence[str] = (), rsd: float = 0.05
@@ -385,7 +387,6 @@ def portable_quantile_bands(
     Output: one row per requested quantile — (q, target_rank, bucket,
     est) with ``est`` rounded to 6 dp (registry float convention).
     """
-    spark = df.sparkSession
     stats = (
         df.where(F.col(col).isNotNull())
         .agg(
@@ -414,7 +415,6 @@ def quantiles_from_histogram(
     all run over ``n_buckets``-sized relations."""
     from pyspark.sql.window import Window
 
-    spark = hist.sparkSession
     merged = hist.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
     w = (
         Window.orderBy("bucket")
@@ -425,7 +425,7 @@ def quantiles_from_histogram(
         "cnt",
         F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("cum_before"),
     )
-    qs = spark.createDataFrame([(float(q),) for q in quantiles], "q double")
+    qs = driver_frame(hist.sparkSession, {"q": [float(q) for q in quantiles]}, "q double")
     joined = (
         qs.crossJoin(F.broadcast(stats))
         .withColumn("target_rank", F.ceil(F.col("q") * F.col("_n")))
@@ -500,8 +500,7 @@ def grouped_quantile_bands(
         F.col("cnt"),
         F.coalesce(F.sum("cnt").over(w), F.lit(0)).alias("cum_before"),
     )
-    spark = df.sparkSession
-    qs = spark.createDataFrame([(float(q),) for q in quantiles], "q double")
+    qs = driver_frame(df.sparkSession, {"q": [float(q) for q in quantiles]}, "q double")
     withq = (
         stats.crossJoin(F.broadcast(qs))
         .withColumn("target_rank", F.ceil(F.col("q") * F.col("_n")))

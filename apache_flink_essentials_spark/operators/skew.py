@@ -25,7 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apache_flink_essentials_spark.session import log_gate
+from apache_flink_essentials_spark.session import driver_frame, log_gate
 
 
 def salted_agg(
@@ -150,7 +150,8 @@ def hot_bucket_salted_join(
         a2 = a.withColumn("_slices", F.element_at(mapping, F.col(key)))
         b2 = b.withColumn("_slices", F.element_at(mapping, F.col(key)))
     else:
-        hot = F.broadcast(a.sparkSession.createDataFrame(hot_rows, hot.schema))
+        cols = {f.name: [r[i] for r in hot_rows] for i, f in enumerate(hot.schema)}
+        hot = F.broadcast(driver_frame(a.sparkSession, cols, hot.schema))
         a2 = a.join(hot, on=key, how="left")
         b2 = b.join(hot, on=key, how="left")
     slices = F.col("_slices")

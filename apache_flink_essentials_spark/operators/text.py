@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apache_flink_essentials_spark.functions import sql_ident, sql_in, sql_str
+from apache_flink_essentials_spark.session import driver_frame, small_input
 
 # Tiny deterministic stopword inventories — enough for ratio features and a
 # stopword-overlap language heuristic (the real thing would be a fastText
@@ -382,11 +383,9 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     aggregation — there, degenerate repetitive shards DO collapse before
     the shuffle, and a full raw-text repartition is the bigger term.
     """
-    from .transform import _estimated_input_bytes, floor_parallelism
+    from .transform import floor_parallelism
 
-    size = _estimated_input_bytes(df)
-    small = size is not None and size < (64 << 20)
-    if small:
+    if small_input("repetition_stats", df):
         n_shuffle = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
@@ -955,10 +954,7 @@ def unigram_logprob(
     Catalyst's ReuseExchange does not canonicalize across the branch
     shapes involved.
     """
-    from apache_flink_essentials_spark.operators.transform import (
-        _estimated_input_bytes,
-        floor_parallelism,
-    )
+    from apache_flink_essentials_spark.operators.transform import floor_parallelism
 
     # per-token work is CPU-heavy per input byte (regex split + 100×
     # row explosion + hash agg), so an under-split scan serializes it —
@@ -967,9 +963,9 @@ def unigram_logprob(
     toks = floor_parallelism(df, min_task_bytes=1 << 14).select(
         F.col(id_col), F.explode(tokens_expr(text_col)).alias("_tok")
     ).filter(F.col("_tok") != "")
-    size = _estimated_input_bytes(df)
-    small = size is not None and size < (64 << 20)
-    return unigram_logprob_from_tokens(toks, id_col=id_col, small=small)
+    return unigram_logprob_from_tokens(
+        toks, id_col=id_col, small=small_input("unigram_logprob", df)
+    )
 
 
 def unigram_logprob_from_tokens(
@@ -1156,7 +1152,6 @@ def bigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    window_max_input_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Per-document mean log10 bigram conditional probability under the
     corpus's OWN bigram LM — the next-quality-rung above
@@ -1177,9 +1172,9 @@ def bigram_logprob(
     bit-for-bit (the aggregate is an order-independent exact integer sum;
     cross-checked in tests):
 
-    * **Small inputs** (local file bytes provably < ``window_max_input_
-      bytes``): the corpus counts come from two window sums (``sum over
-      partitionBy(_a, _bg)`` / ``partitionBy(_a)``) directly on the
+    * **Small inputs** (`session.small_input`): the corpus counts come
+      from two window sums (``sum over partitionBy(_a, _bg)`` /
+      ``partitionBy(_a)``) directly on the
       occurrence table — ONE scan of the text, 3 exchanges, no joins
       (the single token exchange is keyed by the bigram's FIRST token,
       whose hash partitioning satisfies the occurrence grouping and
@@ -1199,10 +1194,8 @@ def bigram_logprob(
 
     Docs with < 2 tokens have no bigrams and drop out.
     """
-    from .transform import _estimated_input_bytes, floor_parallelism
+    from .transform import floor_parallelism
 
-    size = _estimated_input_bytes(df)
-    small = size is not None and size < window_max_input_bytes
     # bigram construction is ALL codegen: array_remove replaces the
     # interpreted filter() HOF (identical semantics: drops every ''),
     # posexplode + element_at replaces the interpreted zip_with lambda
@@ -1232,7 +1225,7 @@ def bigram_logprob(
         )
     )
     ml = lambda c: F.round(F.log10(c.cast("double")) * 1e6).cast("long")  # noqa: E731
-    if small:
+    if small_input("bigram_logprob", df):
         # ONE token exchange keyed by _a: HashPartitioning(_a)
         # satisfies the (doc, bg, a) grouping AND both window
         # partitions (subsets of the clustering), so the occurrence
@@ -1658,9 +1651,10 @@ def coverage_from_counts(
         F.sum("n").over(w_cum).alias("cum_n"),
         F.sum("n").over(Window.partitionBy()).alias("total_n"),
     )
-    spark = counts.sparkSession
-    sizes = spark.createDataFrame(
-        [(int(s),) for s in vocab_sizes], "vocab_size long"
+    sizes = driver_frame(
+        counts.sparkSession,
+        {"vocab_size": [int(s) for s in vocab_sizes]},
+        "vocab_size long",
     )
     # per size: the largest rk <= N (handles N > |vocab|: takes the last row)
     joined = sizes.join(
@@ -1716,7 +1710,7 @@ def kneser_ney_bigrams(
     `bigram_logprob` size-adaptive precedent; identical results — every
     aggregate is an exact integer in both forms):
 
-    * **Small inputs** (local file bytes provably < 256 MB): ONE linear
+    * **Small inputs** (`session.small_input`): ONE linear
       pipeline with zero branches — the (w1, w2) hash-agg, then a
       ``coalesce(1)`` of the TYPE table (vocab-bounded and proven
       small) under which every window — (c1, n1p) over w1, n1f over
@@ -1735,11 +1729,7 @@ def kneser_ney_bigrams(
       is the two-phase ``global_row_number`` (never a single-task
       global window over an unbounded relation).
     """
-    from .transform import (
-        _estimated_input_bytes,
-        floor_parallelism,
-        global_row_number,
-    )
+    from .transform import floor_parallelism, global_row_number
 
     fl = F.array_remove(tokens_expr(text_col), "")
     base = floor_parallelism(df)
@@ -1776,8 +1766,7 @@ def kneser_ney_bigrams(
             * F.lit(4)
         )
     ).alias("p_kn")
-    size = _estimated_input_bytes(df)
-    if size is not None and size < (256 << 20):
+    if small_input("kneser_ney_bigrams", df):
         w1w = Window.partitionBy("w1")
         w2w = Window.partitionBy("w2")
         scored = (
@@ -1822,7 +1811,8 @@ def kneser_ney_bigrams(
     )
     return (
         ranked.where(F.col("rank") <= top_n)
-        .select("rank", "w1", "w2", "c12", "n1p", "n1f", "p_kn")
+        # int, as the small path's row_number
+        .select(F.col("rank").cast("int"), "w1", "w2", "c12", "n1p", "n1f", "p_kn")
         .orderBy("rank")
     )
 

@@ -549,8 +549,7 @@ def lag_correlation(
             F.sum(F.when(F.col(type_col) == type_b, 1).otherwise(0)).alias("cb"),
         )
     )
-    spark = df.sparkSession
-    lag_df = spark.createDataFrame([(int(l),) for l in lags], "lag long")
+    lag_df = driver_frame(df.sparkSession, {"lag": [int(l) for l in lags]}, "lag long")
     a = series.select(F.col("bin"), F.col("ca"))
     b = series.select(F.col("bin").alias("bin_b"), F.col("cb"))
     paired = (
@@ -1113,8 +1112,7 @@ def acf_from_binned(
         "bin", (F.col("x") - F.col("_mu")).alias("d")
     )
     den = centered.agg(F.sum(F.col("d") * F.col("d")).alias("_den"))
-    spark = binned.sparkSession
-    lag_df = spark.createDataFrame([(int(l),) for l in lags], "lag long")
+    lag_df = driver_frame(binned.sparkSession, {"lag": [int(l) for l in lags]}, "lag long")
     a = centered.select("bin", F.col("d").alias("da"))
     b = centered.select(F.col("bin").alias("bin_b"), F.col("d").alias("db"))
     paired = (

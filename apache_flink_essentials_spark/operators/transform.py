@@ -12,12 +12,17 @@ shuffles — verified in tests via explain().
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from apache_flink_essentials_spark.session import (
+    _estimated_input_bytes,
+    _local_bytes,
+    small_input,
+)
 
 
 # --- map (T1/T2: Transformations.scala:18,21-24) ---------------------------
@@ -48,63 +53,33 @@ def _split_estimate(df: DataFrame) -> tuple[int | None, bool]:
         return None, False
     if not files:
         return None, False
-    if len(files) == 1 and files[0].startswith("file:"):
-        import math
-        import os as _os
-        from urllib.parse import unquote, urlparse
+    size = _local_bytes(files) if len(files) == 1 else None
+    if size is None:
+        return len(files), False
+    import math
 
+    def _bytes_conf(key: str, default: int) -> int:
+        raw = str(
+            df.sparkSession.conf.get(key, f"{default}b")
+        ).lower().rstrip("b")
         try:
-            size = _os.stat(unquote(urlparse(files[0]).path)).st_size
-        except OSError:
-            return 1, False
+            return int(raw)
+        except ValueError:
+            return default
 
-        def _bytes_conf(key: str, default: int) -> int:
-            raw = str(
-                df.sparkSession.conf.get(key, f"{default}b")
-            ).lower().rstrip("b")
-            try:
-                return int(raw)
-            except ValueError:
-                return default
-
-        max_bytes = _bytes_conf("spark.sql.files.maxPartitionBytes", 134217728)
-        open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4194304)
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-        split = min(
-            max_bytes,
-            max(open_cost, (size + open_cost) // max(1, parallelism)),
-        )
-        return max(1, math.ceil(size / split)), True
-    return len(files), False
+    max_bytes = _bytes_conf("spark.sql.files.maxPartitionBytes", 134217728)
+    open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4194304)
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    split = min(
+        max_bytes,
+        max(open_cost, (size + open_cost) // max(1, parallelism)),
+    )
+    return max(1, math.ceil(size / split)), True
 
 
 def _estimated_input_splits(df: DataFrame) -> int | None:
     """Lower-bound form of ``_split_estimate`` (see there)."""
     return _split_estimate(df)[0]
-
-
-def _estimated_input_bytes(df: DataFrame) -> int | None:
-    """Total byte size of the plan's local (``file:``) leaf-scan files, or
-    None when any file is remote/unstatable (s3/hdfs) or the plan has no
-    file leaves. Same ``inputFiles()`` cheap-probe rationale as
-    ``_estimated_input_splits`` — no physical planning forced."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        if not f.startswith("file:"):
-            return None
-        try:
-            total += os.stat(unquote(urlparse(f).path)).st_size
-        except OSError:
-            return None
-    return total
 
 
 def floor_parallelism(
@@ -453,7 +428,6 @@ def global_prefix_sum(
     value_col: str,
     out_col: str = "running_total",
     num_partitions: int | None = None,
-    small_input_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Distributed running total of ``value_col`` over a TOTAL order —
     the prefix-sum sibling of :func:`global_row_number` (same two-phase
@@ -471,18 +445,16 @@ def global_prefix_sum(
     the one-task and two-phase plans).
 
     Size-adaptive (the `perplexity_buckets` precedent): when the plan's
-    leaf-scan bytes prove the input small (< 64 MB of source — the
+    leaf-scan bytes prove the input small (`session.small_input` — the
     cumulated relation is never larger than its input), the plain
     single-partition window wins — the two-phase machinery's range
     sampling job + two exchanges + offsets broadcast are pure stage
-    overhead at that size (measured 0.40 s vs 0.25 s at bench SF).
-    Unknown or large inputs take the distributed path; both produce
-    identical totals (total order + order-independent addition).
+    overhead at that size (measured 0.40 s vs 0.25 s at bench SF). A
+    large or unknown input that is one split takes the window too.
+    Otherwise the distributed path; both produce identical totals
+    (total order + order-independent addition).
     """
-    size = _estimated_input_bytes(df)
-    if (
-        size is not None and size < small_input_bytes
-    ) or input_is_single_split(df):
+    if small_input("global_prefix_sum", df) or input_is_single_split(df):
         return df.withColumn(
             out_col,
             F.sum(value_col).over(

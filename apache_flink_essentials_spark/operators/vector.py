@@ -792,26 +792,31 @@ def kmeans_fit(
     embeddings = embeddings.repartition(
         embeddings.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     ).cache()
-    for _ in range(iters):
-        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-        per_dim = (
-            assigned.select(
-                "cluster_id", F.posexplode(F.col(vec_col)).alias("pos", "val")
+    try:
+        for _ in range(iters):
+            assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
+            per_dim = (
+                assigned.select(
+                    "cluster_id", F.posexplode(F.col(vec_col)).alias("pos", "val")
+                )
+                .groupBy("cluster_id", "pos")
+                .agg(F.avg(F.col("val").cast("double")).alias("mean"))
             )
-            .groupBy("cluster_id", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("mean"))
-        )
-        rows = per_dim.collect()
-        new_centroids = {c: [0.0] * dim for c in range(len(centroids))}
-        seen = set()
-        for r in rows:
-            new_centroids[r.cluster_id][r.pos] = r.mean
-            seen.add(r.cluster_id)
-        # empty clusters keep their previous centroid
-        centroids = [
-            new_centroids[c] if c in seen else centroids[c]
-            for c in range(len(centroids))
-        ]
+            rows = per_dim.collect()
+            new_centroids = {c: [0.0] * dim for c in range(len(centroids))}
+            seen = set()
+            for r in rows:
+                new_centroids[r.cluster_id][r.pos] = r.mean
+                seen.add(r.cluster_id)
+            # empty clusters keep their previous centroid
+            centroids = [
+                new_centroids[c] if c in seen else centroids[c]
+                for c in range(len(centroids))
+            ]
+    finally:
+        # only centroids leave: a cached corpus left behind stays pinned
+        # and is substituted into any later plan that matches it
+        embeddings.unpersist()
     return centroids
 
 
@@ -2383,8 +2388,10 @@ def pq_search(
             for s in range(m)
         ]
         tables.append((r[0], dt))
-    q = embeddings.sparkSession.createDataFrame(
-        tables, schema=f"query_id {dict(queries.dtypes)[id_col]}, _dt array<array<double>>"
+    q = driver_frame(
+        embeddings.sparkSession,
+        {"query_id": [t[0] for t in tables], "_dt": [t[1] for t in tables]},
+        f"query_id {dict(queries.dtypes)[id_col]}, _dt array<array<double>>",
     )
     # the per-pair ADC sum is STATICALLY unrolled over the m subspaces
     # (m is known from the codebooks): m element_at lookups joined by
@@ -2532,12 +2539,15 @@ def ivfpq_search(
         ]
         for c in probed:
             probe_rows.append((r[0], int(c), dt))
-    q = embeddings.sparkSession.createDataFrame(
-        probe_rows,
-        schema=(
-            f"query_id {dict(queries.dtypes)[id_col]}, "
-            "cluster_id int, _dt array<array<double>>"
-        ),
+    q = driver_frame(
+        embeddings.sparkSession,
+        {
+            "query_id": [r[0] for r in probe_rows],
+            "cluster_id": [r[1] for r in probe_rows],
+            "_dt": [r[2] for r in probe_rows],
+        },
+        f"query_id {dict(queries.dtypes)[id_col]}, "
+        "cluster_id int, _dt array<array<double>>",
     )
     adc = None
     for s in range(m):

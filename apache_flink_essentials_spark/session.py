@@ -5,7 +5,8 @@ Covers the reference's execution-environment surface (SURVEY §2.7):
 ``DataStreams.scala:12``) maps to a configured ``SparkSession``. Parallelism
 knobs (``setParallelism``, ``DataStreams.scala:62``) map to
 ``spark.sql.shuffle.partitions`` + AQE. The driver small-path gate
-(`driver_small_path`) and the gate log live here too.
+(`driver_small_path`), the small-input byte gate (`small_input`) and the
+gate log live here too.
 
 Scale posture: these defaults are tuned so the SAME logical plans scale from
 local[32] tests to a 1000-executor cluster — AQE handles runtime partition
@@ -21,8 +22,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 # Rows per shuffle partition inside the iterative graph loops (connected
 # components, PageRank): ~2M slim rows ≈ 32 MB per partition.
 LOOP_ROWS_PER_PARTITION = 2_000_000
@@ -35,7 +34,12 @@ LOOP_ROWS_PER_PARTITION = 2_000_000
 # solves it on the driver.
 DRIVER_MAX_ROWS = LOOP_ROWS_PER_PARTITION
 
-# One line per adaptive-gate decision: gate, rows, bound, path taken.
+# The small-input byte bound shared by every plan-shape choice made on
+# source size: below it per-stage scheduling, not data, dominates, so the
+# operator takes its single-partition or non-materialising form.
+SMALL_INPUT_BYTES = 64 << 20
+
+# One line per adaptive-gate decision: gate, rows or bytes, bound, path.
 GATE_LOG = logging.getLogger("apache_flink_essentials_spark.gates")
 
 
@@ -53,6 +57,41 @@ def driver_small_path(gate: str, rows: int) -> bool:
     return small
 
 
+def _local_bytes(files: list[str]) -> int | None:
+    """Total byte size of ``files``, or None when there are none or any
+    is remote (s3/hdfs) or unstatable."""
+    from urllib.parse import unquote, urlparse
+
+    if not files or not all(f.startswith("file:") for f in files):
+        return None
+    try:
+        return sum(os.stat(unquote(urlparse(f).path)).st_size for f in files)
+    except OSError:
+        return None
+
+
+def _estimated_input_bytes(df: DataFrame) -> int | None:
+    """`_local_bytes` of the plan's leaf-scan files. ``inputFiles()`` only
+    resolves the logical plan and lists them: no physical planning."""
+    try:
+        return _local_bytes(df.inputFiles())
+    except Exception:
+        return None
+
+
+def small_input(gate: str, df: DataFrame) -> bool:
+    """True when ``df``'s local source files prove it smaller than
+    `SMALL_INPUT_BYTES`; an unknown (remote, in-memory) size is not
+    small. Logs the decision, the size as ``unknown`` when there is
+    none. Costs one ``inputFiles()`` probe, no job."""
+    size = _estimated_input_bytes(df)
+    small = size is not None and size < SMALL_INPUT_BYTES
+    GATE_LOG.info("gate %s: bytes=%s bound=%d path=%s", gate,
+                  "unknown" if size is None else size, SMALL_INPUT_BYTES,
+                  "small" if small else "large")
+    return small
+
+
 def driver_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
     """A driver small path's result: ``columns`` (name → list or numpy
     array, in ``schema`` order) shipped to the JVM as one Arrow table.
@@ -62,6 +101,12 @@ def driver_frame(spark: SparkSession, columns: dict, schema) -> DataFrame:
     import pyarrow as pa
 
     return spark.createDataFrame(pa.table(columns), schema)
+
+
+def default_cpus() -> int:
+    """local[N] and the default shuffle width: ``SPARK_GRAFT_CPUS``, else
+    the cpus this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -96,14 +141,11 @@ def get_spark(
         Sessions the engine does not build (an external driver's own
         session) keep PySpark's default.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -63,7 +63,6 @@ def count_window_stream(
     key_col: str,
     size: int,
     value_col: str | None = None,
-    output_mode: str = "update",
 ) -> DataFrame:
     """Keyed count windows: fire (and purge) once per ``size`` elements.
 
@@ -102,7 +101,7 @@ def count_window_stream(
             fn,
             outputStructType=COUNT_WINDOW_OUTPUT,
             stateStructType=_COUNT_WINDOW_STATE,
-            outputMode=output_mode,
+            outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -112,7 +111,6 @@ def count_trigger_stream(
     df: DataFrame,
     key_col: str,
     every: int,
-    output_mode: str = "update",
 ) -> DataFrame:
     """CountTrigger WITHOUT purge (TR1): every ``every`` elements per key,
     re-emit the still-growing total count — overlapping, growing aggregates
@@ -144,7 +142,7 @@ def count_trigger_stream(
             stateStructType=T.StructType(
                 [T.StructField("total", T.LongType(), False)]
             ),
-            outputMode=output_mode,
+            outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -155,7 +153,6 @@ def connect_ratio_stream(
     right: DataFrame,
     left_ts: str,
     right_ts: str,
-    output_mode: str = "update",
 ) -> DataFrame:
     """connect + CoProcessFunction (J4): both streams through ONE stateful
     operator keeping running per-side counts, emitting the ratio per input
@@ -200,7 +197,7 @@ def connect_ratio_stream(
                 T.StructField("right_count", T.LongType(), False),
             ]
         ),
-        outputMode=output_mode,
+        outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
@@ -232,7 +229,6 @@ def changelog_stream(
     value_col: str,
     op_col: str = "op",
     delete_op: str = "D",
-    output_mode: str = "update",
 ) -> DataFrame:
     """Streaming twin of ``cdc.apply_changelog``: maintain the latest
     surviving row per key across micro-batches, emitting the key's new state
@@ -283,7 +279,7 @@ def changelog_stream(
             fn,
             outputStructType=CHANGELOG_OUTPUT,
             stateStructType=_CHANGELOG_STATE,
-            outputMode=output_mode,
+            outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -319,7 +315,6 @@ def capped_session_stream(
     gap_seconds: int,
     max_duration_seconds: int | None = None,
     max_events: int | None = None,
-    output_mode: str = "append",
 ) -> DataFrame:
     """Streaming twin of ``windows.session_capped``: per-key gap sessions
     with hard duration/event-count caps, emitted as each capped sub-session
@@ -404,7 +399,7 @@ def capped_session_stream(
             fn,
             outputStructType=CAPPED_SESSION_OUTPUT,
             stateStructType=_CAPPED_SESSION_STATE,
-            outputMode=output_mode,
+            outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -416,7 +411,6 @@ def reorder_buffer_stream(
     ts_col: str,
     delay_seconds: int,
     payload_col: str,
-    output_mode: str = "append",
 ) -> DataFrame:
     """Per-key event-time reorder buffer: rows are held in state and
     released IN TIMESTAMP ORDER once the key's high-water mark (max ts
@@ -501,7 +495,7 @@ def reorder_buffer_stream(
                     T.StructField("released", T.LongType(), False),
                 ]
             ),
-            outputMode=output_mode,
+            outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -515,7 +509,6 @@ def strict_sequence_stream(
     pattern: list[str],
     within_seconds: int | None = None,
     order_cols: list[str] | None = None,
-    output_mode: str = "append",
 ) -> DataFrame:
     """Streaming twin of `patterns.match_strict_sequence` (Flink CEP
     ``next()`` chain): per key, emit a match whenever the last L event
@@ -595,7 +588,7 @@ def strict_sequence_stream(
                     ),
                 ]
             ),
-            outputMode=output_mode,
+            outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -608,7 +601,6 @@ def ewma_anomaly_stream(
     value_col: str,
     alpha: float = 0.3,
     z: float = 3.0,
-    output_mode: str = "append",
 ) -> DataFrame:
     """Streaming twin of `timeseries.ewma_anomaly`: per-key EWMA
     control-chart state (3 floats — constant per key) advanced by the SAME
@@ -667,7 +659,7 @@ def ewma_anomaly_stream(
                     T.StructField("n", T.LongType(), False),
                 ]
             ),
-            outputMode=output_mode,
+            outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
@@ -726,7 +718,6 @@ def last_touch_attribution_stream(
     id_col: str,
     target: str = "purchase",
     within_seconds: int = 3600,
-    output_mode: str = "append",
 ) -> DataFrame:
     """Streaming twin of `patterns.last_touch_attribution` — and the
     literal Flink keyed-ProcessFunction shape the batch docstring alludes
@@ -805,7 +796,7 @@ def last_touch_attribution_stream(
                     T.StructField("last_type", T.StringType(), False),
                 ]
             ),
-            outputMode=output_mode,
+            outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )

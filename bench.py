@@ -34,6 +34,7 @@ sys.path[:0] = [HERE, os.path.join(HERE, "scripts")]
 
 from apache_flink_essentials_spark import get_spark  # noqa: E402
 from apache_flink_essentials_spark import registry  # noqa: E402
+from apache_flink_essentials_spark.session import default_cpus  # noqa: E402
 from profile_query import Profiler, duck, oracle_s  # noqa: E402
 
 HEADLINE = [
@@ -311,7 +312,7 @@ def main() -> None:
     # the task count is a measured ~12% total win with zero plan changes
     # (AQE still re-sizes every exchange from map-output bytes; a real
     # cluster deployment sizes this to data, not cores).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark(
         app_name="bench",
         shuffle_partitions=max(8, cpus // 2),

@@ -15,8 +15,8 @@ Catalyst's analysis, optimization and planning times; execution time,
 jobs, stages and tasks; exchanges, codegen stages and Python-eval nodes of
 the executed (post-AQE) plan, with the bytes of each exchange; and the
 session's ``cpus``; and ``gates``, the adaptive-gate decisions
-(``session.GATE_LOG``: driver small path, salting) logged while the
-query was built. Counters come from ``perfbench/spans.py`` and keep its
+(``session.GATE_LOG``: driver small path, salting, small input) logged
+while the query was built. Counters come from ``perfbench/spans.py`` and keep its
 names. Where a DuckDB oracle exists, its time (same warm-up, min of four)
 is the ``oracle_s`` column.
 
@@ -129,7 +129,9 @@ class _GateRecorder(logging.Handler):
         self.decisions: list[dict] = []
 
     def emit(self, record):
-        self.decisions.append(dict(zip(("gate", "rows", "bound", "path"), record.args)))
+        # the small-input gate measures bytes=, every other gate rows=
+        size = "bytes" if "bytes=" in record.msg else "rows"
+        self.decisions.append(dict(zip(("gate", size, "bound", "path"), record.args)))
 
 
 class Profiler:

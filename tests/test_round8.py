@@ -208,11 +208,14 @@ def test_acf_matches_numpy(spark):
 
 # ---- transform.global_prefix_sum ----------------------------------------
 
-def test_global_prefix_sum_matches_window(spark, tmp_path):
+def test_global_prefix_sum_matches_window(spark, tmp_path, monkeypatch):
     from pyspark.sql.window import Window
+    from apache_flink_essentials_spark import session
     from apache_flink_essentials_spark.operators.transform import (
         global_prefix_sum,
     )
+
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
 
     # multi-file parquet input => the distributed two-phase path
     src = spark.range(0, 1000).select(
@@ -223,9 +226,7 @@ def test_global_prefix_sum_matches_window(spark, tmp_path):
     df = spark.read.parquet(path)
     got = {
         r.id: r.running_total
-        for r in global_prefix_sum(
-            df, ["id"], "v", small_input_bytes=0
-        ).collect()
+        for r in global_prefix_sum(df, ["id"], "v").collect()
     }
     want = {
         r.id: r.w

@@ -255,3 +255,48 @@ def test_small_path_results_run_no_python_worker(spark):
                for k, df in outputs.items()}
     assert [k for k, text in lineage.items() if "PythonRDD" in text] == []
     assert outputs["triangles"].first().n_triangles == 1
+
+
+def _python_rdd_leaves(df):
+    """Leaves of ``df``'s physical plan whose RDD lineage holds a
+    PythonRDD; unlike ``toRdd`` this also sees broadcast build sides."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())
+            if "PythonRDD" in leaves.apply(i).execute().toDebugString()]
+
+
+def test_driver_built_plan_inputs_run_no_python_worker(spark, monkeypatch):
+    # lag tables, quantile lists, vocabulary sizes, PQ distance tables
+    # and the salted join's hot keys are computed on the driver and
+    # shipped as one Arrow table
+    # (`session.driver_frame`); the inputs are parquet, so any PythonRDD
+    # in an output's plan comes from the operator
+    from conftest import SF_SMOKE as sf
+
+    from apache_flink_essentials_spark.io import load_table
+    from apache_flink_essentials_spark.operators import sketches as SK
+    from apache_flink_essentials_spark.operators import skew
+    from apache_flink_essentials_spark.operators import text as X
+
+    events = load_table(spark, "events", sf)
+    emb = load_table(spark, "embeddings", sf)
+    books = V.pq_fit(emb, m=4, k=8, iters=1, dim=64)
+    cents = V.kmeans_fit(emb, k=4, iters=1, dim=64)
+    q = emb.filter(F.col("vec_id") < 3)
+    monkeypatch.setattr(skew, "SALT_THRESHOLD", 1)  # every user is hot
+    users = events.select("user_id", F.col("event_id").alias("id_a"))
+    outputs = {
+        "lag_correlation": TS.lag_correlation(events, "ts", "event_type", "view", "click"),
+        "acf": TS.acf(events, "ts", "value"),
+        "portable_quantile_bands": SK.portable_quantile_bands(events, "value"),
+        "grouped_quantile_bands": SK.grouped_quantile_bands(events, "value", ["event_type"]),
+        "coverage_from_counts": X.coverage_from_counts(
+            X.token_counts(load_table(spark, "documents", sf))),
+        "pq_search": V.pq_search(emb, q, books),
+        "ivfpq_search": V.ivfpq_search(emb, q, cents, books),
+        "salted join, broadcast hot keys": skew.hot_bucket_salted_join(
+            users, users, "user_id", max_inline_hot=0),
+    }
+    assert {k: _python_rdd_leaves(df) for k, df in outputs.items()} \
+        == {k: [] for k in outputs}
+    assert all(df.count() > 0 for df in outputs.values())

@@ -827,15 +827,16 @@ def test_dsir_weights_favor_target_language(spark):
     assert got[0] > 0 > got[1]
 
 
-def test_bigram_logprob_window_and_join_paths_agree(spark):
+def test_bigram_logprob_window_and_join_paths_agree(spark, monkeypatch):
     # The small-input window formulation and the 100 TB shuffle-join
     # formulation must agree bit-for-bit (order-independent exact integer
     # micro-log sums). A file-backed input exercises the size probe.
+    from apache_flink_essentials_spark import session
+
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     small = X.bigram_logprob(df).orderBy("doc_id").collect()
-    large = X.bigram_logprob(
-        df, window_max_input_bytes=0
-    ).orderBy("doc_id").collect()
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
+    large = X.bigram_logprob(df).orderBy("doc_id").collect()
     assert small == large
     assert len(small) > 0
 
@@ -1010,6 +1011,21 @@ def test_pq_encode_arrow_matches_expression(spark):
         for r in pq_encode(emb, books, use_arrow=False).collect()
     }
     assert a == e and len(a) == 500
+
+
+def test_kmeans_fit_leaves_nothing_cached(spark):
+    # only centroids come back, so the fit's cached corpus must not
+    # outlive it: a leftover entry pins storage for the session and can
+    # be substituted into later plans that match it
+    from conftest import SF_SMOKE
+
+    from apache_flink_essentials_spark.io import load_table
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    emb = load_table(spark, "embeddings", SF_SMOKE)
+    assert len(V.kmeans_fit(emb, k=4, iters=2, dim=64)) == 4
+    assert cache.isEmpty()
 
 
 def test_pq_fit_arrow_matches_expression_path(spark):
