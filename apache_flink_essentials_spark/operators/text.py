@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -458,27 +457,21 @@ def tfidf_top_terms(
     IEEE division of exact integer operands is — same ranking semantics
     (N/df is a monotone transform of log(N/df)), deterministic everywhere.
 
-    Plan: the (doc, term) tf table is the only big intermediate and is
-    PERSISTED (memory-and-disk — the same trade shuffle files already make)
-    so the vocabulary aggregation derives from it instead of re-running the
-    tokenize+aggregate subtree; the df table and the one-row doc count N
-    are vocabulary-/scalar-sized and are BROADCAST back onto it (no
-    re-shuffle of the big side); the final per-doc top-k is one row_number
-    window partitioned by doc — at scale the rank-1..k filter pushes into
-    the sort as a per-partition top-k. 4 planned exchanges total: tf agg,
-    df agg (partial-aggregated to ~vocab size per task), the scalar N agg,
-    and the rank window. Deterministic tiebreak: (score desc, tf desc,
-    term asc).
+    Plan: one pass over the token stream. The (doc, term) tf table is the
+    only big intermediate; df is a count over a window keyed on term on
+    that same table (one row per (doc, term), so the count is the
+    document frequency), so the tokenize+aggregate subtree runs once and
+    nothing is cached. The one-row doc count N is BROADCAST onto it; the
+    final per-doc top-k is one row_number window partitioned by doc — at
+    scale the rank-1..k filter pushes into the sort as a per-partition
+    top-k. 4 planned exchanges total: tf agg, the term window, the scalar
+    N agg, and the rank window. Deterministic tiebreak: (score desc, tf
+    desc, term asc).
     """
     tok = df.select(
         F.col(id_col), F.explode(tokens_expr(text_col)).alias("term")
     ).filter(F.col("term") != "")
-    tf = (
-        tok.groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dftab = tf.groupBy("term").agg(F.count("*").alias("df"))
+    tf = tok.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     # separate scalar scan of the id column only (not derived from tf: docs
     # whose text tokenizes to nothing still count toward N). ids_unique is
     # the documents-table contract (one row per document) and makes N a
@@ -488,7 +481,7 @@ def tfidf_top_terms(
     else:
         n = df.agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
     scored = (
-        tf.join(F.broadcast(dftab), "term")
+        tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
         .join(F.broadcast(n))
         .withColumn(
             "tfidf",
@@ -594,14 +587,15 @@ def source_term_affinity(
     (At 100 TB promote the products to DECIMAL(38,0); counts here are far
     below 2^31 so BIGINT×BIGINT is exact.)
 
-    Plan: one explode → (stratum, term) hash-agg, PERSISTED (the table is
-    only |vocab|×|strata| rows — tiny next to the token stream) so the three
-    derived counts never re-run the tokenize subtree. Per-term totals attach
-    via a window keyed on term (rows per term ≤ |strata| after aggregation,
-    so no stopword skew); the scalar corpus total broadcasts back; the
-    per-stratum total and the rank share ONE stratum-keyed exchange (both
-    windows partition by source, so the planner inserts a single shuffle
-    with two sorts). 4 planned exchanges total.
+    Plan: one explode → (stratum, term) hash-agg, and every count derives
+    from that one table without caching it. Per-term totals attach via a
+    window keyed on term (rows per term ≤ |strata| after aggregation, so
+    no stopword skew); the per-stratum total and the rank share ONE
+    stratum-keyed exchange (both windows partition by source, so the
+    planner inserts a single shuffle with two sorts). The corpus total is
+    a scalar token count over the documents, which tokenizes them a
+    second time but with no explode and no grouping, and broadcasts
+    back. 4 planned exchanges total.
     """
     pairs = (
         df.select(F.col(strata_col).alias("source"),
@@ -609,9 +603,9 @@ def source_term_affinity(
         .filter(F.col("term") != "")
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c_st"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_total = F.broadcast(pairs.agg(F.sum("c_st").alias("n_tot")))
+    n_total = F.broadcast(df.where(F.col(text_col).isNotNull()).agg(F.sum(F.expr(
+        f"size(filter({tokens_sql(text_col)}, t -> t != ''))")).alias("n_tot")))
     w_term = Window.partitionBy("term")
     w_src = Window.partitionBy("source")
     scored = (

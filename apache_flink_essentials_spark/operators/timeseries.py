@@ -227,10 +227,13 @@ def gapfill_interpolate(
     too, so results are bit-identical across engines.
 
     Scale: same shape as LOCF — grid from each key's own span (never
-    keys x calendar), one (key) sort carrying BOTH direction passes
-    (Spark evaluates the preceding- and following-frame windows over the
-    same sorted partition without re-shuffling; the plan has exactly one
-    exchange for the window stage).
+    keys x calendar). Both directions are running frames, O(n) per key:
+    "previous" is ``last(ignorenulls)`` over ``bucket`` ascending and
+    "next" is ``last(ignorenulls)`` over ``bucket`` descending, each
+    ``(unboundedPreceding, currentRow)``. A ``(currentRow,
+    unboundedFollowing)`` frame would be recomputed for every row, O(n²)
+    per key. The two orders share the (key) partitioning, so the window
+    stage has exactly one exchange (and one sort per direction).
     """
     order = [F.col(ts_col).cast("long").desc()] + [
         F.desc(c) for c in (seq_cols or [])
@@ -257,10 +260,10 @@ def gapfill_interpolate(
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    wf = (
+    wn = (
         Window.partitionBy(key_col)
-        .orderBy("bucket")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(F.desc("bucket"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     obs_bucket = F.when(F.col("_v").isNotNull(), F.col("bucket"))
     joined = grid.join(obs, [key_col, "bucket"], "left").select(
@@ -268,8 +271,8 @@ def gapfill_interpolate(
         "bucket",
         F.last("_v", ignorenulls=True).over(wp).alias("_pv"),
         F.last(obs_bucket, ignorenulls=True).over(wp).alias("_pb"),
-        F.first("_v", ignorenulls=True).over(wf).alias("_nv"),
-        F.first(obs_bucket, ignorenulls=True).over(wf).alias("_nb"),
+        F.last("_v", ignorenulls=True).over(wn).alias("_nv"),
+        F.last(obs_bucket, ignorenulls=True).over(wn).alias("_nb"),
     )
     frac = (F.col("bucket") - F.col("_pb")) / (F.col("_nb") - F.col("_pb"))
     interp = F.when(F.col("_nb") == F.col("_pb"), F.col("_pv")).otherwise(

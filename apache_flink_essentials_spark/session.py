@@ -39,6 +39,12 @@ DRIVER_MAX_ROWS = LOOP_ROWS_PER_PARTITION
 # operator takes its single-partition or non-materialising form.
 SMALL_INPUT_BYTES = 64 << 20
 
+# The stream checkpoint manager `get_spark` picks for a local-mode session
+# on local disk (see its docstring).
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                         "FileSystemBasedCheckpointFileManager")
+
 # One line per adaptive-gate decision: gate, rows or bytes, bound, path.
 GATE_LOG = logging.getLogger("apache_flink_essentials_spark.gates")
 
@@ -140,6 +146,23 @@ def get_spark(
         mode, so analysis errors still raise at the building line.
         Sessions the engine does not build (an external driver's own
         session) keep PySpark's default.
+      * Stream checkpoints go through Spark's FileSystem-based checkpoint
+        manager (`FS_CHECKPOINT_MANAGER`) when the session runs in local
+        mode and its ``fs.defaultFS`` is ``file:``. Spark's default,
+        FileContext-based manager renames every checkpoint file (offsets,
+        commits, sink log, each state-store delta and its checksum)
+        through Hadoop's ``RawLocalFileSystem.getFileLinkStatus``; without
+        libhadoop that forks a ``readlink`` process for both ends of each
+        rename, about 3 ms each. Over one traced 4-cpu ``stream_replay``
+        run (five drains), JFR counted 3,656 ``readlink`` forks with the
+        default manager and none with this one, and per-batch
+        ``state_commit_ms`` fell from 245–291 ms to 13–16 ms. On
+        ``file:`` both managers do the same: an exists check, then one
+        rename(2), and both write the same ``N.delta``, ``N.delta.crc``
+        and ``.N.delta.crc`` files. Precondition: a local-mode session
+        keeps its stream checkpoints on local disk (on an object store
+        this manager's rename is not atomic). Cluster sessions keep
+        Spark's default, and ``extra_conf`` still overrides the choice.
     """
     cpus = default_cpus()
     builder = (
@@ -179,7 +202,13 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    if (CHECKPOINT_MANAGER_CONF not in (extra_conf or {})
+            and sc.master.startswith("local")
+            and sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///").startswith("file:")):
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
+    return spark
 
 
 def loop_partitions(cap: int, rows: int) -> int:

@@ -97,15 +97,15 @@ def test_q7_broadcasts_all_dimensions(spark):
 
 def test_text_aggregate_queries_exchange_budget(spark):
     # the derived-count queries must not re-plan their exploded-token
-    # subtree per count: persist + window/broadcast keeps each at <= 4
-    # planned exchanges (was 6 and 9)
+    # subtree per count: windows over one token table plus a broadcast
+    # scalar keep each at <= 4 planned exchanges (was 6 and 9)
     from apache_flink_essentials_spark.io import load_table
     from apache_flink_essentials_spark.operators import text as X
     from apache_flink_essentials_spark.plans import count_exchanges
 
-    # budget is defined on a FRESH plan: if an earlier test materialized the
-    # ops' persisted tf table, explain("formatted") embeds the
-    # InMemoryRelation's build plan and its exchanges double-count
+    # budget is defined on a FRESH plan: if an earlier test left a matching
+    # relation cached, explain("formatted") embeds the InMemoryRelation's
+    # build plan and its exchanges double-count
     spark.catalog.clearCache()
     docs = load_table(spark, "documents", SF_SMOKE)
     assert count_exchanges(X.tfidf_top_terms(docs, k=3)) <= 4

@@ -665,6 +665,44 @@ def test_timeout_session_stream_plan_has_no_python_state(spark):
     assert "SessionWindowStateStoreSave" in plan
 
 
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    # a local session on file: takes the FileSystem-based checkpoint
+    # manager (no forked readlink per rename); the class must resolve in
+    # this Spark, and a drain must leave the same state-store files as
+    # under Spark's default FileContext-based manager
+    from apache_flink_essentials_spark import session
+
+    key = session.CHECKPOINT_MANAGER_CONF
+    assert spark.conf.get(key) == session.FS_CHECKPOINT_MANAGER
+    spark._jvm.java.lang.Class.forName(session.FS_CHECKPOINT_MANAGER)
+
+    def state_files(manager, name):
+        spark.conf.set(key, manager)
+        ck = tmp_path / name
+        q = (
+            stateful.timeout_session_stream(
+                _session_replay(spark, [("a", 1.0), ("a", 2.0)]),
+                "user_id", "ts", gap_seconds=60,
+            )
+            .writeStream.format("memory").queryName(name).outputMode("append")
+            .option("checkpointLocation", str(ck)).trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        spark.catalog.dropTempView(name)
+        return {p.name for p in (ck / "state" / "0" / "0").iterdir()}
+
+    context = ("org.apache.spark.sql.execution.streaming.checkpointing."
+               "FileContextBasedCheckpointFileManager")
+    try:
+        fc = state_files(context, "ck_file_context")
+    finally:
+        spark.conf.set(key, session.FS_CHECKPOINT_MANAGER)
+    fs = state_files(session.FS_CHECKPOINT_MANAGER, "ck_file_system")
+    assert fs == fc
+    assert {"1.delta", "1.delta.crc", ".1.delta.crc",
+            "2.delta", "2.delta.crc", ".2.delta.crc"} <= fs
+
+
 def test_stateful_ewma_recovers_groupstate_across_restart(spark, events):
     # GroupState recovery: run the EWMA stream over the first time-half,
     # stop, append the second half, restart from the SAME checkpoint — the

@@ -1028,6 +1028,21 @@ def test_kmeans_fit_leaves_nothing_cached(spark):
     assert cache.isEmpty()
 
 
+def test_text_count_operators_leave_nothing_cached(spark):
+    # tf-idf and source affinity derive every count from one pass over
+    # their token table, so running them pins no cache entry
+    from conftest import SF_SMOKE
+
+    from apache_flink_essentials_spark.io import load_table
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    docs = load_table(spark, "documents", SF_SMOKE)
+    assert X.tfidf_top_terms(docs, k=3).collect()
+    assert X.source_term_affinity(docs, k=5).collect()
+    assert cache.isEmpty()
+
+
 def test_pq_fit_arrow_matches_expression_path(spark):
     from apache_flink_essentials_spark.operators.vector import pq_fit
 
