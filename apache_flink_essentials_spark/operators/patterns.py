@@ -99,14 +99,18 @@ def match_absence(
     (e.g. view with no purchase in 30 min).
 
     Joinless: the next ``absent`` timestamp at or after each row is a
-    running ``min`` over the FOLLOWING rows of the key's sorted timeline
-    (one window pass over the same sort the match needs anyway). Returns
-    (key, ts, next_<absent>_ts nullable).
+    running ``min`` over the rows that follow it in the key's (ts,
+    *order_cols) timeline, taken over the reversed order (every column
+    descending; nulls last mirrors ascending's nulls first) with a
+    ``(unboundedPreceding, -1)`` frame. Spark grows that frame row by row,
+    one pass per key; a ``(1, unboundedFollowing)`` frame is recomputed
+    for every row, O(n²) per key. Returns (key, ts, next_<absent>_ts
+    nullable).
     """
     w = (
         Window.partitionBy(key_col)
-        .orderBy(ts_col, *order_cols)
-        .rowsBetween(1, Window.unboundedFollowing)
+        .orderBy(*[F.desc(c) for c in (ts_col, *order_cols)])
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
     next_absent = F.min(
         F.when(F.col(type_col) == absent, F.col(ts_col))

@@ -16,9 +16,16 @@ only a starting hint that AQE resizes from actual map-output statistics.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import logging
 import os
+import shutil
+import subprocess
+import tempfile
 from contextlib import contextmanager
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,6 +51,14 @@ SMALL_INPUT_BYTES = 64 << 20
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
                          "FileSystemBasedCheckpointFileManager")
+
+# The `file:` file system `get_spark` serves on a local-mode session (see
+# its docstring): its Java source, and where its compiled classes are kept,
+# one directory per source hash and Hadoop jar.
+LOCAL_FS_CONF = "spark.hadoop.fs.file.impl"
+LOCAL_FS_CLASS = "apache_flink_essentials_spark.jvm.NioLocalFileSystem"
+_LOCAL_FS_SOURCE = Path(__file__).parent / "jvm" / "NioLocalFileSystem.java"
+_LOCAL_FS_CACHE = _LOCAL_FS_SOURCE.parent / "classes"
 
 # One line per adaptive-gate decision: gate, rows or bytes, bound, path.
 GATE_LOG = logging.getLogger("apache_flink_essentials_spark.gates")
@@ -115,6 +130,69 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+@functools.cache
+def _local_fs_classes() -> str | None:
+    """The class directory holding `LOCAL_FS_CLASS`, compiled on first use
+    with ``javac --release 17`` against the Hadoop client jar of the Spark
+    home the session launches from. The classes are written to a temp
+    directory inside `_LOCAL_FS_CACHE`, then renamed into place, so a
+    concurrent compile never leaves a partial directory. None, logged
+    once per process, when javac or the jar is missing or the compile
+    fails."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    log = logging.getLogger(__name__)
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars",
+                                         "hadoop-client-api-*.jar")))
+    javac = shutil.which("javac")
+    if not jars or javac is None:
+        log.warning("no %s: keeping Hadoop's local file system",
+                    "javac" if jars else "hadoop-client-api jar")
+        return None
+    jar = jars[-1]
+    key = hashlib.sha256(_LOCAL_FS_SOURCE.read_bytes()
+                         + os.path.basename(jar).encode()).hexdigest()[:16]
+    classes = _LOCAL_FS_CACHE / key
+    if classes.is_dir():
+        return str(classes)
+    try:
+        _LOCAL_FS_CACHE.mkdir(exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=_LOCAL_FS_CACHE, prefix=".tmp-",
+                                         ignore_cleanup_errors=True) as tmp:
+            subprocess.run([javac, "--release", "17", "-cp", jar, "-d", tmp,
+                            str(_LOCAL_FS_SOURCE)], check=True, capture_output=True)
+            try:
+                os.rename(tmp, classes)
+            except OSError:  # another process renamed its copy in first
+                pass
+    except (OSError, subprocess.CalledProcessError) as e:
+        log.warning("compiling %s failed (%s): keeping Hadoop's local file "
+                    "system", _LOCAL_FS_SOURCE.name, e)
+        return None
+    return str(classes)
+
+
+def _local_fs_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """Builder settings that serve ``file:`` through `LOCAL_FS_CLASS` on a
+    ``local``/``local[N]`` master: the class directory appended to the
+    caller's ``spark.driver.extraClassPath``, and `LOCAL_FS_CONF`. Empty
+    for any other master, when the caller sets `LOCAL_FS_CONF` itself, when
+    the class does not compile, or when this process's JVM is already
+    running: its classpath is fixed, so it keeps whatever it launched
+    with."""
+    from pyspark import SparkContext
+
+    if (LOCAL_FS_CONF in extra_conf or SparkContext._jvm is not None
+            or not (master == "local" or master.startswith("local["))):
+        return {}
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    cp = extra_conf.get("spark.driver.extraClassPath")
+    return {"spark.driver.extraClassPath": f"{cp}{os.pathsep}{classes}" if cp else classes,
+            LOCAL_FS_CONF: LOCAL_FS_CLASS}
+
+
 def get_spark(
     app_name: str = "apache-flink-essentials-spark",
     master: str | None = None,
@@ -163,11 +241,33 @@ def get_spark(
         keeps its stream checkpoints on local disk (on an object store
         this manager's rename is not atomic). Cluster sessions keep
         Spark's default, and ``extra_conf`` still overrides the choice.
+      * A local-mode session (``local`` or ``local[N]``, not
+        ``local-cluster``) serves ``file:`` through `LOCAL_FS_CLASS`,
+        Hadoop's ``LocalFileSystem`` whose raw layer sets permissions
+        with ``java.nio`` instead of ``RawLocalFileSystem.setPermission``.
+        Without libhadoop that method forks a ``chmod`` for every file
+        Hadoop creates (each parquet part file, checkpoint offset,
+        commit, sink log entry and state delta, and each one's ``.crc``)
+        and every directory it makes, about 3 ms each and about 460 per
+        ``stream_replay`` drain; no Hadoop setting avoids it. Checksums,
+        the mode bits set and every other call are Hadoop's own; a
+        sticky bit or a non-POSIX file store takes the stock ``chmod``
+        path. Precondition: local mode, where executors share the
+        driver's JVM and so its classpath; cluster sessions keep Hadoop's
+        stock file system. The class is compiled once per source and
+        Hadoop jar (about 1 s) into ``jvm/classes/<hash>/`` next to
+        its source, appended to the caller's
+        ``spark.driver.extraClassPath`` and named in
+        ``spark.hadoop.fs.file.impl``; ``extra_conf`` setting that key
+        wins. Without ``javac`` the session keeps the stock file system
+        and logs it once.
     """
     cpus = default_cpus()
+    master = master or f"local[{cpus}]"
+    extra_conf = extra_conf or {}
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -200,11 +300,11 @@ def get_spark(
         # spark.conf.set inside that query (it is runtime-settable) and
         # restore after — never globally.
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**extra_conf, **_local_fs_conf(master, extra_conf)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     sc = spark.sparkContext
-    if (CHECKPOINT_MANAGER_CONF not in (extra_conf or {})
+    if (CHECKPOINT_MANAGER_CONF not in extra_conf
             and sc.master.startswith("local")
             and sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///").startswith("file:")):
         spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)

@@ -6,6 +6,7 @@
 QUERY is a registry name, ``@headline`` (bench.py's set) or ``@all``. Each
 query runs under ``setJobGroup(name)``: one warm-up run, then the fastest of
 four runs is reported, its output materialized through the ``noop`` sink.
+Every run starts with an empty cache (``spark.catalog.clearCache()``).
 
 A query's cost has two sides: the jobs it runs while its DataFrame is
 *built* (eager counts, checkpoints, driver collects) and the jobs its plan
@@ -154,7 +155,10 @@ class Profiler:
 
     def sample(self, name: str, fixture: str) -> dict:
         """Build ``name`` over ``fixture`` and write it to ``noop`` once;
-        the run's record. Counter reads are not timed."""
+        the run's record. Counter reads are not timed. The session's cache
+        is cleared first, so an operator that persists inside its plan is
+        never timed reading the entry its previous run left behind."""
+        self.spark.catalog.clearCache()
         status = self.status
         self.spark.sparkContext.setJobGroup(name, name)
         status.drain()

@@ -36,3 +36,25 @@ def test_triangle_stats_job_budget(spark):
     # distributed census ran 6 + 8); one job of slack
     assert rec["registry.build_jobs"] + rec["operators.jobs"] <= 8
     assert [g["path"] for g in rec["gates"] if g["gate"] == "triangles"] == ["driver"]
+
+
+def test_every_sample_starts_with_an_empty_cache(spark):
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from profile_query import RUNS, Profiler
+
+    session = spark.newSession()
+    prof = Profiler(session)
+    cache = session._jsparkSession.sharedState().cacheManager()
+    empty_at_build = []
+
+    def persisting(s, fixture):
+        # an operator that persists an intermediate inside its plan
+        empty_at_build.append(cache.isEmpty())
+        return s.range(1000).selectExpr("id % 7 AS k").persist()
+
+    prof.queries = {"persisting": persisting}
+    try:
+        prof.profile("persisting", SF_SMOKE)
+        assert empty_at_build == [True] * (RUNS + 1)  # warm-up + timed runs
+    finally:
+        session.catalog.clearCache()

@@ -148,6 +148,44 @@ def test_cep_strict_sequence_and_absence(spark):
     assert [(r.user_id, r.next_absent_ts) for r in ab] == [(2, None)]
 
 
+def test_match_absence_linear_on_one_hot_key(spark):
+    # 10^5 events on one key, one a minute, every 100th a purchase: a
+    # frame running to UNBOUNDED FOLLOWING is recomputed per row (O(n^2)
+    # per key); the reversed running frame is one pass
+    import time
+
+    from apache_flink_essentials_spark.operators import patterns as PT
+
+    n = 100_000
+    df = spark.range(n).select(
+        F.lit(1).alias("user_id"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+        F.when(F.col("id") % 100 == 99, "purchase").otherwise("view")
+        .alias("event_type"),
+        F.col("id").alias("event_id"),
+    )
+    out = PT.match_absence(
+        df, "user_id", "ts", "event_type",
+        first="view", absent="purchase", within_seconds=1800,
+        order_cols=["event_id"],
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString().lower()
+    assert "unboundedfollowing" not in plan
+    t0 = time.perf_counter()
+    got = out.agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("ts").cast("long") % 6000).alias("offsets"),
+        F.sum(F.col("next_absent_ts").cast("long") % 6000).alias("next_offsets"),
+    ).first()
+    assert time.perf_counter() - t0 < 5
+    # a view at minute i (i % 100 < 99) waits 99 - i % 100 minutes for the
+    # next purchase: more than 30 exactly when i % 100 < 69
+    blocks = n // 100
+    assert got.n == 69 * blocks
+    assert got.offsets == blocks * sum(60 * j for j in range(69))
+    assert got.next_offsets == blocks * 69 * 60 * 99
+
+
 def test_transition_counts_hand_example(spark):
     rows = [
         (1, 1, 1, "a"), (2, 1, 2, "b"), (3, 1, 3, "a"), (4, 1, 4, "b"),
