@@ -708,25 +708,16 @@ def kmv_distinct(df: DataFrame, col: str, k: int = 64) -> DataFrame:
 
     Scale: ONE distinct-hash aggregate (map-side combined), then a
     TakeOrderedAndProject top-k — the k-smallest never funnels the full
-    hash set through one task; the exact count shares the same distinct
-    relation. At 100 TB the audit column is the expensive half — drop
-    ``n_exact`` and the sketch runs in one pass over the scan.
+    hash set through one task; the exact count reads the same distinct
+    aggregate through one reused exchange. At 100 TB the audit column is
+    the expensive half — drop ``n_exact`` and the sketch runs in one pass
+    over the scan.
     """
     h = F.expr(
         f"cast(conv(substring(md5(cast(`{col}` as string)), 1, 12),"
         f" 16, 10) as bigint)"
     )
-    # lazy localCheckpoint (not persist): the distinct-hash relation
-    # materializes once at the collect and BOTH branches (top-k subquery
-    # + exact count) read it; the checkpoint is GC-cleaned with the
-    # DataFrame, where an un-unpersisted cache would pin storage for the
-    # session (no safe unpersist point exists before the caller's action)
-    hashes = (
-        df.where(F.col(col).isNotNull())
-        .select(h.alias("_h"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    hashes = df.where(F.col(col).isNotNull()).select(h.alias("_h")).distinct()
     kth = (
         hashes.orderBy("_h").limit(k)
         .agg(

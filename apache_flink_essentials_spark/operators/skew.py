@@ -77,9 +77,12 @@ def replicate_join_skewed(
 
 # The salting gate, defined once for every hot-bucket join: a key is hot
 # when more than SALT_THRESHOLD ``a`` rows share it, and a hot key gets
-# ceil(n_k / SALT_THRESHOLD) slices, at most SALT_MAX_SLICES.
+# ceil(n_k / SALT_THRESHOLD) slices, at most SALT_MAX_SLICES. Up to
+# SALT_MAX_INLINE_HOT hot keys ride inline as a map literal; more join
+# back as a broadcast relation.
 SALT_THRESHOLD = 4096
 SALT_MAX_SLICES = 64
+SALT_MAX_INLINE_HOT = 64
 
 
 def hot_bucket_salted_join(
@@ -87,7 +90,6 @@ def hot_bucket_salted_join(
     b: DataFrame,
     key: str,
     id_a: str = "id_a",
-    max_inline_hot: int = 64,
 ) -> DataFrame:
     """Self-band-join ``a ⋈ b ON key`` with deterministic salting of hot
     band buckets only. ``a`` must carry one row per corpus element — its
@@ -104,11 +106,11 @@ def hot_bucket_salted_join(
     aggregate job over ``a`` — the only one: the broadcast form below
     ships the collected rows, it never re-runs the aggregate) and the
     plan adapts, logging its choice as the ``salt_join`` gate
-    (`session.log_gate`: hot keys vs ``max_inline_hot``):
+    (`session.log_gate`: hot keys vs `SALT_MAX_INLINE_HOT`):
 
       * no hot keys (the common case): the plain unsalted equi-join —
         zero salt columns, zero extra joins in the plan;
-      * ≤ ``max_inline_hot`` hot keys: the per-key slice counts inline
+      * ≤ `SALT_MAX_INLINE_HOT` hot keys: the per-key slice counts inline
         as ONE map literal (an O(|hot|) lookup per row — trivial at the
         64-key cap), still no join against the hot set;
       * more (a pathologically hot corpus): the collected hot set joins
@@ -133,10 +135,10 @@ def hot_bucket_salted_join(
     hot_rows = hot.collect()
     path = (
         "plain" if not hot_rows
-        else "inline" if len(hot_rows) <= max_inline_hot
+        else "inline" if len(hot_rows) <= SALT_MAX_INLINE_HOT
         else "broadcast"
     )
-    log_gate("salt_join", len(hot_rows), max_inline_hot, path)
+    log_gate("salt_join", len(hot_rows), SALT_MAX_INLINE_HOT, path)
     if path == "plain":
         return a.join(b, on=key)
     if path == "inline":

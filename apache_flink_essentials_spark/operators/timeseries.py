@@ -1289,7 +1289,6 @@ def seasonal_naive_eval(
         .select(
             "bin", (F.col("_s").cast("double") / F.col("_n")).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     prev = bins.select(F.col("bin").alias("bin_p"), F.col("x").alias("xp"))
     season = (

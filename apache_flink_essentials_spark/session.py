@@ -9,9 +9,10 @@ knobs (``setParallelism``, ``DataStreams.scala:62``) map to
 gate log live here too.
 
 Scale posture: these defaults are tuned so the SAME logical plans scale from
-local[32] tests to a 1000-executor cluster — AQE handles runtime partition
-coalescing and skew-join splitting; explicit shuffle-partition counts are
-only a starting hint that AQE resizes from actual map-output statistics.
+local[`default_cpus()`] tests to a 1000-executor cluster — AQE handles
+runtime partition coalescing and skew-join splitting; explicit
+shuffle-partition counts are only a starting hint that AQE resizes from
+actual map-output statistics.
 """
 
 from __future__ import annotations

@@ -38,6 +38,19 @@ def test_triangle_stats_job_budget(spark):
     assert [g["path"] for g in rec["gates"] if g["gate"] == "triangles"] == ["driver"]
 
 
+def test_no_build_jobs_without_checkpoints(spark):
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from profile_query import Profiler
+
+    # a lazy checkpoint of an adaptive plan runs its shuffle stages while
+    # the plan is built; these queries lost theirs (COVERAGE.md,
+    # "localCheckpoint sites") and build without running a job
+    prof = Profiler(spark.newSession())
+    assert {q: prof.profile(q, SF_SMOKE)["registry.build_jobs"]
+            for q in ("sketch_kmv_distinct", "ts_seasonal_naive")} \
+        == {"sketch_kmv_distinct": 0, "ts_seasonal_naive": 0}
+
+
 def test_every_sample_starts_with_an_empty_cache(spark):
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
     from profile_query import RUNS, Profiler

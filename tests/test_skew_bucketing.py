@@ -134,11 +134,12 @@ def test_replicate_join_skewed_equals_plain_join(spark, events):
 def test_hot_bucket_salted_join_evaluates_hot_aggregate_once(
     spark, monkeypatch, caplog
 ):
-    # broadcast branch (more than max_inline_hot hot keys): the hot-key
+    # broadcast branch (more than SALT_MAX_INLINE_HOT hot keys): the hot-key
     # aggregate over `a` runs once, for the gating collect, and the
     # broadcast side ships the collected rows — `a` is read once more,
     # as the join side, never again for the aggregate
     monkeypatch.setattr(SK, "SALT_THRESHOLD", 2)
+    monkeypatch.setattr(SK, "SALT_MAX_INLINE_HOT", 1)
     caplog.set_level(logging.INFO, logger=GATE_LOG.name)
     reads = spark.sparkContext.accumulator(0)
 
@@ -152,7 +153,7 @@ def test_hot_bucket_salted_join_evaluates_hot_aggregate_once(
         "id_a", counted("bucket").alias("bucket")
     )
     b = spark.createDataFrame(rows, "id_b long, bucket long")
-    out = SK.hot_bucket_salted_join(a, b, "bucket", max_inline_hot=1)
+    out = SK.hot_bucket_salted_join(a, b, "bucket")
     assert reads.value == 60
     assert out.count() == 5 * 12 * 12
     assert reads.value == 120

@@ -284,6 +284,7 @@ def test_driver_built_plan_inputs_run_no_python_worker(spark, monkeypatch):
     cents = V.kmeans_fit(emb, k=4, iters=1, dim=64)
     q = emb.filter(F.col("vec_id") < 3)
     monkeypatch.setattr(skew, "SALT_THRESHOLD", 1)  # every user is hot
+    monkeypatch.setattr(skew, "SALT_MAX_INLINE_HOT", 0)  # broadcast hot keys
     users = events.select("user_id", F.col("event_id").alias("id_a"))
     outputs = {
         "lag_correlation": TS.lag_correlation(events, "ts", "event_type", "view", "click"),
@@ -295,7 +296,7 @@ def test_driver_built_plan_inputs_run_no_python_worker(spark, monkeypatch):
         "pq_search": V.pq_search(emb, q, books),
         "ivfpq_search": V.ivfpq_search(emb, q, cents, books),
         "salted join, broadcast hot keys": skew.hot_bucket_salted_join(
-            users, users, "user_id", max_inline_hot=0),
+            users, users, "user_id"),
     }
     assert {k: _python_rdd_leaves(df) for k, df in outputs.items()} \
         == {k: [] for k in outputs}

@@ -576,7 +576,7 @@ def test_mmr_exact_rank1_tiebreak_and_k_truncation(spark):
 
 
 def test_hot_bucket_salted_join_broadcast_fallback_unchanged(spark, monkeypatch):
-    # >max_inline_hot hot keys routes through the broadcast-join form —
+    # >SALT_MAX_INLINE_HOT hot keys routes through the broadcast-join form —
     # pin its output against the plain join (r13: the inline-map and
     # empty-hot paths are pinned by the forced-salting tests below)
     import apache_flink_essentials_spark.operators.skew as SK
@@ -589,11 +589,10 @@ def test_hot_bucket_salted_join_broadcast_fallback_unchanged(spark, monkeypatch)
         for r in df.join(right, "bucket").collect()
     }
     monkeypatch.setattr(SK, "SALT_THRESHOLD", 2)
+    monkeypatch.setattr(SK, "SALT_MAX_INLINE_HOT", 1)
     salted = {
         (r.bucket, r.id_a, r.id_b)
-        for r in SK.hot_bucket_salted_join(
-            df, right, "bucket", max_inline_hot=1
-        ).collect()
+        for r in SK.hot_bucket_salted_join(df, right, "bucket").collect()
     }
     assert salted == plain and plain
 
